@@ -1,6 +1,6 @@
 package graft
 
-/** Logging hygiene for the Bench/Verify mains.
+/** Logging hygiene for the Bench/Verify mains and the test JVM.
   *
   * WindowExec logs "No Partition Defined for Window operation!" at WARN
   * once per TASK. The handful of global windows in this library are
@@ -11,7 +11,8 @@ package graft
   * the round-11 driver bench's captured stdout tail and made the
   * partial artifact unreadable (BENCH_r11.json's tail was nothing but
   * this line). Raise that one logger to ERROR in the bench/verify
-  * entrypoints — library code never touches global log config.
+  * entrypoints and the test session — library code never touches
+  * global log config.
   */
 object Log {
   def silenceNoisyWarnings(): Unit = {

@@ -11,24 +11,33 @@ import org.apache.spark.sql.functions._
   * semantics (`data_process.py:66-82`, Polars `strict=False`).
   *
   * Spark-first design notes:
-  *   - The whole parse is ONE narrow projection of 121 codegen'd
-  *     `substring`+`trim` expressions — embarrassingly parallel, no
-  *     shuffle, whole-stage-codegen friendly. At 100 TB this scales
-  *     linearly with input splits.
-  *   - latin-1 is a single-byte charset, so after decoding, char
-  *     positions equal the layout's byte positions (SURVEY §7.4). We
-  *     read through the CSV reader with a non-occurring separator to
-  *     get a correctly decoded single `value` column (the `text`
-  *     source ignores `encoding`).
+  *   - The parse is narrow: no shuffle, embarrassingly parallel, so at
+  *     100 TB it scales linearly with input splits.
+  *   - Fields are sliced from BYTES, not from the decoded string.
+  *     `substring` on a string walks the UTF-8 bytes from the start to
+  *     find a char position, so 121 string slices cost O(width) each
+  *     (~64k char steps per 1060-char record); a binary `substring` is
+  *     an O(1) offset. The line is encoded to latin-1 once, and each
+  *     field is decoded back from its own byte range.
+  *   - The 121-column projection is wider than
+  *     `spark.sql.codegen.maxFields` (100), so it runs as a codegen'd
+  *     projection without whole-stage codegen; per-field cost is what
+  *     counts.
+  *   - latin-1 is a single-byte charset, so a line's char positions
+  *     equal the layout's byte positions (SURVEY §7.4). We read
+  *     through the CSV reader with a non-occurring separator to get a
+  *     correctly decoded single `value` column (the `text` source
+  *     ignores `encoding`).
   *   - Casts use `try_cast` so behavior is identical under ANSI mode
   *     (Spark 4 default) and matches the reference's null-on-bad-input.
   */
 object FixedWidth {
+  private val Latin1 = "ISO-8859-1"
 
   /** Read raw fixed-width latin-1 lines as a single-column `value` frame. */
   def readRaw(spark: SparkSession, path: String): DataFrame =
     spark.read
-      .option("encoding", "ISO-8859-1")
+      .option("encoding", Latin1)
       .option("lineSep", "\n")
       .option("sep", "")      // does not occur in QCEW data
       .option("quote", "")           // disable quoting entirely
@@ -37,15 +46,22 @@ object FixedWidth {
       .csv(path)
 
   /** Slice + trim all 121 fields, then apply the reference's numeric
-    * casts. Input: any frame with a string column `valueCol`.
+    * casts. Input: any frame with a string column `valueCol`. A char
+    * above U+00FF (possible only in a caller-built frame, never from
+    * [[readRaw]]) becomes `?`, one position for one char, so later
+    * fields keep their alignment.
     */
   def parse(raw: DataFrame, valueCol: String = "value"): DataFrame = {
     // CRLF tolerance: a trailing \r (from CRLF files read with \n line
     // separator) would otherwise survive `trim` (which strips spaces
     // only) and corrupt the last field.
-    val v = regexp_replace(col(valueCol), "\r$", "")
-    val sliced = raw.select(Layout.fields.map { case (name, pos, len) =>
-      trim(substring(v, pos, len)).as(name)
+    val line = regexp_replace(regexp_replace(col(valueCol), "\r$", ""), "[^\\x00-\\xFF]", "?")
+    // a separate projection, so the encode runs once per line rather
+    // than once per field (Catalyst does not inline a non-cheap
+    // expression into several consumers)
+    val bytes = raw.select(encode(line, Latin1).as("bytes"))
+    val sliced = bytes.select(Layout.fields.map { case (name, pos, len) =>
+      trim(decode(substring(col("bytes"), pos, len), Latin1)).as(name)
     }: _*)
     cast(sliced)
   }

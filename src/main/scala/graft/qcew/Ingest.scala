@@ -18,8 +18,14 @@ import org.slf4j.LoggerFactory
   *     (10^2..10^6 files — Spark's file listing is parallelized on the
   *     driver + distributed for large trees) and ONE
   *     `partitionBy(year, qtr)` write. The parse is narrow; the only
-  *     wide operation is the optional repartition by partition keys to
-  *     get one-file-per-partition without small-file explosion.
+  *     wide operation is the hash repartition on the partition keys,
+  *     which puts each (year, qtr) in exactly one task, so the lake
+  *     holds one file per partition with no small-file explosion.
+  *   - That repartition names its partition count (the session's
+  *     `spark.sql.shuffle.partitions`). A keys-only repartition lets
+  *     AQE coalesce the small shuffle into ONE partition, and a single
+  *     task then writes every partition file in turn; AQE leaves an
+  *     explicit count alone, so the partitions are written in parallel.
   *   - `partitionOverwriteMode=dynamic` gives per-(year,qtr)
   *     idempotence at the partition level — re-running a quarter
   *     replaces exactly that quarter, the Spark-native equivalent of
@@ -42,37 +48,38 @@ object Ingest {
   /** Bulk path: parse every raw file under `rawGlob` and write one
     * partitioned parquet lake. Scales to arbitrary file counts.
     */
-  def ingestAll(spark: SparkSession, rawGlob: String, outDir: String,
-                filesPerPartition: Int = 1): DataFrame = {
-    val parsed = FixedWidth.parse(FixedWidth.readRaw(spark, rawGlob))
-    parsed
-      // co-locate each output partition's rows; AQE coalesces small ones
-      .repartition(col("year"), col("qtr"))
-      .write.mode(SaveMode.Overwrite)
-      // writer-level option, NOT spark.conf.set: a session-conf mutation
-      // would silently flip overwrite semantics for every later write in
-      // the caller's session
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("year", "qtr")
-      .parquet(outDir)
-    spark.read.parquet(outDir)
-  }
+  def ingestAll(spark: SparkSession, rawGlob: String, outDir: String): DataFrame =
+    writeLake(FixedWidth.parse(FixedWidth.readRaw(spark, rawGlob)), outDir,
+      dynamicOverwrite = true)
 
   /** Small-file compaction: rewrite a partitioned lake so each
-    * (year, qtr) partition holds `filesPerPartition` files. Streaming
-    * appends and incremental ingests accumulate small files that
-    * degrade scan planning (one task per file, footer reads dominate);
-    * periodic compaction is the standard maintenance job. Written to a
-    * FRESH directory, then swapped by the caller — compact-in-place
-    * would corrupt the lake on failure midway.
+    * (year, qtr) partition holds one file. Streaming appends and
+    * incremental ingests accumulate small files that degrade scan
+    * planning (one task per file, footer reads dominate); periodic
+    * compaction is the standard maintenance job. Written to a FRESH
+    * directory, then swapped by the caller — compact-in-place would
+    * corrupt the lake on failure midway. For partitions too big for
+    * one file, cap with `spark.sql.files.maxRecordsPerFile`.
     */
-  def compact(spark: SparkSession, lakeDir: String, outDir: String): DataFrame = {
-    spark.read.parquet(lakeDir)
-      // hash-repartition on the partition keys: each (year, qtr)'s rows
-      // land in one task -> one file per partition. For partitions too
-      // big for one file, cap with .option("maxRecordsPerFile", n).
-      .repartition(col("year"), col("qtr"))
+  def compact(spark: SparkSession, lakeDir: String, outDir: String): DataFrame =
+    writeLake(spark.read.parquet(lakeDir), outDir, dynamicOverwrite = false)
+
+  /** Write `df` as a (year, qtr)-partitioned parquet lake with one file
+    * per partition, and read it back. The hash repartition on the keys
+    * lands each partition's rows in one task; its explicit count keeps
+    * AQE from coalescing the shuffle into a single writing task.
+    * `dynamicOverwrite` replaces only the partitions `df` holds;
+    * otherwise the whole of `outDir` is replaced.
+    */
+  private def writeLake(df: DataFrame, outDir: String, dynamicOverwrite: Boolean): DataFrame = {
+    val spark = df.sparkSession
+    val tasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val writer = df.repartition(tasks, col("year"), col("qtr"))
       .write.mode(SaveMode.Overwrite)
+    // a writer option, NOT spark.conf.set: a session-conf mutation would
+    // silently flip overwrite semantics for every later write in the
+    // caller's session
+    (if (dynamicOverwrite) writer.option("partitionOverwriteMode", "dynamic") else writer)
       .partitionBy("year", "qtr")
       .parquet(outDir)
     spark.read.parquet(outDir)

@@ -23,10 +23,14 @@ import org.apache.spark.util.SerializableConfiguration
   * 1060-char latin-1 lines, 121 contiguous fields) as a first-class
   * Spark source: `spark.read.format("graft-fixedwidth")`.
   *
-  * Why a custom source instead of the csv-reader trick in
-  * [[graft.qcew.FixedWidth.readRaw]] (which stays as the zero-code
-  * path): fixed-width records make TWO things exact that a generic
-  * text source must approximate, and both matter at 100 TB —
+  * How it differs from [[graft.qcew.FixedWidth.readRaw]] +
+  * [[graft.qcew.FixedWidth.parse]], the path `Ingest` uses: that path
+  * reads newline-separated lines, so it tolerates CRLF and ragged
+  * (short or overlong) lines, and it slices each line's latin-1 bytes
+  * by offset. This source assumes every record is exactly
+  * `recordLength` chars plus the separator, and in exchange makes TWO
+  * things exact that a line-oriented source must approximate, both of
+  * which matter at 100 TB —
   *
   *   1. '''Splittable without newline scanning.''' Record `i` starts
   *      at byte `i * stride` (stride = recordLength + separator, in a
@@ -39,9 +43,10 @@ import org.apache.spark.util.SerializableConfiguration
   *      `SupportsPushDownRequiredColumns`: only the requested fields'
   *      byte ranges are charset-decoded and trimmed — a 3-column
   *      projection of a 121-field record decodes ~3% of each record's
-  *      bytes instead of materializing 121 strings and letting
-  *      Catalyst drop 118. (Parity check: ORC/Parquet get this from
-  *      their column layout; raw text normally cannot.)
+  *      bytes. The line path prunes the unused field slices too, but
+  *      still decodes, CR-strips and re-encodes every whole line.
+  *      (Parity check: ORC/Parquet get this from their column layout;
+  *      raw text normally cannot.)
   *
   * The scan also implements `SupportsReportStatistics` — row count is
   * exact from file sizes (`bytes / stride`), and `sizeInBytes` is

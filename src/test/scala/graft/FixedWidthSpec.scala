@@ -1,7 +1,9 @@
 package graft
 
 import graft.qcew.{FixedWidth, Layout, NaicsAgg}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
@@ -48,6 +50,67 @@ class FixedWidthSpec extends SparkSpec {
     assert(r.getString(0) == "PANADERÍA LA ÑAPA")
     assert(r.getString(1) == "722511")
     assert(r.getLong(2) == 777L)
+  }
+
+  /** The reference slice of one line: drop a trailing CR, cut every
+    * field by char position (short lines give short or empty fields),
+    * strip spaces only, as Spark's `trim` does.
+    */
+  private def expectedFields(line: String): Seq[String] = {
+    val s = line.stripSuffix("\r")
+    Layout.fields.map { case (_, pos, len) =>
+      val f = s.substring(math.min(pos - 1, s.length), math.min(pos - 1 + len, s.length))
+      f.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+    }
+  }
+
+  private def expectedFrame(lines: Seq[String]) =
+    FixedWidth.cast(spark.createDataFrame(
+      spark.sparkContext.parallelize(lines.map(l => Row.fromSeq(expectedFields(l))), 1),
+      StructType(Layout.fields.map { case (n, _, _) => StructField(n, StringType) })))
+
+  test("parse matches a per-field String.substring of dirty latin-1 lines") {
+    val base = QcewFixtures.record(2023, 2, "722511", "3", "4", "5", "777",
+      name = "PANADERÍA LA ÑAPA")
+    val contact = base.updated(849, 'Ñ').updated(919, 'é').updated(1059, 'ÿ')
+    val lines = Seq(
+      contact,                                   // high bytes before and after pos 850
+      base + "\r",                               // CRLF line
+      base.take(595),                            // short: ends mid naics_code
+      base + "EXTRA TAIL ß",                     // overlong
+      " " * Layout.recordWidth)                  // only spaces
+    val tmp = Files.createTempDirectory("fw-parity")
+    Files.write(tmp.resolve("a.txt"),
+      lines.mkString("", "\n", "\n").getBytes(StandardCharsets.ISO_8859_1))
+    val want = expectedFrame(lines).collect().toSeq
+    assert(want.head.getAs[String]("qcew_contact") == "Ñ")
+    val viaFile = FixedWidth.parse(FixedWidth.readRaw(spark, tmp.toString)).collect().toSeq
+    val viaFrame = FixedWidth.parse(lines.toDF("value")).collect().toSeq
+    // readRaw's CSV reader skips the blank (last) line; a caller's frame keeps it
+    for ((how, got, exp) <- Seq(("readRaw", viaFile, want.init), ("frame", viaFrame, want))) {
+      assert(got.size == exp.size, how)
+      got.zip(exp).zipWithIndex.foreach { case ((g, w), i) =>
+        Layout.fields.indices.foreach { j =>
+          assert(g.get(j) == w.get(j), s"$how line $i field ${Layout.fields(j)._1}")
+        }
+      }
+    }
+  }
+
+  test("chars above U+00FF become '?' one for one; later fields stay aligned") {
+    val lines = Seq(
+      QcewFixtures.record(2023, 1, "541511", "1", "2", "3", "900", name = "ΩMEGA Ω LTD"),
+      // a supplementary char (two UTF-16 units) is one position, as
+      // for any other char; the fixture pads by UTF-16 unit, so swap it in
+      QcewFixtures.record(2024, 3, "111419", "4", "5", "6", "800", name = "CAFÉ # BAR")
+        .replace("#", "😀"))
+    val got = FixedWidth.parse(lines.toDF("value"))
+      .select("leg_corp_name", "naics_code", "total_wages", "qcew_contact").collect()
+    assert(got(0).getString(0) == "?MEGA ? LTD")
+    assert(got(0).getString(1) == "541511" && got(0).getLong(2) == 900L)
+    assert(got(1).getString(0) == "CAFÉ ? BAR")
+    assert(got(1).getString(1) == "111419" && got(1).getLong(2) == 800L)
+    assert(got.forall(_.getString(3) == ""))
   }
 
   test("flagship aggregate: suppression keeps >4 groups, drops <=4, blank naics filtered") {

@@ -1,9 +1,13 @@
 package graft
 
 import graft.qcew._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class QcewModulesSpec extends SparkSpec {
   import spark.implicits._
@@ -47,6 +51,39 @@ class QcewModulesSpec extends SparkSpec {
     // partition pruning visible in the physical plan
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") || pruned.inputFiles.length == 1)
+  }
+
+  test("ingestAll: one file per (year, qtr) directory, written by more than one task") {
+    val raw = Files.createTempDirectory("rawpar")
+    val out = Files.createTempDirectory("lakepar")
+    val keys = Seq((2021, 1), (2021, 2), (2022, 3), (2023, 4))
+    keys.zipWithIndex.foreach { case ((y, q), i) =>
+      // each key spread over two raw files, so no input file maps to one key
+      val (y2, q2) = keys((i + 1) % keys.size)
+      writeLatin1(raw, s"r$i.txt", Seq(
+        QcewFixtures.record(y, q, "541511", "1", "1", "1", "10"),
+        QcewFixtures.record(y2, q2, "111419", "2", "2", "2", "20")))
+    }
+    val writers = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writers.add(e.taskInfo.taskId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(Ingest.ingestAll(spark, raw.toString + "/*.txt", out.toString).count() == 8)
+      val dirs = keys.map { case (y, q) => out.resolve(s"year=$y/qtr=$q") }
+      dirs.foreach { d =>
+        val files = Files.list(d).iterator().asScala.map(_.getFileName.toString)
+          .filter(_.endsWith(".parquet")).toSeq
+        assert(files.size == 1, s"$d holds ${files.mkString(", ")}")
+      }
+      // listener events arrive asynchronously after the job ends
+      eventually(timeout(Span(10, Seconds))) {
+        assert(writers.size > 1, "the partitioned write ran as a single task")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("lake: dim-filter join triggers DYNAMIC partition pruning on the fact scan") {

@@ -17,6 +17,7 @@ object SparkSpec {
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    Log.silenceNoisyWarnings()
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
