@@ -1,745 +1,199 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: one JSON line the driver archives as BENCH_r{N}.json.
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import java.util.concurrent.{Executors, TimeUnit}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+/** Benchmark main: times every [[SparkEntry.queries]] entry and prints
+  * one JSON line, the last line of the run's output.
   *
-  * Hygiene (judged in round 1): queries run in sorted name order so no
-  * query absorbs another's residual JIT cost; each query gets one
-  * untimed cold run (codegen + JIT + parquet footer cache) and
-  * `runs` timed warm runs, reporting the minimum; failures surface in
-  * an "errors" map instead of being swallowed into a fake time; the
-  * session cache is cleared between queries so a query that persists
-  * intermediates (q_lsh_pairs) neither leaks memory nor pre-warms a
-  * later query.
+  * Queries run in sorted name order. Each gets one untimed cold run
+  * (codegen, JIT, parquet footer cache) and `SPARK_GRAFT_BENCH_RUNS`
+  * (default 3) timed warm runs, each after `clearCache()`, so a query
+  * that persists intermediates neither leaks memory nor pre-warms a
+  * later one. A row reports the minimum and the median of its warm
+  * runs; "value" is the sum of the minima. Every run writes to the
+  * `noop` sink: `count()` would let Catalyst prune the computed
+  * columns, so the expressions being timed would never run.
   *
-  * Self-adjudication (round 11): every row carries the 1-min loadavg
-  * stamped when its reps finished ("loadavg") plus the EXTERNAL load
-  * estimate net of the bench's own CPU ("ext_load" — raw loadavg
-  * would flag every row, the 32 worker threads alone push it to ~4),
-  * rows whose external estimate exceeds the guard threshold are
-  * re-timed once the host quiets ("requeued"),
-  * and a non-vacuity gate archives every query that returned 0 rows
-  * at the bench sf without an allowlist entry ("vacuous") — an empty
-  * answer computed at full cost is a defect the sf0.01 oracle cannot
-  * see, so the bench is where it must fail.
+  * The cold run counts its own output through `observe`, so the "rows"
+  * map costs no extra execution. A query with 0 rows at the bench scale
+  * is listed under "vacuous": an empty answer computed at full cost is a
+  * defect the sf0.01 oracle cannot see. Any failure, including a run the
+  * watchdog cancels after [[QueryCapSec]], lands in "errors".
   *
-  * Wall-clock budget (round 12, verdict item 1): BENCH_r11.json was an
-  * rc=124 timeout with no parsed result — 346 queries x (cold + 3-5
-  * warm + rows-count) plus two 600 s load waits no longer fit the
-  * driver's cap on a slow host epoch. The bench now tracks elapsed
-  * wall against SPARK_GRAFT_BENCH_WALL_BUDGET (sec, default 2100 —
-  * the round-10 run that DID complete took ~1940 s of sbt wall, so
-  * the driver cap is close above that) and degrades per query based
-  * on budget pressure = remaining / (avg query wall x queries left):
-  *   pressure >= 1.4  FULL       cold + runs warm + noisy escalation + rows
-  *   1.1 <= p < 1.4   NO_ESC     full minus the noisy-rep escalation
-  *   0.85 <= p < 1.1  RUNS2      cold + 2 warm, rows reused from the
-  *                               prior BENCH_FULL.json (by name)
-  *   0.5 <= p < 0.85  FLOOR      one timed run, no cold, rows reused
-  *   p < 0.5          REUSED     nothing runs — the prior archive's
-  *                               time is emitted, stamped per row
-  * so every query always lands in the archive (the JSON line is ALWAYS
-  * emitted, even on a fatal error) and degradation is recorded per row
-  * ("mode") plus in aggregate ("degraded"). Load and requeue waits are
-  * clamped to the remaining budget, and a per-query watchdog cancels
-  * the job group after min(SPARK_GRAFT_BENCH_QUERY_CAP, remaining) so
-  * one hung plan cannot eat the round's artifact.
-  *
-  * Reuse-not-error (round 13, verdict item 2): BENCH_r12.json carried
-  * 3 watchdog-cancelled rows as errors although all three were healthy
-  * in the quiet archive — a budget/watchdog kill is a HOST statement,
-  * not an engine one, so both the sub-floor budget rung and a watchdog
-  * cancellation now fall back to the prior BENCH_FULL.json time (row
-  * mode "reused", names in "times_reused"); only queries with no prior
-  * time, or genuine (non-cancellation) failures, land in "errors".
-  * Reused rows carry no fresh load stamp and are EXCLUDED from
-  * quiet_total. The top-level "dominant_mode" stamp names the modal
-  * per-row mode so a floor/reused quiet_total is never cross-compared
-  * with a warm-median one.
-  *
-  * Quiet-total (round 12, verdict item 2): alongside "value" (sum of
-  * all warm minima) the archive emits "quiet_total" + "quiet_n" — the
-  * sum restricted to rows whose final ext_load <= max_load — so the
-  * headline number separates the engine from the neighbors, and the
-  * requeue pass is sized by the flagged count and remaining budget
-  * rather than a fixed 20.
-  *
-  * Round 14 (verdict item 2): (a) "quiet" additionally requires the
-  * row's warm max/min spread <= spread_max (default 2.0) — the three
-  * round-13 noise rows the judge refuted by hand all carried
-  * ext_load <= 0.5 with spread 2.6–14x, i.e. hypervisor bursts the
-  * /proc-delta load estimate cannot see; spread-rejected rows are
-  * requeued with the load-flagged ones and named in "spread_flagged".
-  * (b) Time/row reuse is keyed by a per-query definition fingerprint
-  * ("fp": hash of the canonicalized analyzed plan), not the bare
-  * name — a redefined query re-measures instead of carrying the prior
-  * definition's numbers. (c) withCap remaps ONLY genuine
-  * job-cancellation exceptions to WatchdogCancelled (original
-  * attached as cause); any other failure past the cap stays an error.
+  * Environment: SPARK_GRAFT_SF_DIR (input tables), SPARK_GRAFT_CPUS
+  * (read by [[LocalSession]]), SPARK_GRAFT_BENCH_RUNS, and
+  * SPARK_GRAFT_BENCH_ONLY, a comma-separated subset whose detail goes to
+  * BENCH_SUBSET.json instead of BENCH_FULL.json.
   */
 object Bench {
-  /** Thrown when a timed body died because OUR watchdog cancelled its
-    * job group — a host/budget statement, not an engine failure, so
-    * the row falls back to the prior archive's time instead of an
-    * error (round-13 verdict item 2). Carries the original exception
-    * as its cause (round-14, ADVICE: a remap that DROPS the original
-    * exception could misfile a genuine post-cap engine failure — an
-    * OOM at 130 s under a 120 s cap — as host pressure; withCap now
-    * also only remaps exceptions that are actually job-cancellations,
-    * so anything else stays an error even if the watchdog had fired).
-    */
-  final class WatchdogCancelled(msg: String, cause: Throwable)
-      extends RuntimeException(msg, cause)
+  type Query = (SparkSession, String) => DataFrame
 
-  /** True when the throwable chain is Spark's reaction to a job-group
-    * cancellation (the only failure OUR watchdog can cause). Spark
-    * surfaces cancelJobGroup as a SparkException whose message (or a
-    * cause's) contains "cancelled"/"cancelled job group"; a genuine
-    * engine failure (OOM, codegen error, analysis bug) does not.
-    */
-  private def isCancellation(t: Throwable): Boolean = {
-    var cur = t
-    var depth = 0
-    while (cur != null && depth < 12) {
-      val m = Option(cur.getMessage).getOrElse("").toLowerCase(java.util.Locale.ROOT)
-      if (m.contains("cancel")) return true
-      cur = cur.getCause
-      depth += 1
-    }
-    false
+  /** Seconds one run may take before the watchdog cancels its job group. */
+  val QueryCapSec = 150L
+
+  /** Longest stdout line: it must survive a 2000-char tail capture. */
+  val LineBudget = 1500
+
+  /** Error entries the stdout line carries; the file carries all of them. */
+  private val LineErrors = 5
+
+  /** One query's measurement; `rows` is the cold run's observed output. */
+  final case class Row(cold: Double, warm: Seq[Double], rows: Long) {
+    def best: Double = warm.min
+    def median: Double = warm.sorted.apply(warm.size / 2)
   }
 
+  /** Per query, in run order: its measurement, or why it failed. */
+  type Results = collection.Map[String, Either[String, Row]]
+
   def main(args: Array[String]): Unit = {
-    val benchT0 = System.nanoTime()
-    def elapsedSec: Double = (System.nanoTime() - benchT0) / 1e9
+    val t0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // default 2000 s: the round-10 run that completed took ~1940 s of
-    // sbt wall, so the driver cap sits close above that — and the cap
-    // covers sbt startup/compile too, which this JVM cannot see; 2000
-    // leaves that overhead ~400 s of headroom under a 2400 s cap while
-    // the degradation ladder absorbs the difference
-    val wallBudget = sys.env.getOrElse("SPARK_GRAFT_BENCH_WALL_BUDGET", "2000").toDouble
-    def remainingSec: Double = wallBudget - elapsedSec
-    // hard per-query cap: a single hung/pathological plan must not eat
-    // the whole budget; the watchdog cancels the query's job group and
-    // the query lands in "errors" instead of stalling the artifact
-    val queryCap = sys.env.getOrElse("SPARK_GRAFT_BENCH_QUERY_CAP", "150").toDouble
-    // Quiet-host guard (round-8 verdict: the archived bench ran at
-    // loadavg 4.7→10.8 and misstated the engine by ~50%). Wait for the
-    // 1-min load to drop below SPARK_GRAFT_MAX_LOAD (default 1.5)
-    // before timing anything, up to SPARK_GRAFT_LOAD_WAIT_SEC — now
-    // additionally clamped to 15% of the wall budget (round-11 lesson:
-    // two 600 s waits helped eat the driver cap). If the host never
-    // quiets, we still RUN and archive — a bench stamped
-    // "load_guard":"exceeded" beats no artifact.
-    val maxLoad = sys.env.getOrElse("SPARK_GRAFT_MAX_LOAD", "1.5").toDouble
-    val loadWaitSec = math.min(
-      sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT_SEC", "600").toDouble,
-      wallBudget * 0.15)
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val waitT0 = System.nanoTime()
-    while (osBean.getSystemLoadAverage > maxLoad &&
-           (System.nanoTime() - waitT0) / 1e9 < loadWaitSec) {
-      System.err.println(
-        f"[bench] host loaded (loadavg ${osBean.getSystemLoadAverage}%.2f > $maxLoad%.2f), waiting...")
-      Thread.sleep(10000)
-    }
-    val loadWaited = (System.nanoTime() - waitT0) / 1e9
-    val loadStart = osBean.getSystemLoadAverage
-    // getSystemLoadAverage returns -1.0 where load is unmeasurable;
-    // that must not masquerade as "quiet" (round-9 ADVICE) — stamp it
-    // as its own state so a reader knows the guard never engaged
-    val loadGuard =
-      if (loadStart < 0) "unavailable"
-      else if (loadStart <= maxLoad) "quiet" else "exceeded"
-    // Host-speed calibration anchor (round 11): this VM's per-core
-    // throughput moves in EPOCHS (hypervisor tenancy) that loadavg and
-    // steal accounting never see — a round-11 replay of the round-10
-    // jar measured the identical untouched queries ~2x the round-10
-    // archive's times on a loadavg-quiet host, which would otherwise
-    // read as a universal regression. A fixed pure-JVM integer loop
-    // timed at run start and end gives every archive a common divisor:
-    // compare query_sec / cal_1t_sec ACROSS rounds (and distrust a run
-    // whose end calibration drifted from its start). The loop is
-    // xorshift mixing — deterministic, allocation-free, DCE-proof.
-    def calSec(threads: Int): Double = {
-      def best(xs: Seq[Double]): Double = xs.min
-      best((1 to 3).map { _ =>
-        val sink = new java.util.concurrent.atomic.AtomicLong
-        val t0 = System.nanoTime()
-        val th = (1 to threads).map { i =>
-          val t = new Thread(() => {
-            var x = 0x9E3779B97F4A7C15L + i
-            var n = 0L
-            while (n < 200000000L) {
-              x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-              n += 1
-            }
-            sink.addAndGet(x) // publish so the loop cannot be elided
-          })
-          t.start(); t
-        }
-        th.foreach(_.join())
-        (System.nanoTime() - t0) / 1e9
-      })
-    }
-    val cal1Start = calSec(1)
-    val calNStart = calSec(cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The WindowExec "No Partition Defined" WARN is emitted once per
-    // task over the (documented, grid-sized) global-window frames; at
-    // 346 queries x 32 tasks it flooded the driver's 2000-char stdout
-    // tail in round 11 and made even the partial artifact unreadable.
-    // The global windows are audited individually (scaladoc contracts,
-    // PlanAuditSpec); the per-task warning carries no new information.
-    Log.silenceNoisyWarnings()
-    // session-level warmup (JVM, codegen pipeline, parquet reader)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-
-    // single daemon thread arming one cancellation per timed section;
-    // a body that dies AFTER the watchdog fired rethrows as
-    // WatchdogCancelled so timeQuery can tell a host-kill (reusable)
-    // from a genuine engine failure (an error)
-    val watchdog = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
-      (r: Runnable) => { val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t })
-    def withCap[A](group: String, capSec: Double)(body: => A): A = {
-      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = true)
-      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val task = watchdog.schedule(new Runnable {
-        def run(): Unit = {
-          System.err.println(f"[bench] watchdog: cancelling $group after $capSec%.0f s")
-          fired.set(true)
-          spark.sparkContext.cancelJobGroup(group)
-        }
-      }, math.max(1L, (capSec * 1000).toLong), java.util.concurrent.TimeUnit.MILLISECONDS)
-      try body
-      catch {
-        // remap ONLY real job-cancellations (with the original attached
-        // as cause); a genuine failure that happens to surface after
-        // the cap fired — an OOM at 130 s under a 120 s cap — must stay
-        // an error, not be misfiled as host pressure (round-14 ADVICE)
-        case e: Throwable if fired.get && Bench.isCancellation(e) =>
-          System.err.println(s"[bench] watchdog-cancelled $group: " +
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-          throw new Bench.WatchdogCancelled(
-            f"$group watchdog-cancelled after $capSec%.0f s", e)
-      }
-      finally { task.cancel(false); spark.sparkContext.clearJobGroup() }
-    }
-
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val cap = math.max(30.0, math.min(queryCap, remainingSec))
-      withCap(s"bench-$name", cap) {
-        val t0 = System.nanoTime()
-        // noop sink, NOT count(): count() lets Catalyst prune every
-        // computed output column, so the expressions being benchmarked
-        // would never run; noop consumes full rows with no driver collect
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-    }
-    // warm aggregation = MIN of runs, not median: this host is a VM
-    // with bursty external CPU contention (identical queries measured
-    // 0.9 s and 12 s minutes apart); the minimum is the standard
-    // least-noise estimator for a deterministic computation, and the
-    // loadavg fields below let a reader spot contaminated runs.
-    def best(xs: Seq[Double]): Double = xs.min
-
+    require(runs >= 1, "SPARK_GRAFT_BENCH_RUNS must be at least 1")
     // optional comma-separated filter for local iteration; the driver
     // leaves it unset so the archived bench always covers every query
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').map(_.trim).toSet)
-    // total reps for a query whose first `runs` warm reps spread > 1.3×
-    val noisyRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_NOISY_RUNS", "5").toInt
-    // reverse: diagnostic for order-dependent slowdowns (cumulative JVM
-    // state vs per-query cost) — driver leaves it unset
-    val reverse = sys.env.get("SPARK_GRAFT_BENCH_REVERSE").contains("1")
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    val names = if (reverse) names0.reverse else names0
-    val warm = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val median = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val reps = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val cold = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // max/min ratio of the warm runs: a deterministic computation on a
-    // quiet host repeats within ~1.2x, so spread > 3x marks the row as
-    // contention-contaminated (this VM has measured 0.9 s vs 12 s for
-    // identical queries) — a reader can discard such rows mechanically
-    // instead of mistaking burst noise for a plan regression
-    val spread = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Record each query's OUTPUT row count (one extra untimed count()
-    // run). The scale sweep needs this to adjudicate superlinear time
-    // ratios — a radius join or a replica-duplicated corpus grows its
-    // OUTPUT quadratically, and time/output is the honest per-row
-    // cost; without the counts that claim is unfalsifiable (the
-    // round-7 verdict's exact complaint). ON by default since round 9
-    // (round-8 verdict item 4: every archived bench carries the rows
-    // map, not just the scale sweep); SPARK_GRAFT_BENCH_ROWS=0 opts
-    // out for quick local iteration. Under budget pressure the count
-    // pass is the first thing to go: the prior BENCH_FULL.json's rows
-    // map is reused BY NAME — no unchanged-definition check, so a
-    // query redefined this round carries the prior round's count
-    // ("rows_reused" names them — a reader can tell measured from
-    // carried-over, and discounts reused rows accordingly).
-    val countRows = !sys.env.get("SPARK_GRAFT_BENCH_ROWS").contains("0")
-    val rows = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    val rowsReused = scala.collection.mutable.ArrayBuffer.empty[String]
-    // prior archive's rows + warm-time maps (regex-parsed — the format
-    // is ours). priorWarm backs the reuse-not-error ladder rung: a
-    // budget- or watchdog-cancelled query emits this time (stamped
-    // "reused") instead of an error.
-    val priorArchive: String = try {
-      val p = java.nio.file.Paths.get("BENCH_FULL.json")
-      if (java.nio.file.Files.exists(p)) java.nio.file.Files.readString(p)
-      else ""
-    } catch { case _: Throwable => "" }
-    val priorRows: Map[String, Long] = try {
-      val m = """"rows":\{([^}]*)\}""".r.findFirstMatchIn(priorArchive)
-        .map(_.group(1)).getOrElse("")
-      """"([^"]+)":(\d+)""".r.findAllMatchIn(m)
-        .map(g => g.group(1) -> g.group(2).toLong).toMap
-    } catch { case _: Throwable => Map.empty }
-    val priorWarm: Map[String, Double] = try {
-      val m = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(priorArchive)
-        .map(_.group(1)).getOrElse("")
-      """"([^"]+)":([0-9.]+)""".r.findAllMatchIn(m)
-        .map(g => g.group(1) -> g.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
-    // Fingerprint-keyed reuse (round-14 verdict item 2b; round-13
-    // ADVICE): name-only reuse could stamp a redefined query with the
-    // PRIOR definition's time/row count (round 13 was safe only
-    // because the archive postdated every query change). Each archive
-    // row now carries "fp" — a hash of the query's canonicalized
-    // analyzed plan (exprIds normalized, so it is stable across JVMs
-    // for an unchanged definition and moves on any redefinition that
-    // alters the plan). Reusing a time OR a row count requires the
-    // current fp to equal the archived one; on mismatch the budget
-    // rung degrades to FLOOR (one fresh measurement) and a
-    // watchdog-cancelled row stays an error. An archive with no fp map
-    // (pre-round-14) refuses all reuse the same way — one transition
-    // round of fresh floors beats silently trusting stale rows.
-    val priorFp: Map[String, String] = try {
-      val m = """"fp":\{([^}]*)\}""".r.findFirstMatchIn(priorArchive)
-        .map(_.group(1)).getOrElse("")
-      """"([^"]+)":"([0-9a-f]+)"""".r.findAllMatchIn(m)
-        .map(g => g.group(1) -> g.group(2)).toMap
-    } catch { case _: Throwable => Map.empty }
-    val fps = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def fingerprint(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): String =
-      fps.getOrElseUpdate(name, try {
-        val plan = fn(spark, sfDir).queryExecution.analyzed.canonicalized.toString
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(plan.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
-      } catch { case _: Throwable => "" })
-    def fpMatches(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean = {
-      val f = fingerprint(name, fn)
-      val ok = f.nonEmpty && priorFp.get(name).contains(f)
-      if (!ok && priorWarm.contains(name))
-        System.err.println(s"[bench] $name: definition fingerprint " +
-          s"mismatch (now '$f', archive '${priorFp.getOrElse(name, "<none>")}') — " +
-          "refusing reuse, will measure fresh")
-      ok
-    }
-    // per-query load stamped when the query's reps FINISH (round-10
-    // verdict item 3: the start-of-run guard can't see a mid-run
-    // burst, so two archived rows cost a judge re-bench; with a stamp
-    // per row the archive is self-adjudicating). The raw 1-min loadavg
-    // alone would flag EVERY row — the bench's own 32 worker threads
-    // drive it to ~4 on a quiet host — so the adjudication stamp is
-    // the EXTERNAL load estimate: loadavg minus the average cores this
-    // JVM itself burned over the query's reps (process CPU time /
-    // wall). Approximate (loadavg is a 1-min EWMA, the subtraction is
-    // this query's usage, not the EWMA of ours), but the quantity
-    // being detected — this VM's external bursts — measures 5-10
-    // cores, far above the ±1 noise of the approximation.
-    val qload = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val qext = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val qmode = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def processCpuNanos: Long = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
-    // loadavg-matched self-load estimator (round 12): the kernel's
-    // 1-min loadavg is an EWMA with decay exp(−dt/60); subtracting
-    // only THIS query's average cores (the round-11 form) misses the
-    // residual our own EARLIER queries left in the EWMA, so a fully
-    // quiet host still flagged 80% of a full-surface run's rows. A
-    // daemon thread folds sampled process CPU through the same EWMA
-    // formula, and ext_load = loadavg − ownEwma compares like with
-    // like. ownCores (per-query average) stays as the lower bound:
-    // right after a heavy query starts the EWMA lags our true load.
-    val ownEwmaBits = new java.util.concurrent.atomic.AtomicLong(
-      java.lang.Double.doubleToLongBits(0.0))
-    def ownEwma: Double = java.lang.Double.longBitsToDouble(ownEwmaBits.get)
-    locally {
-      val t = new Thread(() => {
-        var last = processCpuNanos
-        var lastT = System.nanoTime()
-        while (true) {
-          Thread.sleep(5000)
-          val c = processCpuNanos
-          val now = System.nanoTime()
-          if (c >= 0 && last >= 0) {
-            val cores = (c - last).toDouble / math.max(1L, now - lastT)
-            val a = math.exp(-((now - lastT) / 1e9) / 60.0)
-            val prev = java.lang.Double.longBitsToDouble(ownEwmaBits.get)
-            ownEwmaBits.set(java.lang.Double.doubleToLongBits(
-              prev * a + cores * (1 - a)))
-          }
-          last = c
-          lastT = now
-        }
-      }, "bench-ownload-ewma")
-      t.setDaemon(true)
-      t.start()
-    }
-    // budget pressure: remaining budget over projected remaining work,
-    // from the average wall cost of RECENTLY completed queries — a
-    // sliding window of the last 32, not the all-time mean (round 14:
-    // the first few queries pay one-off JVM/JIT/codegen warmup at
-    // 3-10× steady state; an all-time mean anchored on them projected
-    // a 3500 s budget as insufficient six minutes into a run whose
-    // true remaining cost was ~25 min, and the whole archive degraded
-    // to floor/reused for nothing). Until 3 queries have completed the
-    // estimate is too thin — run FULL.
-    val recentWalls = scala.collection.mutable.Queue.empty[Double]
-    var doneN = 0
-    def mode(queriesLeft: Int): String = {
-      if (doneN < 3) "full"
-      else {
-        val avg = recentWalls.sum / recentWalls.size
-        val p = remainingSec / math.max(1e-9, avg * queriesLeft)
-        if (p >= 1.4) "full"
-        else if (p >= 1.1) "no_esc"
-        else if (p >= 0.85) "runs2"
-        else if (p >= 0.5) "floor"
-        // last rung: don't run at all — reuse the prior archive's time
-        // (timeQuery falls back to floor when no prior time exists)
-        else "reused"
-      }
-    }
-    val timesReused = scala.collection.mutable.ArrayBuffer.empty[String]
-    // reuse-not-error: stamp the prior archive's time for this row —
-    // a budget/watchdog kill is host pressure, not engine signal. No
-    // fresh load stamp (the time is the PRIOR round's measurement), so
-    // the row never enters quiet_total; partial fresh measurements
-    // from an interrupted attempt are dropped for consistency.
-    def reuseRow(name: String, why: String): Unit = {
-      warm(name) = priorWarm(name)
-      cold.remove(name); median.remove(name); reps.remove(name)
-      spread.remove(name); qload.remove(name); qext.remove(name)
-      qmode(name) = "reused"
-      timesReused += name
-      if (countRows && !rows.contains(name) && priorRows.contains(name)) {
-        rows(name) = priorRows(name)
-        rowsReused += name
-      }
-      System.err.println(s"[bench] $name: reusing prior archive time " +
-        f"${priorWarm(name)}%.3f s ($why)")
-    }
-    def timeQuery(name: String, m0: String): Unit = {
-      val fn = SparkEntry.queries(name)
-      // fingerprint EVERY row up front (analysis only, no execution)
-      // so the archive's fp map covers fresh and reused rows alike —
-      // next round's reuse decisions need it
-      fingerprint(name, fn)
-      val wall0 = System.nanoTime()
-      val cpu0 = processCpuNanos
-      // reuse costs ~0 wall, so it must not dilute the running average
-      // that the pressure estimate divides by — return without
-      // touching doneWall/doneN
-      if (m0 == "reused" && priorWarm.contains(name) && fpMatches(name, fn)) {
-        reuseRow(name, "budget rung")
-        return
-      }
-      val m = if (m0 == "reused") "floor" else m0
-      qmode(name) = m
-      try {
-        val nWarm = m match {
-          case "runs2" => math.min(2, runs)
-          case "floor" => 1
-          case _ => runs
-        }
-        // FLOOR skips the untimed cold run: its single timed rep IS the
-        // cold run (stamped by mode so a reader discounts the row)
-        if (m != "floor") cold(name) = timeOnce(name, fn)
-        var times = (1 to nWarm).map { _ =>
-          spark.catalog.clearCache()
-          timeOnce(name, fn)
-        }
-        if (m == "floor") cold(name) = times.head
-        // regression adjudication (round-9 verdict item 3): a query
-        // whose warm reps spread past 1.3× is indistinguishable from
-        // scheduler noise at min-of-3, so escalate it to `noisyRuns`
-        // total reps and archive the MEDIAN alongside the min — a real
-        // 1.5× regression moves the median; a one-off burst does not
-        if (m == "full" && times.size > 1 && times.min > 0
-            && times.max / times.min > 1.3 && noisyRuns > times.size) {
-          times = times ++ (times.size until noisyRuns).map { _ =>
-            spark.catalog.clearCache()
-            timeOnce(name, fn)
-          }
-        }
-        warm(name) = best(times)
-        // median TRIMMED of the single slowest rep once escalated: a
-        // burst in the first window otherwise biases the median of 5,
-        // while a real regression moves every rep and survives the trim
-        val trimmed =
-          if (times.size > runs) times.sorted.dropRight(1) else times.sorted
-        median(name) = trimmed(trimmed.size / 2)
-        reps(name) = times.size
-        spread(name) = if (times.min > 0) times.max / times.min else 1.0
-        val load = osBean.getSystemLoadAverage
-        val cpu1 = processCpuNanos
-        val ownCores =
-          if (cpu0 < 0 || cpu1 < 0) 0.0
-          else (cpu1 - cpu0).toDouble / math.max(1L, System.nanoTime() - wall0)
-        qload(name) = load
-        // subtract the LARGER of the EWMA-tracked self-load and this
-        // query's own average cores — see the ownEwma comment above
-        qext(name) =
-          if (load < 0) load
-          else math.max(0.0, load - math.max(ownCores, ownEwma))
-        if (countRows && !rows.contains(name)) {
-          if (m == "full" || m == "no_esc" || !priorRows.contains(name)
-              || !fpMatches(name, fn)) {
-            spark.catalog.clearCache()
-            // a watchdog kill HERE must not discard the fresh warm
-            // time already measured above — fall back to the prior
-            // count (or swallow when there is none) instead of letting
-            // the cancellation escape to the outer catch
-            try {
-              rows(name) = withCap(s"rows-$name", math.max(30.0, math.min(queryCap, remainingSec))) {
-                fn(spark, sfDir).count()
-              }
-            } catch {
-              case _: Bench.WatchdogCancelled
-                  if priorRows.contains(name) && fpMatches(name, fn) =>
-                rows(name) = priorRows(name)
-                rowsReused += name
-              case _: Bench.WatchdogCancelled => ()
-            }
-          } else {
-            rows(name) = priorRows(name)
-            rowsReused += name
-          }
-        }
-      } catch {
-        // a watchdog kill with a prior time on file AND an unchanged
-        // definition fingerprint is host pressure — reuse; a kill with
-        // NO prior time (a brand-new query) or a changed definition
-        // still errors, and any non-cancellation failure stays an
-        // error (a genuine engine bug must never hide behind reuse)
-        case e: Bench.WatchdogCancelled
-            if priorWarm.contains(name) && fpMatches(name, fn) =>
-          reuseRow(name, Option(e.getMessage).getOrElse("watchdog"))
-        case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-      }
-      spark.catalog.clearCache()
-      recentWalls.enqueue((System.nanoTime() - wall0) / 1e9)
-      if (recentWalls.size > 32) recentWalls.dequeue()
-      doneN += 1
-    }
-    // the JSON line must be emitted even if the loop itself dies (a
-    // driver OOM, a source gone missing): per-query failures land in
-    // "errors" via timeQuery, anything that escapes lands under
-    // "__fatal__" and the partial archive still parses
-    try {
-      names.zipWithIndex.foreach { case (n, i) =>
-        timeQuery(n, mode(names.size - i))
-      }
-    } catch {
-      case e: Throwable =>
-        errors("__fatal__") = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-    }
-    // re-run load-contaminated rows once the host quiets (round-10
-    // verdict item 3's optional half): a row stamped above the guard
-    // threshold is machine noise, not engine signal — replacing it
-    // with a quiet measurement makes the archive regression-adjudicable
-    // without a judge re-bench. Sized by the flagged count (round-12
-    // verdict item 2: 256 rows were flagged but only 20 requeued) and
-    // bounded by the remaining wall budget — worst-stamped first, stop
-    // when the budget reserve is reached, so a permanently-loaded host
-    // degrades to the stamped-only archive instead of looping.
-    // Warm-spread gate (round-14 verdict item 2a): the round-13
-    // archive carried three rows the judge had to refute by hand
-    // (q_listagg 5.19 s vs true 0.40; q_linkage 3.46 vs 0.69) whose
-    // ext_load read <= 0.5 — hypervisor bursts are invisible to the
-    // /proc-delta load accounting, but they always blow up the max/min
-    // spread of the warm reps (2.6–14x on those rows vs ~<=1.3
-    // quiet; a deterministic computation on a quiet host repeats
-    // within ~1.2x). A row whose warm spread exceeds spreadMax is
-    // therefore non-quiet REGARDLESS of its ext_load stamp: it is
-    // requeued alongside the load-flagged rows and, if it still
-    // spreads, excluded from quiet_total and named in
-    // "spread_flagged" so no reader ever trusts it.
-    val spreadMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_SPREAD_MAX", "2.0").toDouble
-    def flagScore(n: String): Double = math.max(
-      qext.get(n).map(_ / math.max(1e-9, maxLoad)).getOrElse(0.0),
-      spread.get(n).map(_ / spreadMax).getOrElse(0.0))
-    val flaggedAll = warm.keys.filter(n => flagScore(n) > 1.0)
-      .toSeq.sortBy(n => -flagScore(n))
-    val requeueMax = sys.env.get("SPARK_GRAFT_BENCH_REQUEUE_MAX").map(_.toInt)
-      .getOrElse(flaggedAll.size)
-    val requeued = scala.collection.mutable.ArrayBuffer.empty[String]
-    val flagged = flaggedAll.take(requeueMax)
-    // reserve enough budget to emit + a couple of floor queries
-    val reserve = 30.0
-    if (flagged.nonEmpty && loadGuard == "quiet" && remainingSec > reserve) {
-      val t0 = System.nanoTime()
-      val waitCap = math.min(loadWaitSec, math.max(0.0, remainingSec - reserve))
-      while (osBean.getSystemLoadAverage > maxLoad &&
-             (System.nanoTime() - t0) / 1e9 < waitCap) {
-        System.err.println(f"[bench] waiting to requeue ${flagged.size} " +
-          f"load-flagged queries (loadavg ${osBean.getSystemLoadAverage}%.2f)")
-        Thread.sleep(10000)
-      }
-      if (osBean.getSystemLoadAverage <= maxLoad) {
-        val avg = if (recentWalls.nonEmpty) recentWalls.sum / recentWalls.size else 5.0
-        flagged.iterator.takeWhile(_ => remainingSec > reserve + avg).foreach { n =>
-          warm.remove(n); median.remove(n); reps.remove(n); cold.remove(n)
-          spread.remove(n); errors.remove(n)
-          timeQuery(n, mode(1))
-          requeued += n
-        }
-      }
-    }
-
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    // Locale.ROOT: a comma-decimal default locale would corrupt the JSON
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jmapD(m: collection.Map[String, Double]): String =
-      m.map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }.mkString("{", ",", "}")
-    val total = warm.values.sum
-    // quiet_total: the engine's number, not the neighbors' — the sum
-    // over rows whose final ext_load stamp is at/below the guard
-    // threshold AND whose warm spread is within spreadMax (requeued
-    // rows carry their quiet re-measurement). spread.forall: reused
-    // rows have no spread entry but are already excluded via qext.
-    val quietNames = warm.keys.filter(n =>
-      qext.get(n).exists(_ <= maxLoad) &&
-      spread.get(n).forall(_ <= spreadMax)).toSeq
-    val quietTotal = quietNames.map(warm).sum
-    // rows a load stamp alone would have called quiet but the spread
-    // gate rejected — the exact shape of the three round-13 noise rows
-    val spreadFlagged = warm.keys.filter(n =>
-      qext.get(n).exists(_ <= maxLoad) &&
-      spread.get(n).exists(_ > spreadMax)).toSeq.sorted
-    val spreadFlaggedJson = spreadFlagged.map(jstr).mkString("[", ",", "]")
-    val fpJson = fps.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    // environment telemetry: a contended host inflates every query
-    // uniformly (round-3 archive ran ~8x the quiet-host times); the
-    // load average before/after lets a reader separate machine noise
-    // from plan regressions
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    val loadEnd = os.getSystemLoadAverage
-    val cal1End = calSec(1)
-    val heapMax = Runtime.getRuntime.maxMemory / (1 << 20)
-    val noisy = spread.filter(_._2 > 3.0).keys.toSeq.sorted
-    val noisyJson = noisy.map(jstr).mkString("[", ",", "]")
-    // Non-vacuity gate (round-10 verdict item 2): a query that returns
-    // 0 rows at bench scale is computing an empty answer at full cost —
-    // the link-prediction trio passed its sf0.01 oracle for two rounds
-    // while doing exactly that at sf0.1. Every query must produce > 0
-    // rows at the bench sf unless EXPLICITLY allowlisted here (with the
-    // reason); violations are archived in "vacuous" and shouted to
-    // stderr so the failure is mechanical, not a judge's close read.
-    // The allowlist is empty on purpose: no current query has a
-    // legitimately-empty bench result. SPARK_GRAFT_VACUOUS_ALLOW adds
-    // names for local what-if runs without editing code.
-    val vacuousAllow: Set[String] =
-      Set.empty[String] ++
-        sys.env.get("SPARK_GRAFT_VACUOUS_ALLOW").toSeq
-          .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    val vacuous =
-      if (!countRows) Seq.empty[String]
-      else rows.filter(_._2 == 0L).keys.filterNot(vacuousAllow).toSeq.sorted
-    if (vacuous.nonEmpty)
-      System.err.println(s"[bench] VACUITY GATE FAILED: ${vacuous.size} " +
-        s"queries returned 0 rows at $sfDir and are not allowlisted: " +
-        vacuous.mkString(", "))
-    val vacuousJson = vacuous.map(jstr).mkString("[", ",", "]")
-    val rowsJson =
-      if (!countRows) ""
-      else rows.map { case (k, v) => s"${jstr(k)}:$v" }
-        .mkString(""","rows":{""", ",", "}")
-    val repsJson = reps.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    val requeuedJson = requeued.sorted.map(jstr).mkString("[", ",", "]")
-    val rowsReusedJson = rowsReused.sorted.map(jstr).mkString("[", ",", "]")
-    val timesReusedJson = timesReused.sorted.map(jstr).mkString("[", ",", "]")
-    val degraded = qmode.filter(_._2 != "full")
-    val degradedJson = Seq("no_esc", "runs2", "floor", "reused")
-      .map(m => s"${jstr(m)}:${degraded.count(_._2 == m)}").mkString("{", ",", "}")
-    val modeJson = degraded.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    // the run's modal per-row mode, stamped top-level: a floor/reused
-    // total is a different KIND of number than a warm-median one and
-    // must never be cross-compared silently (round-13 verdict item 2)
-    val dominantMode =
-      if (qmode.isEmpty) "full"
-      else qmode.values.toSeq.groupBy(identity).toSeq
-        .sortBy { case (m, g) => (-g.size, m) }.head._1
-    val fullJson = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","quiet_total":${fmt(quietTotal)},"quiet_n":${quietNames.size},"queries":${jmapD(warm)},"warm_median":${jmapD(median)},"reps":$repsJson,"cold":${jmapD(cold)},"warm_spread":${jmapD(spread)},"loadavg":${jmapD(qload)},"ext_load":${jmapD(qext)},"requeued":$requeuedJson,"spread_flagged":$spreadFlaggedJson,"spread_max":${fmt(spreadMax)},"fp":$fpJson,"rows_reused":$rowsReusedJson,"times_reused":$timesReusedJson,"dominant_mode":${jstr(dominantMode)},"mode":$modeJson,"degraded":$degradedJson,"noisy":$noisyJson,"vacuous":$vacuousJson$rowsJson,"errors":$errJson,"n_errors":${errors.size},"runs_per_query":$runs,"noisy_runs":$noisyRuns,"wall_budget_sec":${fmt(wallBudget)},"wall_elapsed_sec":${fmt(elapsedSec)},"load_guard":${jstr(loadGuard)},"load_waited_sec":${fmt(loadWaited)},"max_load":${fmt(maxLoad)},"loadavg_start":${fmt(loadStart)},"loadavg_end":${fmt(loadEnd)},"cal_1t_start_sec":${fmt(cal1Start)},"cal_${cpus}t_start_sec":${fmt(calNStart)},"cal_1t_end_sec":${fmt(cal1End)},"heap_max_mb":$heapMax,"cpus":$cpus,"sf":${jstr(sfDir)}}"""
-    // Full detail goes to a repo file ONLY (round 15, verdict item 1):
-    // it used to also be echoed to stderr, but the harness tail captures
-    // stdout and stderr combined, and the truncated full-detail line
-    // landing immediately ahead of the stdout JSON line is the prime
-    // suspect for two rounds of parsed:null. Nothing else may be printed
-    // near the stdout line.
-    // A SPARK_GRAFT_BENCH_ONLY subset run must not clobber the archived
-    // full-surface record — it lands in BENCH_SUBSET.json instead.
-    val fullPath = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(fullPath), fullJson + "\n")
-    catch { case _: Throwable => () }
-    System.err.println(s"[bench] full detail -> $fullPath (${fullJson.length} chars)")
-    // stdout: ONE JSON line sized to survive a 2000-char tail capture
-    // with margin for whatever stderr noise lands in the combined tail.
-    // Keep every query if it fits; otherwise keep the slowest (the ones
-    // worth auditing) and account for the rest explicitly rather than
-    // dropping them silently. noisy/vacuous/degraded live in
-    // BENCH_FULL.json, not here (round-14 verdict item 1: shrink the
-    // line).
-    val budget = 1500
-    def line(qs: collection.Map[String, Double], omitted: Int, omittedSec: Double): String = {
-      val omitPart =
-        if (omitted == 0) ""
-        else s""","queries_omitted":$omitted,"omitted_total_sec":${fmt(omittedSec)}"""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","quiet_total":${fmt(quietTotal)},"quiet_n":${quietNames.size},"n_queries":${warm.size},"queries":${jmapD(qs)},"errors":$errJson,"n_errors":${errors.size},"runs_per_query":$runs,"dominant_mode":${jstr(dominantMode)},"wall_elapsed_sec":${fmt(elapsedSec)},"load_guard":${jstr(loadGuard)},"loadavg_start":${fmt(loadStart)},"loadavg_end":${fmt(loadEnd)},"full":"BENCH_FULL.json","sf":${jstr(sfDir)}$omitPart}"""
-    }
-    val bySlow = warm.toSeq.sortBy(-_._2)
-    var keep = bySlow.size
-    var out = line(scala.collection.immutable.ListMap(bySlow.sortBy(_._1): _*), 0, 0.0)
-    while (out.length > budget && keep > 1) {
-      keep -= 1
-      val kept = bySlow.take(keep)
-      val dropped = bySlow.drop(keep)
-      out = line(scala.collection.immutable.ListMap(kept.sortBy(_._1): _*),
-        dropped.size, dropped.map(_._2).sum)
-    }
-    // Stop Spark BEFORE printing: anything the shutdown path writes to
-    // stderr must land ahead of the JSON line in a combined tail, so the
-    // JSON line is strictly the last line of the run's output.
+    val loadStart = os.getSystemLoadAverage
+    val spark = LocalSession()
+    val res = scala.collection.mutable.LinkedHashMap.empty[String, Either[String, Row]]
+    // the JSON line is emitted even if the loop itself dies: anything
+    // that escapes a query lands under "__fatal__"
+    try {
+      spark.range(1000000).selectExpr("sum(id)").collect() // JVM/codegen warmup
+      names.foreach { n =>
+        res(n) = measure(spark, sfDir, n, SparkEntry.queries(n), runs)
+        res(n).left.foreach(e => System.err.println(s"[bench] $n failed: $e"))
+      }
+    } catch { case e: Throwable => res("__fatal__") = Left(message(e)) }
+    if (vacuous(res).nonEmpty)
+      System.err.println(s"[bench] VACUITY GATE FAILED: 0 rows at $sfDir: " +
+        vacuous(res).mkString(", "))
+    val path = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
+    val meta = Seq(
+      "wall_elapsed_sec" -> fmt((System.nanoTime() - t0) / 1e9),
+      "loadavg_start" -> fmt(loadStart), "loadavg_end" -> fmt(os.getSystemLoadAverage),
+      "heap_max_mb" -> (Runtime.getRuntime.maxMemory >> 20).toString,
+      "cpus" -> LocalSession.cpus.toString, "sf" -> jstr(sfDir), "full" -> jstr(path))
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(path), detail(res, runs, meta) + "\n")
+    catch { case e: Throwable => System.err.println(s"[bench] cannot write $path: ${message(e)}") }
+    System.err.println(s"[bench] full detail -> $path")
+    val out = line(res, runs, meta)
+    // stop Spark BEFORE printing: whatever the shutdown path writes must
+    // land ahead of the JSON line, so that line is the last of the run
     spark.stop()
     println(out)
     System.out.flush()
+  }
+
+  private val watchdog = Executors.newSingleThreadScheduledExecutor { (r: Runnable) =>
+    val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t
+  }
+
+  /** Wall seconds to build `df` and write it to the `noop` sink. The
+    * build is timed too: a streaming query runs its stream while it is
+    * built.
+    */
+  private def timed(spark: SparkSession, group: String)(df: => DataFrame): Double = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel = true)
+    val cancel = watchdog.schedule(new Runnable {
+      def run(): Unit = {
+        System.err.println(s"[bench] watchdog: cancelling $group after $QueryCapSec s")
+        sc.cancelJobGroup(group)
+      }
+    }, QueryCapSec, TimeUnit.SECONDS)
+    try {
+      val t0 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    } finally { cancel.cancel(false); sc.clearJobGroup() }
+  }
+
+  private def message(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+
+  /** Measures one query with one cold and `runs` warm runs, so `fn` is
+    * called `1 + runs` times. A failure in any run is a Left.
+    */
+  def measure(spark: SparkSession, sfDir: String, name: String, fn: Query,
+      runs: Int): Either[String, Row] =
+    try {
+      val group = s"bench-$name"
+      val obs = Observation("bench_rows")
+      val cold = timed(spark, group)(fn(spark, sfDir).observe(obs, count(lit(1))))
+      val rows = Await.result(obs.future, 1.minute).getLong(0)
+      val warm = Seq.fill(runs) {
+        spark.catalog.clearCache()
+        timed(spark, group)(fn(spark, sfDir))
+      }
+      Right(Row(cold, warm, rows))
+    } catch { case e: Throwable => Left(message(e)) }
+    finally spark.catalog.clearCache()
+
+  /** Queries whose cold run observed 0 rows, sorted. */
+  def vacuous(res: Results): Seq[String] =
+    res.collect { case (n, Right(r)) if r.rows == 0 => n }.toSeq.sorted
+
+  private def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+  // Locale.ROOT: a comma-decimal default locale would corrupt the JSON
+  private def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+  private def obj(kv: Iterable[(String, String)]): String =
+    kv.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+
+  private def ok(res: Results): Seq[(String, Row)] =
+    res.toSeq.collect { case (n, Right(r)) => n -> r }
+  private def errors(res: Results): Seq[(String, String)] =
+    res.toSeq.collect { case (n, Left(e)) => n -> e }
+
+  /** The fields both outputs open with. */
+  private def head(res: Results, runs: Int): Seq[(String, String)] = Seq(
+    "metric" -> jstr("total"), "value" -> fmt(ok(res).map(_._2.best).sum),
+    "unit" -> jstr("sec"), "n_queries" -> ok(res).size.toString,
+    "n_errors" -> errors(res).size.toString, "runs_per_query" -> runs.toString)
+
+  /** The full-detail document: every row, its rows count and every error.
+    * `meta` holds run-level fields (sf, cpus, wall time, load averages).
+    */
+  def detail(res: Results, runs: Int, meta: Seq[(String, String)]): String = {
+    def per(f: Row => String) = obj(ok(res).map { case (n, r) => n -> f(r) })
+    obj(head(res, runs) ++ Seq(
+      "queries" -> per(r => fmt(r.best)), "warm_median" -> per(r => fmt(r.median)),
+      "cold" -> per(r => fmt(r.cold)), "rows" -> per(_.rows.toString),
+      "vacuous" -> vacuous(res).map(jstr).mkString("[", ",", "]"),
+      "errors" -> obj(errors(res).map { case (n, e) => n -> jstr(e) })) ++ meta)
+  }
+
+  /** The stdout line, at most [[LineBudget]] chars: every query if it
+    * fits, else the slowest ones, with the rest counted in
+    * "queries_omitted". It carries the first [[LineErrors]] errors,
+    * shortened; the detail file has them all.
+    */
+  def line(res: Results, runs: Int, meta: Seq[(String, String)]): String = {
+    val bySlow = ok(res).map { case (n, r) => n -> r.best }.sortBy(-_._2)
+    val errs = errors(res).take(LineErrors).map { case (n, e) => n -> jstr(e.take(80)) }
+    def render(keep: Int): String = {
+      val (kept, dropped) = bySlow.splitAt(keep)
+      val omitted =
+        if (dropped.isEmpty) Nil
+        else Seq("queries_omitted" -> dropped.size.toString,
+          "omitted_total_sec" -> fmt(dropped.map(_._2).sum))
+      obj(head(res, runs) ++ Seq(
+        "queries" -> obj(kept.sortBy(_._1).map { case (n, t) => n -> fmt(t) }),
+        "errors" -> obj(errs)) ++ meta ++ omitted)
+    }
+    (bySlow.size to 0 by -1).iterator.map(render)
+      .find(_.length <= LineBudget).getOrElse(render(0))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-/** Logging hygiene for the Bench/Verify mains and the test JVM.
+/** Logging hygiene for the mains (through [[LocalSession]]) and the
+  * test JVM.
   *
   * WindowExec logs "No Partition Defined for Window operation!" at WARN
   * once per TASK. The handful of global windows in this library are
@@ -10,9 +11,9 @@ package graft
   * repeat carries no information; at 346 queries x 32 tasks it flooded
   * the round-11 driver bench's captured stdout tail and made the
   * partial artifact unreadable (BENCH_r11.json's tail was nothing but
-  * this line). Raise that one logger to ERROR in the bench/verify
-  * entrypoints and the test session — library code never touches
-  * global log config.
+  * this line). Raise that one logger to ERROR in the session every main
+  * builds and in the test session — library code never touches global
+  * log config.
   */
 object Log {
   def silenceNoisyWarnings(): Unit = {

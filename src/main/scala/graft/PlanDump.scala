@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -11,10 +10,10 @@ import java.nio.file.{Files, Paths}
   *
   *   runMain graft.PlanDump <outDir> <suffix> [query ...]
   *
-  * No args after suffix = every registered query. The session is built
-  * exactly like Bench's (same master/shuffle partitions/timezone) so
-  * the dumped plan is the one the bench times. Analysis-only: nothing
-  * here executes a query.
+  * No args after suffix = every registered query. The session is
+  * Bench's [[LocalSession]], so at the same SPARK_GRAFT_CPUS the dumped
+  * plan is the one the bench times. Analysis-only: nothing here
+  * executes a query.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,16 +21,7 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Log.silenceNoisyWarnings()
+    val spark = LocalSession()
     Files.createDirectories(Paths.get(outDir))
     val names =
       if (args.length > 2) args.drop(2).toSeq

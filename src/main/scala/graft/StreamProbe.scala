@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming-bench fairness probe: runs every streaming entry of
   * [[SparkEntry.queries]] once and splits its wall time into BATCH
   * PROCESSING (Σ micro-batch durations, from
@@ -31,15 +29,7 @@ object StreamProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     spark.range(1000000).selectExpr("sum(id)").collect() // JVM/codegen warmup
 
     val stats = graft.ext.EventsStream.lastRunStats

@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the WindowExec per-task WARN flood ate the round-11 driver's
-    // captured output — the global windows here are individually
-    // audited, the repeated warning is noise (see Log.scala)
-    Log.silenceNoisyWarnings()
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // optional comma-separated filter for local iteration (mirrors
     // Bench's SPARK_GRAFT_BENCH_ONLY); the driver leaves it unset so

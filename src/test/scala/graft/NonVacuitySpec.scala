@@ -11,8 +11,9 @@ package graft
   * This suite pins the four repaired queries to > 0 rows at the bench
   * scale factor, so the regression class fails in `sbt test`, not in
   * a judge's read of the bench archive. The archive-side mechanical
-  * gate is Bench's "vacuous" field (every query, explicit allowlist);
-  * this spec is the fast in-build subset for the known offenders.
+  * gate is Bench's "vacuous" field: every query whose cold run observed
+  * 0 rows, with no allowlist (BenchSpec pins it). This spec is the fast
+  * in-build subset for the known offenders.
   *
   * Runs each query once at sf0.1 (~4 s apiece) and clears the cache
   * after — these queries persist intermediates, and a leaked cache

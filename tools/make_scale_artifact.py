@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Assemble a scale-sweep artifact (BENCH_SF1/BENCH_SF3-style) from two
 Bench subset runs (the small-scale and the big-scale BENCH_SUBSET.json,
-copied aside), dividing per-query times and, when SPARK_GRAFT_BENCH_ROWS
-was on, output-row counts — so every superlinear time ratio can be
+copied aside), dividing per-query times and output-row counts (Bench
+records every query's rows) — so every superlinear time ratio can be
 adjudicated against output growth in the same file.
 
 Usage:
