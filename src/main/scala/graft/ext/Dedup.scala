@@ -505,120 +505,70 @@ object Dedup {
   /** Connected components over an undirected pair set by iterative
     * min-label propagation: every node starts labeled with its own id;
     * each round a node takes the min of its own and its neighbors'
-    * labels; at fixpoint the label is the component's minimum id.
+    * labels; at fixpoint the label is the component's minimum id — the
+    * [[Graph.relax]] min recurrence with w = 0 over the symmetrized
+    * pairs, one Spark action per round.
     *
     * Scale design: the graph is the CANDIDATE PAIR set (LSH survivors),
-    * orders of magnitude smaller than the corpus. Each round is ONE
-    * Spark action: the propagation aggregate carries the node's
-    * previous label alongside the new one, an `observe` metric counts
-    * changed rows inside the same job, and the eager checkpoint that
-    * materializes the round IS the convergence check — no second
-    * join/isEmpty action per round (round 2's bench showed the loop was
-    * driver-latency-bound, cold == warm). The small label frame is
-    * broadcast into the edge join, so the only shuffle per round is the
-    * label aggregate, over `numPartitions` partitions sized to the pair
-    * graph, not the corpus. Rounds needed = component diameter;
-    * near-dup components are dense (near-cliques), so 3-5 rounds
-    * typically converge and `maxIter` hard-bounds pathology.
+    * orders of magnitude smaller than the corpus, and the edge set is
+    * laid out over partitions sized from the MEASURED pair count
+    * (`ScaleOps.graphPartitions`), so LSH-survivor graphs keep O(1)
+    * tasks per round while a 100 TB pair graph gets tasks proportional
+    * to its edges. Rounds needed = component diameter; near-dup
+    * components are dense (near-cliques), so 3-5 rounds typically
+    * converge and `maxIter` hard-bounds pathology.
     *
     * `checkpointDir`: on a real cluster pass a reliable-storage path —
     * per-round lineage truncation then survives executor loss;
     * unset, `localCheckpoint` (executor memory) is used, which is fine
     * for local/bench runs but ties the result to executor lifetimes.
     *
-    * Small-graph fast path: when the MEASURED pair count is at most
-    * `spark.graft.dedup.localCcEdges` (default 2,000,000) and the id
-    * type is integral, the edges are pulled to the driver and resolved
-    * by union-find — the same size-based strategy switch a broadcast
-    * join makes. An LSH-survivor graph is orders of magnitude smaller
-    * than the corpus but can have diameter ≫ 5 (embedding near-dup
-    * CHAINS, not cliques: round-10 measured diameter 11 at sf0.1),
-    * and each distributed round is a full job — ~0.4 s of fixed
-    * scheduling/checkpoint cost for a 12 k-edge graph, so 11 rounds
-    * cost ~4.5 s where union-find costs milliseconds. Labels are
-    * identical (component minimum); a pair graph past the threshold
-    * takes the distributed loop unchanged. Set the conf to 0 to force
-    * the distributed path.
+    * Small-graph fast path: below [[Graph.localEdgeCap]] measured pairs
+    * with integral ids, the edges are pulled to the driver and resolved
+    * by union-find. An LSH-survivor graph can have diameter ≫ 5
+    * (embedding near-dup CHAINS, not cliques: round-10 measured
+    * diameter 11 at sf0.1), and each distributed round is a full job —
+    * ~0.4 s of fixed scheduling/checkpoint cost for a 12 k-edge graph,
+    * so 11 rounds cost ~4.5 s where union-find costs milliseconds.
+    * Labels are identical (component minimum).
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
                           id1Col: String = "id1", id2Col: String = "id2",
-                          numPartitions: Int = -1,
-                          checkpointDir: Option[String] = None,
-                          broadcastLabels: Boolean = true): DataFrame = {
+                          checkpointDir: Option[String] = None): DataFrame = {
     val spark = pairs.sparkSession
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def snapshot(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // persist the pair set FIRST: the symmetrizing union below reads it
-    // twice, and `pairs` is typically an expensive LSH plan
+    // persist the pair set FIRST: the sizing count and the symmetrizing
+    // union below read it, and `pairs` is typically an expensive LSH plan
     val p = pairs.persist()
-    // numPartitions <= 0 (the default): size the per-round task count
-    // from the MEASURED pair count — LSH-survivor graphs (thousands of
-    // edges) keep O(1) tasks so driver scheduling latency doesn't
-    // dominate the rounds, while a 100 TB pair graph gets tasks
-    // proportional to its edges. The sizing count() hits the persisted
-    // pair frame the first iteration would materialize anyway.
-    // An explicit numPartitions opts OUT of both the count and the
-    // local fast path (the caller pinned the distributed layout).
-    val nPairs = if (numPartitions > 0) -1L else p.count()
-    val localCap = spark.conf.get("spark.graft.dedup.localCcEdges",
-      "2000000").toLong
+    val nPairs = p.count()
     val idType = p.schema(id1Col).dataType
-    val integralIds = idType == org.apache.spark.sql.types.LongType ||
-      idType == org.apache.spark.sql.types.IntegerType
-    if (nPairs >= 0 && nPairs <= localCap && integralIds) {
+    if (Graph.integralType(idType) && nPairs <= Graph.localEdgeCap(spark)) {
       val out = localMinLabelComponents(p, id1Col, id2Col, idType)
       p.unpersist()
       return out
     }
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else ScaleOps.graphPartitions(nPairs)
-    val sym = p
-      .select(col(id1Col).as("src"), col(id2Col).as("dst"))
+    val edges = p.select(col(id1Col).as("src"), col(id2Col).as("dst"))
       .union(p.select(col(id2Col).as("src"), col(id1Col).as("dst")))
       .distinct()
-    val edges =
-      (if (sym.rdd.getNumPartitions > parts) sym.coalesce(parts)
-       else sym.repartition(parts, col("src")))
-        .persist()
-    var labels = snapshot(
-      edges.select(col("src").as("id"), col("src").as("label")).distinct())
-    var converged = labels.isEmpty
-    var i = 0
-    while (!converged && i < maxIter) {
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$i")
-      // broadcastLabels: right for LSH-survivor graphs (labels = node
-      // set of the pair graph, tiny); turn OFF for pair graphs whose
-      // node set exceeds broadcast limits — the join then shuffles
-      val lbl = if (broadcastLabels) broadcast(labels) else labels
-      val prop = edges.join(lbl, col("dst") === col("id"))
-        .select(col("src").as("id"), col("label"), lit(false).as("own"))
-        .union(labels.select(col("id"), col("label"), lit(true).as("own")))
-        // every id has exactly one own=true row, so `prev` is the
-        // node's current label and min("label") the propagated one
-        .groupBy("id").agg(min("label").as("label"),
-          min(when(col("own"), col("label"))).as("prev"))
-        .observe(obs, count(when(col("label") < col("prev"), 1)).as("n_changed"))
-        .select(col("id"), col("label"))
-      val next = snapshot(prop) // the round's ONE action; fills the metric
-      // superseded label snapshot released NOW, not at driver GC —
-      // without this a 50-round convergence holds 50 node-sized
-      // checkpoint block sets (Graph.release scaladoc)
-      Graph.release(labels)
-      labels = next
-      converged = obs.get("n_changed").asInstanceOf[Long] == 0L
-      i += 1
-    }
+      .repartition(ScaleOps.graphPartitions(nPairs), col("src"))
+      .persist()
+    val (labels, converged) = Graph.relax(edges,
+      edges.select(col("src").as("id"), col("src").as("v")).distinct(),
+      maxIter, maximize = false, "label",
+      df => if (checkpointDir.isDefined) df.checkpoint(eager = true)
+        else df.localCheckpoint(eager = true,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     p.unpersist()
     edges.unpersist()
     // correctness-first: a silent non-converged result would be WRONG
     // labels (components split in two), not slow labels — fail loudly
     // and let the caller raise maxIter (rounds needed = graph diameter)
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds; " +
-        "component diameter exceeds maxIter — raise it")
+    if (!converged) {
+      Graph.release(labels)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds; " +
+          "component diameter exceeds maxIter — raise it")
+    }
     labels
   }
 
@@ -658,20 +608,8 @@ object Dedup {
       if (ra < rb) parent(rb) = ra
       else if (rb < ra) parent(ra) = rb
     }
-    val out = parent.keysIterator.map(k => (k, find(k))).toArray
-    // RDD-backed result, NOT a LocalRelation (round-10 ADVICE): toDF
-    // on a local Seq embeds every (id, label) row INTO the logical
-    // plan, re-serialized into each consuming plan — at the 2 M-edge
-    // gate that is megabytes of plan per consumer. parallelize keeps
-    // the rows behind an RDD reference; a handful of partitions is
-    // plenty for a ≤ node-count result that consumers re-shuffle
-    // anyway.
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
-      1 + out.length / 500000))
-    spark.sparkContext.parallelize(out.toIndexedSeq, parts)
-      .toDF("id", "label")
-      .select(col("id").cast(idType).as("id"),
-        col("label").cast(idType).as("label"))
+    Graph.localLabels(spark, parent.keysIterator.map(k => (k, find(k))).toArray,
+      idType, "label", idType)
   }
 
   /** Connected components by the ALTERNATING star algorithm (Kiveris
@@ -731,12 +669,8 @@ object Dedup {
     // (identical labels; self-loops resolve to themselves either way);
     // the count scans the just-materialized snapshot blocks, not the
     // caller's plan
-    val localCap = spark.conf.get("spark.graft.dedup.localCcEdges",
-      "2000000").toLong
     val idType = raw.schema("src").dataType
-    val integralIds = idType == org.apache.spark.sql.types.LongType ||
-      idType == org.apache.spark.sql.types.IntegerType
-    if (integralIds && raw.count() <= localCap) {
+    if (Graph.integralType(idType) && raw.count() <= Graph.localEdgeCap(spark)) {
       val out = localMinLabelComponents(raw, "src", "dst", idType)
       Graph.release(raw)
       return out

@@ -199,7 +199,7 @@ object EventsStream {
   }
 
   /** Streaming form: parquet source → watermark → tumbling window.
-    * Built on a conf-isolated session clone (see [[nanosSession]]).
+    * Built on a conf-isolated session clone (see `cloneSession`).
     */
   def hourlyStream(spark: SparkSession, path: String): DataFrame = {
     readEventsStream(spark, path)

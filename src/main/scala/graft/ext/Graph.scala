@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 /** Iterative graph propagation over an edge list: fixed-iteration
   * PageRank. Complements the connected-components resolution in
@@ -12,14 +13,15 @@ import org.apache.spark.sql.functions._
   * distributed formulation where the shuffle is bounded by |E| per
   * iteration and no adjacency ever materializes per node. The iteration
   * count is FIXED (a pipeline hyper-parameter, not a convergence loop),
-  * so by default the driver issues no per-round actions at all: the
-  * loop merely stacks plan layers and the whole computation runs as one
-  * job (plan depth is linear in the handful of iterations). For deep
-  * iteration counts, `truncateLineage = true` cuts the plan with an
-  * eager `localCheckpoint` per round — the same trade
-  * [[Dedup.connectedComponents]] documents, with the same caveat that a
-  * real cluster wanting fault-tolerant truncation should use reliable
-  * `checkpoint` storage instead.
+  * so [[pageRank]] issues no per-round actions at all: the loop merely
+  * stacks plan layers and the whole computation runs as one job (plan
+  * depth is linear in the handful of iterations).
+  *
+  * The min/max-plus propagations — [[bfsHops]], [[sssp]],
+  * [[longestPathLayers]], [[criticalPath]] and
+  * [[Dedup.connectedComponents]] — are one recurrence behind one size
+  * gate ([[localEdgeCap]]): the driver replay [[localRelax]] below the
+  * cap, the distributed kernel [[relax]] above it.
   */
 object Graph {
 
@@ -33,14 +35,14 @@ object Graph {
 
   /** Eager per-round snapshot for the iterative algorithms below: a
     * round's result whose plan references the previous round's MORE
-    * THAN ONCE (BFS: union + anti-join; k-core: degree pass + two
+    * THAN ONCE ([[relax]]: frontier + union; k-core: degree pass + two
     * restrictions) grows the LOGICAL PLAN geometrically if merely
     * persisted — persist caches data, not the plan, and analysis cost
     * explodes long before the data does. `localCheckpoint` materializes
     * the round AND truncates lineage to a scan of the cached blocks, so
-    * plan depth stays O(1) per round — the same trade
-    * [[Dedup.connectedComponents]] documents (a real cluster wanting
-    * fault-tolerant truncation uses reliable `checkpoint` storage).
+    * plan depth stays O(1) per round. A real cluster wanting
+    * fault-tolerant truncation uses reliable `checkpoint` storage
+    * ([[Dedup.connectedComponents]]'s `checkpointDir`).
     *
     * Storage is MEMORY_AND_DISK_SER, not the deserialized default:
     * checkpoint blocks are scanned once-per-round sequentially, so
@@ -54,6 +56,23 @@ object Graph {
   private def snapshot(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+
+  /** `snap` of `df` plus the value of `metric` over its rows, read from
+    * an `Observation` filled by the snapshot's own job — so a loop that
+    * tests a count per round pays ONE action per round, not a snapshot
+    * and a second `count()` job.
+    */
+  private def observedSnapshot(df: DataFrame,
+      metric: org.apache.spark.sql.Column,
+      snap: DataFrame => DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val s = snap(df.observe(obs, metric.as("n")))
+    (s, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** [[snapshot]] plus its row count, in one job. */
+  private def countedSnapshot(df: DataFrame): (DataFrame, Long) =
+    observedSnapshot(df, count(lit(1)), snapshot)
 
   /** Release the storage behind a [[snapshot]] (or any
     * `localCheckpoint`ed frame) deterministically. Spark's public API
@@ -71,46 +90,28 @@ object Graph {
     org.apache.spark.sql.graft.ColumnBridge.checkpointedRdd(df)
       .foreach(_.unpersist(blocking = false))
 
-  /** Size gate for the local propagation fast paths ([[bfsHops]],
-    * [[sssp]], [[longestPathLayers]], [[criticalPath]]): when the
-    * MEASURED edge count is at most this (default 2 M) and ids are
-    * integral, the relaxation runs as a driver-side synchronous loop
-    * over collected edges — the [[Dedup.connectedComponents]]
-    * broadcast-style size switch. Rationale: these kernels are
-    * EXACT-INTEGER recurrences (hop counts, long weights), so a
-    * driver replay of the same synchronous rounds is bit-identical,
-    * while each distributed round is a full job whose fixed cost
-    * (scheduling + eager checkpoint) dominates small graphs — the
-    * round-10 CC profile measured ~0.4 s/round against milliseconds
-    * of actual relaxation work. Set `spark.graft.graph.localEdges`
-    * to 0 to force the distributed loops (their per-round
-    * snapshot/release discipline is what scales past the gate).
+  /** Size gate of every min/max-plus propagation ([[bfsHops]],
+    * [[sssp]], [[longestPathLayers]], [[criticalPath]],
+    * [[Dedup.connectedComponents]], [[Dedup.connectedComponentsStar]]):
+    * when the MEASURED edge count is at most this (default 2 M) and ids
+    * are integral, the edges are collected and the propagation runs on
+    * the driver — the size switch a broadcast join makes. The kernels
+    * are EXACT-INTEGER recurrences (hop counts, long weights, min
+    * labels), so the driver answer is bit-identical, while each
+    * distributed round is a full job whose fixed cost (scheduling +
+    * eager checkpoint) dominates small graphs — the round-10 CC profile
+    * measured ~0.4 s/round against milliseconds of actual relaxation
+    * work. Set `spark.graft.graph.localEdges` to 0 to force the
+    * distributed loops ([[relax]] and the star loop), which are what
+    * scale past the gate.
     */
-  private def localEdgeCap(spark: org.apache.spark.sql.SparkSession): Long =
+  private[graft] def localEdgeCap(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.get("spark.graft.graph.localEdges", "2000000").toLong
 
-  private def integralType(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt == org.apache.spark.sql.types.LongType ||
-      dt == org.apache.spark.sql.types.IntegerType
+  private[graft] def integralType(dt: DataType): Boolean =
+    dt == LongType || dt == IntegerType
 
-  /** Materialize the edge projection ONCE (eager [[snapshot]]) and
-    * measure it for the [[localEdgeCap]] gate. The previous gate ran
-    * `count()` directly on the caller's frame — a full extra execution
-    * of a possibly-expensive, possibly-unpersisted edge derivation —
-    * and below the cap the driver `collect()` then executed it AGAIN
-    * (round-10 ADVICE, medium). Snapshotting first bounds the cost at
-    * one serialized write of the projected edges; the sizing count,
-    * the fast-path collect, and every distributed round then read the
-    * materialized blocks. Callers must [[release]] the snapshot once
-    * their own result is materialized — all four gate users return
-    * eager snapshots / local relations, so it never escapes.
-    */
-  private def sizedEdgeSnapshot(e: DataFrame): (DataFrame, Long) = {
-    val snap = snapshot(e)
-    (snap, snap.count())
-  }
-
-  /** Driver-side SYNCHRONOUS relaxation — the shared local kernel:
+  /** Driver-side SYNCHRONOUS relaxation — the local twin of [[relax]]:
     * each round computes candidates from the PREVIOUS round's state
     * only (matching the distributed rounds exactly, including the
     * partial result when `rounds` stops short of the fixpoint) and
@@ -142,26 +143,126 @@ object Graph {
     cur
   }
 
-  /** Materialize a local relaxation result as (id, `valueCol`).
+  /** Materialize a driver-side result as (id, `valueCol`).
     * RDD-backed, not a LocalRelation: a Seq-backed toDF embeds every
     * row into the LOGICAL plan and re-serializes it into each
     * consuming plan — at the 2 M-edge gate that is megabytes of plan
-    * per consumer (the round-10 Dedup.localMinLabelComponents ADVICE;
-    * same fix here).
+    * per consumer (the round-10 Dedup.localMinLabelComponents ADVICE).
+    * A handful of partitions is plenty for a node-sized result that
+    * consumers re-shuffle anyway.
     */
-  private def localLabels(spark: org.apache.spark.sql.SparkSession,
-      state: scala.collection.mutable.LongMap[Long],
-      idType: org.apache.spark.sql.types.DataType,
-      valueCol: String,
-      valueType: org.apache.spark.sql.types.DataType): DataFrame = {
+  private[graft] def localLabels(spark: org.apache.spark.sql.SparkSession,
+      out: Array[(Long, Long)], idType: DataType,
+      valueCol: String, valueType: DataType): DataFrame = {
     import spark.implicits._
-    val out = state.toArray
     val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism,
       1 + out.length / 500000))
     spark.sparkContext.parallelize(out.toIndexedSeq, parts)
       .toDF("id", valueCol)
       .select(col("id").cast(idType).as("id"),
         col(valueCol).cast(valueType).as(valueCol))
+  }
+
+  /** The distributed min/max-plus relaxation kernel:
+    *   v_{r+1}(x) = best(v_r(x), best_{(u,x)∈E} v_r(u) + w(u,x))
+    * from `init` (id, v), for at most `rounds` rounds, `best` = max when
+    * `maximize` else min. `edges` is (src, dst) or (src, dst, w); without
+    * `w` a candidate is the neighbor's value itself (w = 0 for any
+    * ordered type — min-label connected components).
+    *
+    * Semi-naive rounds: the state frame is (id, v, d) with d = "changed
+    * in the previous round", and a round joins only the d-rows to the
+    * edges. Values only ever improve, so a node that did not change
+    * offers exactly the candidates it offered before — the result after
+    * every round (the partial one included) equals the full synchronous
+    * relaxation [[localRelax]] replays. BFS keeps its frontier-only
+    * cost and the full-relaxation loops stop re-joining settled nodes.
+    *
+    * One action per round: the aggregate carries each node's previous
+    * value beside the new best, an `Observation` counts changed rows
+    * inside the job that snapshots the round ([[observedSnapshot]]),
+    * and that count is the fixpoint test — 0 changed ends the loop
+    * early, since further rounds are identities. `snap` materializes
+    * each round and truncates lineage (plan depth O(1): the state is
+    * read twice per round, the frontier and the union); the superseded
+    * round is [[release]]d at once, so at most the live state plus the
+    * one being built are cached, whatever the round count.
+    *
+    * Returns the final (id, `valueCol`) as an eager snapshot (callers
+    * may [[release]] it once consumed) and whether a round reached the
+    * fixpoint — false when `rounds` ran out first, which is a partial
+    * result for the bounded walks and an error for connected components.
+    */
+  private[graft] def relax(edges: DataFrame, init: DataFrame, rounds: Int,
+      maximize: Boolean, valueCol: String,
+      snap: DataFrame => DataFrame): (DataFrame, Boolean) = {
+    val best: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+      if (maximize) max else min
+    val step = if (edges.columns.contains("w")) col("v") + col("w") else col("v")
+    def changed(df: DataFrame) =
+      observedSnapshot(df, count(when(col("d"), 1)), snap)
+    var (state, n) = changed(
+      init.select(col("id"), col("v"), lit(true).as("d")))
+    var r = 0
+    while (r < rounds && n > 0) {
+      val cand = edges.join(state.filter(col("d")), col("src") === col("id"))
+        .select(col("dst").as("id"), step.as("v"), lit(false).as("own"))
+      val (next, m) = changed(
+        state.select(col("id"), col("v"), lit(true).as("own")).unionAll(cand)
+          // every reached id has one own row: `prev` is its current
+          // value (null when first reached), `v` the relaxed one
+          .groupBy("id").agg(best(col("v")).as("v"),
+            best(when(col("own"), col("v"))).as("prev"))
+          .select(col("id"), col("v"),
+            (col("prev").isNull || col("v") =!= col("prev")).as("d")))
+      release(state) // superseded — every later read hits `next`
+      state = next
+      n = m
+      r += 1
+    }
+    val out = snap(state.select(col("id"), col("v").as(valueCol)))
+    release(state)
+    (out, n == 0L)
+  }
+
+  /** The size gate shared by [[bfsHops]], [[sssp]], [[longestPathLayers]]
+    * and [[criticalPath]]: snapshot the (src, dst, w) projection ONCE
+    * and measure it in the same job, then relax on the driver below
+    * [[localEdgeCap]] and with [[relax]] above it. Values start at 0 on
+    * `seeds`, or on every node when there are none. The gate's count,
+    * the fast-path collect and every distributed round read the
+    * materialized blocks, so callers need not persist the edge frame
+    * for one call — persist it only when several graph operators share
+    * it. The edge snapshot is released before returning.
+    */
+  private def propagate(edges: DataFrame, w: org.apache.spark.sql.Column,
+      seeds: Option[DataFrame], rounds: Int, maximize: Boolean,
+      valueCol: String, valueType: DataType): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val idType = edges.schema("src").dataType
+    val (e, nEdges) = countedSnapshot(edges.select(col("src"), col("dst"),
+      w.cast(valueType).as("w")))
+    val out = if (integralType(idType) && nEdges <= localEdgeCap(spark)) {
+      val arr = e.select(col("src").cast("long"), col("dst").cast("long"),
+        col("w").cast("long")).as[(Long, Long, Long)].collect()
+      val init = scala.collection.mutable.LongMap.empty[Long]
+      seeds match {
+        case Some(s) => s.select(col("id").cast("long")).distinct().as[Long]
+          .collect().foreach(init(_) = 0L)
+        case None => arr.foreach { case (u, v, _) => init(u) = 0L; init(v) = 0L }
+      }
+      localLabels(spark, localRelax(arr, init, rounds,
+          if (maximize) _ > _ else _ < _).toArray,
+        idType, valueCol, valueType)
+    } else {
+      val ids = seeds.fold(e.select(col("src").as("id"))
+        .unionAll(e.select(col("dst").as("id"))))(_.select(col("id")))
+      relax(e, ids.distinct().withColumn("v", lit(0).cast(valueType)),
+        rounds, maximize, valueCol, snapshot)._1
+    }
+    release(e)
+    out
   }
 
   /** Degree totals + the degree-ORIENTED edge list the triangle kernels
@@ -337,82 +438,23 @@ object Graph {
   }
 
   /** Multi-source BFS: minimum hop distance from any seed, bounded at
-    * `maxHops`. Frontier formulation — each round joins ONLY the
-    * just-reached frontier against the edge list, anti-joins the
-    * already-visited set, and unions the new layer in; a node is
-    * therefore labeled the first round it appears, which IS its
-    * minimum distance, with no per-node min aggregate needed.
-    *
-    * Scale design: the per-round shuffle is |frontier ⋈ edges| — at
-    * most |E| and typically far less — and the visited set only ever
-    * grows by the new layer, so total work across k rounds is O(k·|E|)
-    * worst-case with no all-pairs stage. Each frontier is persisted
-    * (it is consumed twice: the union and the next round's join) and
-    * the hop bound makes the plan depth fixed, so no lineage
-    * truncation is needed for the shallow exploration depths
-    * (3–6 hops) this targets. Nodes unreachable within `maxHops` are
-    * absent from the output — the caller distinguishes "far" from
-    * "disconnected" by raising the bound.
-    *
-    * Cache discipline (the [[Dedup.connectedComponents]] pattern): each
-    * round takes ONE eager [[snapshot]] of the grown visited set —
-    * materializing the round and truncating lineage so plan depth stays
-    * O(1) — and [[release]]s the previous snapshot, so at most the live
-    * snapshot plus the one being built are ever cached, no matter the
-    * hop bound. A round that reaches no new node ends the walk early
-    * (the remaining rounds could only re-derive the same set). The
-    * RETURNED frame is the final snapshot; callers iterating many BFS
-    * runs in one session should [[release]] it when consumed.
-    *
-    * The edge projection is snapshotted ONCE up front and released
-    * before returning (as are [[longestPathLayers]], [[criticalPath]]
-    * and [[sssp]]): the size gate's measurement, the fast-path
-    * collect, and every frontier round read the materialized blocks,
-    * so callers need not persist the edge frame for THIS call —
-    * persist it only when several graph operators share it.
+    * `maxHops` — [[relax]] min-plus with unit weights from hop 0 at the
+    * seeds. A node's value changes only in the round that first reaches
+    * it, so the kernel's semi-naive rounds join just the newly reached
+    * frontier to the edges: the per-round shuffle is |frontier ⋈ edges|,
+    * at most |E| and typically far less, with no all-pairs stage. A
+    * round that reaches no new node ends the walk early. Nodes
+    * unreachable within `maxHops` are absent from the output — the
+    * caller distinguishes "far" from "disconnected" by raising the
+    * bound. The RETURNED frame is an eager snapshot; callers iterating
+    * many BFS runs in one session should [[release]] it when consumed.
     *
     * Returns (id, hop) with hop in [0, maxHops].
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    val idType = edges.schema("src").dataType
-    val (e, nEdges) = sizedEdgeSnapshot(edges.select(col("src"), col("dst")))
-    if (integralType(idType) && nEdges <= localEdgeCap(e.sparkSession)) {
-      // size-gated driver fast path (see [[localEdgeCap]]): min-hop
-      // relaxation in exact ints is bit-identical to the frontier loop
-      val arr = e.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), 1L))
-      release(e)
-      val init = scala.collection.mutable.LongMap.empty[Long]
-      seeds.select(col("id").cast("long")).distinct().collect()
-        .foreach(r => init(r.getLong(0)) = 0L)
-      val res = localRelax(arr, init, maxHops, _ < _)
-      return localLabels(edges.sparkSession, res, idType, "hop",
-        org.apache.spark.sql.types.IntegerType)
-    }
-    var visited = snapshot(seeds.select(col("id")).distinct()
-      .withColumn("hop", lit(0)))
-    var reached = visited.count() // trivial: scans the eager snapshot
-    var frontier = visited
-    var h = 1
-    while (h <= maxHops && frontier != null) {
-      val next = frontier
-        .join(e, frontier("id") === e("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .withColumn("hop", lit(h))
-      val grown = snapshot(visited.unionAll(next)) // the round's ONE action
-      val total = grown.count()
-      release(visited) // superseded — every later read hits `grown`
-      frontier =
-        if (total == reached) null // empty frontier: nothing left to expand
-        else grown.filter(col("hop") === lit(h)) // narrow read of the snapshot
-      visited = grown
-      reached = total
-      h += 1
-    }
-    release(e) // every round is materialized into the final snapshot
-    visited
+    propagate(edges, lit(1), Some(seeds), maxHops, maximize = false,
+      "hop", IntegerType)
   }
 
   /** Bounded DOUBLE-BFS diameter estimate — the standard cheap lower
@@ -459,121 +501,44 @@ object Graph {
   /** Longest-path layering of a DAG — assign every node the length of
     * the longest directed path ending at it (sources get 0), the
     * classic topological "level" used for dependency scheduling, lineage
-    * depth reports, and DAG visualization. Iterative max-propagation
-    * (distributed Bellman-Ford on −1 weights):
+    * depth reports, and DAG visualization. [[relax]] max-plus with unit
+    * weights (distributed Bellman-Ford on −1 weights):
     *   L₀(v) = 0;  L_{r+1}(v) = max(L_r(v), max_{(u,v)∈E} L_r(u)+1)
     * which reaches the fixpoint after `depth` rounds, where depth is the
-    * longest path length in the graph. Σ L is strictly monotone until
-    * the fixpoint, so an unchanged sum ends the loop early; `maxRounds`
-    * bounds it for callers who know their depth (a banded DAG whose
-    * edges only go from band b to band b+1 has depth < #bands).
+    * longest path length in the graph; a round that changes no level
+    * ends the loop early, and `maxRounds` bounds it for callers who know
+    * their depth (a banded DAG whose edges only go from band b to band
+    * b+1 has depth < #bands).
     *
     * The input MUST be acyclic: a cycle makes the recurrence diverge,
     * so the loop would only stop at `maxRounds` with levels that keep
-    * growing — this operator does not detect cycles (run it with
-    * `maxRounds` = |V| and a still-changing sum as a cheap cycle test).
+    * growing — this operator does not detect cycles.
     *
-    * Scale design: per round one edge⋈level join (shuffle on src) and
-    * one max-aggregate (shuffle on dst) — O(|E|) per round, map-side
-    * combined, no adjacency materialization; one eager [[snapshot]] per
-    * round keeps plan depth O(1) and the superseded round is
-    * [[release]]d, so at most two level frames (|V| rows each) are ever
-    * cached. Returns (id, level).
+    * Scale design: per round one frontier⋈edge join and one
+    * max-aggregate — O(|E|) at worst, map-side combined, no adjacency
+    * materialization. Returns (id, level).
     */
   def longestPathLayers(edges: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be positive")
-    val idType = edges.schema("src").dataType
-    val (e, nEdges) = sizedEdgeSnapshot(edges.select(col("src"), col("dst")))
-    if (integralType(idType) && nEdges <= localEdgeCap(e.sparkSession)) {
-      // size-gated driver fast path (see [[localEdgeCap]]): max-plus
-      // over exact longs, synchronous rounds — bit-identical
-      val arr = e.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), 1L))
-      release(e)
-      val init = scala.collection.mutable.LongMap.empty[Long]
-      arr.foreach { case (u, v, _) =>
-        init.getOrElseUpdate(u, 0L); init.getOrElseUpdate(v, 0L) }
-      val res = localRelax(arr, init, maxRounds, _ > _)
-      return localLabels(edges.sparkSession, res, idType, "level",
-        org.apache.spark.sql.types.LongType)
-    }
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-    var lvl = snapshot(nodes.withColumn("level", lit(0L)))
-    var levelSum = 0L // Σ L after round 0 (all zero)
-    var r = 0
-    var fixpoint = false
-    while (r < maxRounds && !fixpoint) {
-      val relaxed = e.join(lvl, e("src") === lvl("id"))
-        .select(col("dst").as("id"), (col("level") + 1L).as("level"))
-      val next = snapshot( // the round's materialization
-        lvl.unionAll(relaxed).groupBy("id").agg(max("level").as("level")))
-      val s = next.agg(coalesce(sum("level"), lit(0L))).head.getLong(0)
-      release(lvl) // superseded — every later read hits `next`
-      fixpoint = s == levelSum // Σ L monotone: unchanged == converged
-      levelSum = s
-      lvl = next
-      r += 1
-    }
-    release(e) // final level snapshot is materialized; edges consumed
-    lvl
+    propagate(edges, lit(1), None, maxRounds, maximize = true,
+      "level", LongType)
   }
 
   /** Weighted longest-path cost to every node of a DAG — the CRITICAL
     * PATH kernel (project scheduling, pipeline-latency attribution,
     * lineage cost): cost(v) = max over directed paths ending at v of
-    * Σ edge weights, sources 0. The max-plus twin of
-    * [[longestPathLayers]] (same fixed-round max-propagation, same
-    * Σ-monotone early exit — the sum of per-node maxima strictly grows
-    * until fixpoint, so an unchanged sum ends the loop), with LONG
-    * weights so every cost is exact. Same acyclicity contract as
+    * Σ edge weights, sources 0. The weighted twin of
+    * [[longestPathLayers]] ([[relax]] max-plus), with LONG weights so
+    * every cost is exact. Same acyclicity contract as
     * [[longestPathLayers]]: cycles make the recurrence diverge and are
     * not detected here. Weights must be non-negative.
-    *
-    * Scale: per round one edge⋈cost join (shuffle on src) + one
-    * max-aggregate (shuffle on dst), O(|E|) each, map-side combinable;
-    * snapshot/release keeps plan depth O(1) per round.
     *
     * Returns (id, cost) for every node.
     */
   def criticalPath(edges: DataFrame, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, "maxRounds must be positive")
-    val idType = edges.schema("src").dataType
-    val (e, nEdges) = sizedEdgeSnapshot(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
-    if (integralType(idType) && nEdges <= localEdgeCap(e.sparkSession)) {
-      // size-gated driver fast path (see [[localEdgeCap]])
-      val arr = e.select(col("src").cast("long"), col("dst").cast("long"),
-          col("w")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      release(e)
-      val init = scala.collection.mutable.LongMap.empty[Long]
-      arr.foreach { case (u, v, _) =>
-        init.getOrElseUpdate(u, 0L); init.getOrElseUpdate(v, 0L) }
-      val res = localRelax(arr, init, maxRounds, _ > _)
-      return localLabels(edges.sparkSession, res, idType, "cost",
-        org.apache.spark.sql.types.LongType)
-    }
-    val nodes = e.select(col("src").as("id"))
-      .unionAll(e.select(col("dst").as("id"))).distinct()
-    var cost = snapshot(nodes.withColumn("cost", lit(0L)))
-    var costSum = 0L
-    var r = 0
-    var fixpoint = false
-    while (r < maxRounds && !fixpoint) {
-      val relaxed = e.join(cost, e("src") === cost("id"))
-        .select(col("dst").as("id"), (col("cost") + col("w")).as("cost"))
-      val next = snapshot(
-        cost.unionAll(relaxed).groupBy("id").agg(max("cost").as("cost")))
-      val s = next.agg(coalesce(sum("cost"), lit(0L))).head.getLong(0)
-      release(cost)
-      fixpoint = s == costSum
-      costSum = s
-      cost = next
-      r += 1
-    }
-    release(e) // final cost snapshot is materialized; edges consumed
-    cost
+    propagate(edges, col("w"), None, maxRounds, maximize = true,
+      "cost", LongType)
   }
 
   /** Per-edge triangle SUPPORT — for every undirected edge {u, v}, the
@@ -674,8 +639,7 @@ object Graph {
       val (sup, caches) = edgeSupportCore(sym)
       val keep = sup.filter(col("support") >= k - 2)
         .select(col("id1"), col("id2"))
-      val next = snapshot(und.join(keep, Seq("id1", "id2"), "left_semi"))
-      val n = next.count()
+      val (next, n) = countedSnapshot(und.join(keep, Seq("id1", "id2"), "left_semi"))
       // the round's orientation caches are fully consumed by `next`
       caches.foreach(_.unpersist(blocking = false))
       release(und)
@@ -724,20 +688,15 @@ object Graph {
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
     val e = edges.select(col("src"), col("dst"))
-    var deg = snapshot(e.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("id"), col("deg")))
     // Alive-node count carried across rounds: an unchanged count means
-    // no node fell below k — the fixpoint. It is read from an observe
-    // metric filled by the SAME action that materializes the round
-    // (the [[Dedup.connectedComponents]] discipline), so each round is
-    // exactly ONE driver action; the old loop paid a second one to
-    // snapshot-and-test the removed set (round-10 verdict item 4b).
-    // The initial count scans the already-materialized degree snapshot.
-    var nAlive = deg.count()
+    // no node fell below k — the fixpoint. It is read from the job that
+    // materializes each round ([[countedSnapshot]]), so each round is
+    // exactly ONE Spark action.
+    var (deg, nAlive) = countedSnapshot(e.groupBy("src")
+      .agg(count(lit(1)).as("deg")).select(col("src").as("id"), col("deg")))
     var r = 0
     var done = nAlive == 0L
     while (r < rounds && !done) {
-      val obs = org.apache.spark.sql.Observation(s"kcore_round_$r")
       // both filters are narrow reads of the degree snapshot — no
       // separate materialization of the removed set is needed
       val removed = deg.filter(col("deg") < k).select(col("id"))
@@ -749,12 +708,8 @@ object Graph {
         .join(removed.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
         .join(alive.select(col("id").as("src")), Seq("src"), "left_semi")
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-      val next = snapshot( // the round's ONE action; fills the metric
-        alive.join(delta, Seq("id"), "left")
-          .select(col("id"),
-            (col("deg") - coalesce(col("d"), lit(0L))).as("deg"))
-          .observe(obs, count(lit(1)).as("n_alive")))
-      val n = obs.get("n_alive").asInstanceOf[Long]
+      val (next, n) = countedSnapshot(alive.join(delta, Seq("id"), "left")
+        .select(col("id"), (col("deg") - coalesce(col("d"), lit(0L))).as("deg")))
       release(deg)
       deg = next
       done = n == nAlive // nothing removed: further rounds are identities
@@ -1111,8 +1066,7 @@ object Graph {
     * undirected input), so there is no dangling-mass term. Returns
     * (id, pr) with pr rounded at 6 for cross-engine comparison.
     */
-  def pageRank(edges: DataFrame, iters: Int, d: Double = 0.85,
-      truncateLineage: Boolean = false): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int, d: Double = 0.85): DataFrame = {
     val deg = edges.groupBy("src").agg(count(lit(1)).as("out_deg"))
     val nodes = edges.select(col("src").as("id")).distinct()
     val n = nodes.count()
@@ -1126,7 +1080,6 @@ object Graph {
       pr = nodes.join(contrib, Seq("id"), "left")
         .select(col("id"),
           (lit((1.0 - d) / n) + lit(d) * coalesce(col("inflow"), lit(0.0))).as("pr"))
-      if (truncateLineage) pr = pr.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }
     pr.select(col("id"), round(col("pr"), 6).as("pr"))
   }
@@ -1143,15 +1096,14 @@ object Graph {
     * aggregate (out-degree rides along in the rank frame, so no extra
     * join) plus a 1-ROW dangling-rank scalar cross-joined back — a
     * broadcast of one double, not a shuffle. Node spine = src ∪ dst.
-    * Fixed iteration count, no per-round driver actions;
-    * `truncateLineage` cuts the plan per round for deep counts (the
-    * rank frame is referenced twice per round — dangling scalar +
-    * contribution — so plan size doubles per round without it).
+    * Fixed iteration count; each round is one eager [[snapshot]]
+    * because the rank frame is referenced twice per round — dangling
+    * scalar + contribution — so the plan would double per round
+    * without the cut.
     *
     * Returns (id, pr) rounded at 6.
     */
-  def pageRankDirected(edges: DataFrame, iters: Int, d: Double = 0.85,
-      truncateLineage: Boolean = false): DataFrame = {
+  def pageRankDirected(edges: DataFrame, iters: Int, d: Double = 0.85): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     val deg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
     val nodes = e.select(col("src").as("id"))
@@ -1167,13 +1119,12 @@ object Graph {
         .join(pr.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
         .agg(sum(col("pr") / col("out_deg").cast("double")).as("inflow"))
-      pr = spine
+      pr = snapshot(spine
         .join(contrib, Seq("id"), "left")
         .crossJoin(dangling) // one row: the broadcastable dangling mass
         .select(col("id"), col("out_deg"),
           (lit((1.0 - d) / n) + lit(d) *
-            (coalesce(col("inflow"), lit(0.0)) + col("dm") / n)).as("pr"))
-      if (truncateLineage) pr = pr.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+            (coalesce(col("inflow"), lit(0.0)) + col("dm") / n)).as("pr")))
     }
     pr.select(col("id"), round(col("pr"), 6).as("pr"))
   }
@@ -1247,57 +1198,23 @@ object Graph {
 
   /** Bounded-hop weighted single-source shortest paths (multi-source):
     * distₖ(v) = min total weight over paths of ≤ `maxHops` edges from
-    * any seed — distributed Bellman-Ford, the weighted generalization
-    * of [[bfsHops]]. Weights are LONGS (callers quantize float costs),
-    * so every distance is exact and the result hashes identically on
-    * any engine. Weights MUST be non-negative (not validated — that
-    * would cost an eager scan): with a hop bound the recurrence still
-    * terminates on negative weights, but "shortest within k hops"
-    * stops being monotone in k, which is never what a caller means.
-    *
-    * Per round: ONE frontier⋈edges relaxation (shuffle ≤ |E|) + ONE
-    * min-aggregate over (old dists ∪ relaxed candidates) — map-side
-    * combinable, keyed by node. The dist frame is referenced TWICE per
-    * round (union branch + join branch), so each round is snapshotted
-    * ([[snapshot]]) to keep plan depth O(1) and the superseded round
-    * released — the BFS/k-core discipline. Fixed `maxHops` rounds, one
-    * eager action per round (the checkpoint itself).
+    * any seed — distributed Bellman-Ford ([[relax]] min-plus), the
+    * weighted generalization of [[bfsHops]]. Weights are LONGS (callers
+    * quantize float costs), so every distance is exact and the result
+    * hashes identically on any engine. Weights MUST be non-negative (not
+    * validated — that would cost an eager scan): with a hop bound the
+    * recurrence still terminates on negative weights, but "shortest
+    * within k hops" stops being monotone in k, which is never what a
+    * caller means. A round that improves no distance is the fixpoint,
+    * so ending there equals running all `maxHops` rounds.
     *
     * Returns (id, dist) for every node reachable within `maxHops`
     * hops; unreachable nodes are absent (the BFS contract).
     */
   def sssp(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    val idType = edges.schema("src").dataType
-    val (e, nEdges) = sizedEdgeSnapshot(edges.select(col("src"), col("dst"),
-      col("w").cast("long").as("w")))
-    if (integralType(idType) && nEdges <= localEdgeCap(e.sparkSession)) {
-      // size-gated driver fast path (see [[localEdgeCap]]): min-plus
-      // over exact longs; with non-negative weights a no-change round
-      // is the fixpoint, so early exit equals the fixed-round result
-      val arr = e.select(col("src").cast("long"), col("dst").cast("long"),
-          col("w")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      release(e)
-      val init = scala.collection.mutable.LongMap.empty[Long]
-      seeds.select(col("id").cast("long")).distinct().collect()
-        .foreach(r => init(r.getLong(0)) = 0L)
-      val res = localRelax(arr, init, maxHops, _ < _)
-      return localLabels(edges.sparkSession, res, idType, "dist",
-        org.apache.spark.sql.types.LongType)
-    }
-    var dist = snapshot(seeds.select(col("id")).distinct()
-      .withColumn("dist", lit(0L)))
-    for (_ <- 1 to maxHops) {
-      val relaxed = dist.join(e, dist("id") === e("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = snapshot(dist.unionAll(relaxed)
-        .groupBy("id").agg(min("dist").as("dist")))
-      release(dist)
-      dist = next
-    }
-    release(e) // final dist snapshot is materialized; edges consumed
-    dist
+    propagate(edges, col("w"), Some(seeds), maxHops, maximize = false,
+      "dist", LongType)
   }
 
   /** Synchronous label propagation (fixed `rounds`) — the cheap
@@ -1397,20 +1314,17 @@ object Graph {
     * snapshot — `spark.catalog.clearCache()` once consumed.
     */
   def sccLabels(edges: DataFrame, maxDoublings: Int = 6): DataFrame = {
-    val base = snapshot(edges.select(col("src"), col("dst"))
+    var (r, n) = countedSnapshot(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    val nodes = snapshot(base.select(col("src").as("id"))
-      .unionAll(base.select(col("dst").as("id"))).distinct())
-    var r = base
-    var n = r.count()
+    val nodes = snapshot(r.select(col("src").as("id"))
+      .unionAll(r.select(col("dst").as("id"))).distinct())
     var fixed = n == 0L
     var i = 0
     while (!fixed && i < maxDoublings) {
-      val grown = snapshot(
+      val (grown, m) = countedSnapshot(
         r.as("x").join(r.as("y"), col("x.dst") === col("y.src"))
           .select(col("x.src").as("src"), col("y.dst").as("dst"))
           .unionAll(r).distinct())
-      val m = grown.count()
       fixed = m == n
       release(r)
       r = grown
@@ -1464,19 +1378,16 @@ object Graph {
     val sym = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst")).distinct()
-    val base = snapshot(sym.withColumn("p", lit(1)))
-    val nodes = snapshot(base.select(col("src").as("id")).distinct())
-    var r = base
-    var n = r.count()
+    var (r, n) = countedSnapshot(sym.withColumn("p", lit(1)))
+    val nodes = snapshot(r.select(col("src").as("id")).distinct())
     var fixed = n == 0L
     var i = 0
     while (!fixed && i < maxDoublings) {
-      val grown = snapshot(
+      val (grown, m) = countedSnapshot(
         r.as("x").join(r.as("y"), col("x.dst") === col("y.src"))
           .select(col("x.src").as("src"), col("y.dst").as("dst"),
             pmod(col("x.p") + col("y.p"), lit(2)).as("p"))
           .unionAll(r).distinct())
-      val m = grown.count()
       fixed = m == n
       release(r)
       r = grown

@@ -2,10 +2,10 @@ package graft.ext
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Gap-based sessionization of an event stream, in two equivalent
   * forms: a batch window query (DuckDB-oracle-able) and a Structured
@@ -302,92 +302,4 @@ object Sessionize {
                            queryName: String = "sessions"): DataFrame =
     EventsStream.runToMemory(
       sessionizeStream(spark, path, gapSeconds), queryName, OutputMode.Append)
-
-  /** The same gap sessionizer on Spark 4's `transformWithState` — the
-    * successor API to `flatMapGroupsWithState`: typed state handles
-    * (`ValueState`), explicit event-time timers, and a RocksDB-backed
-    * state store (changelog-checkpointable; TWS REQUIRES the RocksDB
-    * provider — the caller's session clone sets it). Semantics are
-    * identical to [[sessionizeStream]] and unit-gated equal on the
-    * same fixtures.
-    *
-    * Timer hygiene: each state update clears the key's previous timers
-    * before registering the new close timer, so a key carries exactly
-    * one live timer — stale timers would otherwise fire early and the
-    * processor would need expiry-vs-state reconciliation.
-    */
-  class GapSessionProcessor(gapSeconds: Int)
-      extends StatefulProcessor[String, (Timestamp, String), SessionOut] {
-    private val gapMicros = gapSeconds * 1000000L
-    @transient private var open: ValueState[OpenSession] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getValueState[OpenSession]("open",
-        Encoders.product[OpenSession], TTLConfig.NONE)
-
-    private def tsOf(micros: Long): Timestamp = {
-      val t = new Timestamp(micros / 1000000 * 1000)
-      t.setNanos((micros % 1000000).toInt * 1000)
-      t
-    }
-    private def toOut(key: String, s: OpenSession) =
-      SessionOut(key, tsOf(s.startMicros), tsOf(s.endMicros), s.n)
-
-    override def handleInputRows(key: String, rows: Iterator[(Timestamp, String)],
-                                 timerValues: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.map(r => r._1.getTime * 1000 +
-        (r._1.getNanos / 1000) % 1000).toSeq.sorted
-      var cur = if (open.exists()) Option(open.get()) else None
-      val closed = List.newBuilder[SessionOut]
-      sorted.foreach { t =>
-        cur match {
-          case Some(s) if t - s.endMicros <= gapMicros =>
-            cur = Some(s.copy(endMicros = math.max(s.endMicros, t), n = s.n + 1))
-          case Some(s) =>
-            closed += toOut(key, s)
-            cur = Some(OpenSession(t, t, 1))
-          case None =>
-            cur = Some(OpenSession(t, t, 1))
-        }
-      }
-      cur.foreach { s =>
-        open.update(s)
-        getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-        getHandle.registerTimer(s.endMicros / 1000 + gapSeconds * 1000L)
-      }
-      closed.result().iterator
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-                                    expiredTimerInfo: ExpiredTimerInfo): Iterator[SessionOut] = {
-      val out = if (open.exists()) List(toOut(key, open.get())) else Nil
-      open.clear()
-      out.iterator
-    }
-  }
-
-  /** [[sessionizeStream]] re-expressed on `transformWithState` (see
-    * [[GapSessionProcessor]]). The session clone pins the RocksDB
-    * state-store provider, which TWS requires.
-    */
-  def sessionizeStreamTWS(spark: SparkSession, path: String,
-                          gapSeconds: Int): Dataset[SessionOut] = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import s.implicits._
-    EventsStream.singleFileStream(s, path)
-      .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
-      .withWatermark("ts", "0 seconds")
-      .as[(Timestamp, String)]
-      .groupByKey(_._2)
-      .transformWithState(new GapSessionProcessor(gapSeconds),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Run the bounded TWS stream to completion (memory sink). */
-  def runSessionStreamTWSOnce(spark: SparkSession, path: String, gapSeconds: Int,
-                              queryName: String = "sessions_tws"): DataFrame =
-    EventsStream.runToMemory(
-      sessionizeStreamTWS(spark, path, gapSeconds), queryName, OutputMode.Append)
 }

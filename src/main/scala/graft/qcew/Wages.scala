@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *     invalid-code exclusion a broadcast `left_anti` join — no shuffle
   *     of the fact side, which is what survives a 100 TB fact table.
   *   - The enriched frame feeds two actions (aggregate + picklist), so
-  *     callers should `cache()` it (see [[WagesData.cached]]).
+  *     callers should `cache()` it.
   */
 object Wages {
 

@@ -255,12 +255,11 @@ private[graft] object QueriesGraph {
       val e = ScaleOps.sizedEdges(
         coPurchasePairs(s, dir, minCount = 2)
           .select(col("id1").as("src"), col("id2").as("dst")))
-      // truncateLineage: the rank frame is referenced TWICE per round
-      // (dangling scalar + contribution join), so without per-round
-      // snapshots the pr subtree re-executes 2^iters times; three
-      // node-sized checkpoints are far cheaper (measured 4.6 → 3.5 s
-      // at sf0.1, and the gap widens with iters)
-      Graph.pageRankDirected(e, iters = 3, truncateLineage = true).orderBy("id")
+      // pageRankDirected snapshots every round: the rank frame is
+      // referenced TWICE per round (dangling scalar + contribution
+      // join), so without the cut the pr subtree re-executes 2^iters
+      // times (measured 4.6 → 3.5 s at sf0.1 with the snapshots)
+      Graph.pageRankDirected(e, iters = 3).orderBy("id")
     }),
 
 
@@ -505,8 +504,8 @@ private[graft] object QueriesGraph {
     // DAG (the q_dag_layers input with deterministic integer stage
     // costs w = 1 + (src·7 + dst) % 5) — cost(v) = the most expensive
     // dependency chain ending at v, the number every pipeline latency
-    // budget starts from. Max-plus propagation in exact longs with the
-    // Σ-monotone early exit (Graph.criticalPath scaladoc).
+    // budget starts from. Max-plus propagation in exact longs with an
+    // early exit at the fixpoint (Graph.criticalPath scaladoc).
     "q_critical_path" -> ((s, dir) => {
       val e = coPurchasePairs(s, dir, minCount = 1)
         .select((col("id1") % 200).as("src"), (col("id2") % 200).as("dst"))

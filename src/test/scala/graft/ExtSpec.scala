@@ -83,12 +83,12 @@ class ExtSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2")
     // force the DISTRIBUTED loop (the fast path would bypass the
     // checkpoint machinery this test exists to exercise)
-    spark.conf.set("spark.graft.dedup.localCcEdges", "0")
+    spark.conf.set("spark.graft.graph.localEdges", "0")
     try {
       val got = Dedup.connectedComponents(pairs, checkpointDir = Some(dir))
         .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(got.toSeq == Seq((1L, 1L), (2L, 1L), (3L, 1L)))
-    } finally spark.conf.unset("spark.graft.dedup.localCcEdges")
+    } finally spark.conf.unset("spark.graft.graph.localEdges")
   }
 
   test("dedup: connected components on empty pair set leaves all docs singleton") {
@@ -391,7 +391,7 @@ class ExtSpec extends SparkSpec {
     // ~7 rounds, so maxIter=2 must throw rather than return split labels
     // (distributed loop forced — the union-find fast path never splits)
     val chain = (1L to 7L).map(i => (i, i + 1)).toDF("id1", "id2")
-    spark.conf.set("spark.graft.dedup.localCcEdges", "0")
+    spark.conf.set("spark.graft.graph.localEdges", "0")
     try {
       intercept[IllegalStateException] {
         Dedup.connectedComponents(chain, maxIter = 2)
@@ -399,7 +399,7 @@ class ExtSpec extends SparkSpec {
       val labels = Dedup.connectedComponents(chain, maxIter = 20)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(labels.length == 8 && labels.forall(_._2 == 1L))
-    } finally spark.conf.unset("spark.graft.dedup.localCcEdges")
+    } finally spark.conf.unset("spark.graft.graph.localEdges")
   }
 
   test("dedup: rows-per-band tracks the target threshold monotonically") {
@@ -575,41 +575,6 @@ class ExtSpec extends SparkSpec {
       ("a", ts(0), ts(120), 3L),
       ("a", ts(1000), ts(1000), 1L),
       ("b", ts(50), ts(80), 2L)))
-  }
-
-  test("sessionize: transformWithState form equals flatMapGroupsWithState on the fixture") {
-    import java.sql.Timestamp
-    val t0 = 1700000000L * 1000
-    def ts(offsetSec: Long) = new Timestamp(t0 + offsetSec * 1000)
-    val fixture = Seq(
-      ("a", ts(0)), ("a", ts(60)), ("a", ts(120)),
-      ("a", ts(1000)),
-      ("b", ts(50)), ("b", ts(80)),
-      ("b", ts(2000))
-    ).toDF("event_type", "ts")
-    val dir = java.nio.file.Files.createTempDirectory("sessfixtws")
-    fixture.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    val file = java.nio.file.Files.list(dir).iterator().asScala
-      .map(_.toString).filter(_.endsWith(".parquet")).toSeq.head
-    def collect(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3)))
-      .toSet
-    val tws = collect(graft.ext.Sessionize.runSessionStreamTWSOnce(spark, file, gapSeconds = 300))
-    assert(tws == Set(
-      ("a", ts(0), ts(120), 3L),
-      ("a", ts(1000), ts(1000), 1L),
-      ("b", ts(50), ts(80), 2L)))
-    // and on real data both stateful APIs emit the same session set
-    val real = s"${SparkSpec.sf0001}/events.parquet"
-    val rdir = java.nio.file.Files.createTempDirectory("sesstwsreal")
-    EventsStream.readEvents(spark, real).select("ts", "event_type")
-      .coalesce(1).write.mode("overwrite").parquet(rdir.toString)
-    val rfile = java.nio.file.Files.list(rdir).iterator().asScala
-      .map(_.toString).filter(_.endsWith(".parquet")).toSeq.head
-    val a = collect(graft.ext.Sessionize.runSessionStreamOnce(spark, rfile, 300, "s_fmgws"))
-    val b = collect(graft.ext.Sessionize.runSessionStreamTWSOnce(spark, rfile, 300, "s_tws"))
-    assert(a == b, "the two stateful APIs diverged")
-    assert(b.nonEmpty)
   }
 
   test("sessionize: streamed sessions are a subset of the batch sessions") {

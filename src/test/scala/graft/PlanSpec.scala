@@ -275,7 +275,7 @@ class PlanSpec extends SparkSpec {
   test("q_dedup_ensemble: assignment consumes materialized CC labels, no cartesian") {
     // CC runs EAGERLY inside the query builder, so the returned plan
     // starts from the MATERIALIZED label frame, not a re-derivation of
-    // the pair joins: below the localCcEdges threshold that frame is
+    // the pair joins: below the localEdges cap that frame is
     // the union-find fast path's RDD scan (Scan[obj — round-11: an
     // ExternalRDD reference, no longer a LocalRelation re-serialized
     // into every consuming plan); above it, the distributed loop's

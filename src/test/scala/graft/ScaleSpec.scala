@@ -416,7 +416,7 @@ class ScaleSpec extends SparkSpec {
     val beforeCC = sc.getPersistentRDDs.size
     // force the distributed loop: the union-find fast path has no
     // per-round snapshots to leak in the first place
-    spark.conf.set("spark.graft.dedup.localCcEdges", "0")
+    spark.conf.set("spark.graft.graph.localEdges", "0")
     try {
       val cc = graft.ext.Dedup.connectedComponents(path)
       assert(cc.count() == 13)
@@ -424,7 +424,7 @@ class ScaleSpec extends SparkSpec {
         "connectedComponents must release superseded label snapshots")
       graft.ext.Graph.release(cc)
     } finally {
-      spark.conf.unset("spark.graft.dedup.localCcEdges")
+      spark.conf.unset("spark.graft.graph.localEdges")
       spark.conf.unset("spark.graft.graph.localEdges")
     }
   }
@@ -443,13 +443,26 @@ class ScaleSpec extends SparkSpec {
     val wdag = dag.select(col("src"), col("dst"),
       (col("src") % 3 + 1).as("w"))
     val seeds = Seq(0L, 7L).toDF("id")
+    // a later round improves an already-reached node: node 3 is first
+    // reached over the direct edge, then bettered over the 3-edge path
+    // (dist 10 → 3 in short1; cost 10 → 20 → 30 in long1) — a frontier
+    // that forgot a node once reached, or joined only newly reached
+    // nodes, stops at the first value
+    val short1 = Seq((0L, 3L, 10L), (0L, 1L, 1L), (1L, 2L, 1L), (2L, 3L, 1L))
+      .toDF("src", "dst", "w")
+    val long1 = Seq((0L, 3L, 1L), (0L, 1L, 10L), (1L, 2L, 10L), (2L, 3L, 10L))
+      .toDF("src", "dst", "w")
+    val s0 = Seq(0L).toDF("id")
     def all() = Seq(
       m(graft.ext.Graph.bfsHops(edges, seeds, maxHops = 2)),
       m(graft.ext.Graph.bfsHops(edges, seeds, maxHops = 12)),
       m(graft.ext.Graph.sssp(wdag, seeds, maxHops = 3)),
       m(graft.ext.Graph.longestPathLayers(dag, maxRounds = 4)), // partial
       m(graft.ext.Graph.longestPathLayers(dag, maxRounds = 20)),
-      m(graft.ext.Graph.criticalPath(wdag, maxRounds = 20)))
+      m(graft.ext.Graph.criticalPath(wdag, maxRounds = 20))) ++
+      Seq(short1, long1).flatMap(g => Seq(2, 5).flatMap(r => Seq(
+        m(graft.ext.Graph.sssp(g, s0, maxHops = r)),
+        m(graft.ext.Graph.criticalPath(g, maxRounds = r)))))
     val fast = all() // default conf: local fast path (13 edges < cap)
     spark.conf.set("spark.graft.graph.localEdges", "0")
     try {
@@ -458,12 +471,87 @@ class ScaleSpec extends SparkSpec {
         assert(f === d, s"fast path diverged from distributed at case $i")
       }
     } finally spark.conf.unset("spark.graft.graph.localEdges")
+    // the new cases' values, in all() order: sssp then criticalPath at
+    // budgets 2 and 5, short1 then long1
+    assert(fast.drop(6) === Seq(
+      Map(0L -> "0", 1L -> "1", 2L -> "2", 3L -> "10"),
+      Map(0L -> "0", 1L -> "1", 2L -> "2", 3L -> "10"),
+      Map(0L -> "0", 1L -> "1", 2L -> "2", 3L -> "3"),
+      Map(0L -> "0", 1L -> "1", 2L -> "2", 3L -> "10"),
+      Map(0L -> "0", 1L -> "10", 2L -> "20", 3L -> "1"),
+      Map(0L -> "0", 1L -> "10", 2L -> "20", 3L -> "20"),
+      Map(0L -> "0", 1L -> "10", 2L -> "20", 3L -> "1"),
+      Map(0L -> "0", 1L -> "10", 2L -> "20", 3L -> "30")))
+  }
+
+  test("propagation loops: one Spark action per round, fast paths off") {
+    import spark.implicits._
+    // Dataset actions of one call, counted by a QueryExecutionListener.
+    // Listener events arrive in order, so a marker query before and
+    // after the call brackets exactly the call's own actions.
+    def actions(call: => Any): Int = {
+      val marks = new java.util.concurrent.atomic.AtomicInteger
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+          if (qe.analyzed.output.exists(_.name == "action_count_mark")) {
+            if (marks.incrementAndGet() == 2) done.countDown()
+          } else if (marks.get == 1) n.incrementAndGet()
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+          if (marks.get == 1) n.incrementAndGet()
+      }
+      def mark() = spark.range(1).toDF("action_count_mark").collect()
+      spark.listenerManager.register(l)
+      try {
+        mark(); call; mark()
+        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.listenerManager.unregister(l)
+      n.get
+    }
+    val G = graft.ext.Graph
+    def chain(len: Int) = (0L until len.toLong).map(i => (i, i + 1L))
+      .toDF("src", "dst")
+    val sym = G.symmetrize(chain(20).toDF("id1", "id2"))
+    val dag = chain(20)
+    val wdag = dag.withColumn("w", lit(2L))
+    val seed = Seq(0L).toDF("id")
+    // a triangle plus a pendant edge: the 3-truss peel drops the
+    // pendant in round 1 and finds the fixpoint in round 2
+    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
+    val triSym = G.symmetrize(tri.toDF("id1", "id2"))
+    spark.conf.set("spark.graft.graph.localEdges", "0")
+    try {
+      // (name, call with fewer rounds, call with more, extra rounds):
+      // budgets below the depth of the chain, so every round runs;
+      // closure squaring needs ceil(log2 L) + 1 doublings on an
+      // L-edge chain (2 for L = 2, 4 for L = 8)
+      val cases = Seq[(String, () => Long, () => Long, Int)](
+        ("bfsHops", () => G.bfsHops(sym, seed, 2).count(),
+          () => G.bfsHops(sym, seed, 5).count(), 3),
+        ("longestPathLayers", () => G.longestPathLayers(dag, 2).count(),
+          () => G.longestPathLayers(dag, 5).count(), 3),
+        ("criticalPath", () => G.criticalPath(wdag, 2).count(),
+          () => G.criticalPath(wdag, 5).count(), 3),
+        ("sccLabels", () => G.sccLabels(chain(2)).count(),
+          () => G.sccLabels(chain(8)).count(), 2),
+        ("bipartiteComponents", () => G.bipartiteComponents(chain(2)).count(),
+          () => G.bipartiteComponents(chain(8)).count(), 2),
+        ("kTrussPeel", () => G.kTrussPeel(triSym, k = 3, rounds = 1).count(),
+          () => G.kTrussPeel(triSym, k = 3, rounds = 4).count(), 1))
+      cases.foreach { case (name, few, more, n) =>
+        val (a, b) = (actions(few()), actions(more()))
+        assert(b - a == n, s"$name: $a actions, then $b with $n more rounds")
+      }
+    } finally spark.conf.unset("spark.graft.graph.localEdges")
   }
 
   test("connectedComponentsStar: equals min-label CC on path, grid, random, and singleton graphs") {
     import spark.implicits._
     // both DISTRIBUTED algorithms under test, not the shared fast path
-    spark.conf.set("spark.graft.dedup.localCcEdges", "0")
+    spark.conf.set("spark.graft.graph.localEdges", "0")
     def labels(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // high-diameter path (the star algorithm's motivating case), two
@@ -484,7 +572,7 @@ class ScaleSpec extends SparkSpec {
       (i % 97, (i * i * 31 + 7) % 97)).filter(p => p._1 != p._2).toDF("id1", "id2")
     val rl = labels(graft.ext.Dedup.connectedComponents(rand))
     assert(labels(graft.ext.Dedup.connectedComponentsStar(rand)) === rl)
-    spark.conf.unset("spark.graft.dedup.localCcEdges")
+    spark.conf.unset("spark.graft.graph.localEdges")
     // fast-path parity: default conf routes these same graphs through
     // driver union-find — labels must be bit-identical to the
     // distributed results captured above, through BOTH entry points
