@@ -105,10 +105,10 @@ object Affinity {
     // expansion (freq twice more) — each pruning different columns, so
     // nothing ReusedExchange can dedupe; without the cache the full
     // scan+distinct chain replays per consumer (round 14, guide §2.4)
-    val bi = basketItems(df, basket, item).persist()
-    val freq = frequentItems(bi, minItemCount).persist()
+    val bi = Materialize.persist(basketItems(df, basket, item))
+    val freq = Materialize.persist(frequentItems(bi, minItemCount))
     val total = bi.select(countDistinct(col("basket")).as("n_baskets"))
-    Caching.unpersistAfterUse(
+    Materialize.releaseAfterUse(
       tripleCounts(bi, freq)
         .filter(col("n_triple") >= minTripleCount)
         .crossJoin(broadcast(total))
@@ -127,10 +127,10 @@ object Affinity {
   def associationRules(df: DataFrame, basket: Column, item: Column,
       minItemCount: Long, minPairCount: Long): DataFrame = {
     // bi/freq persist + self-release: see [[frequentTriples]]
-    val bi = basketItems(df, basket, item).persist()
-    val freq = frequentItems(bi, minItemCount).persist()
+    val bi = Materialize.persist(basketItems(df, basket, item))
+    val freq = Materialize.persist(frequentItems(bi, minItemCount))
     val total = bi.select(countDistinct(col("basket")).as("n_baskets"))
-    Caching.unpersistAfterUse(pairCounts(bi, freq)
+    Materialize.releaseAfterUse(pairCounts(bi, freq)
       .filter(col("n_pair") >= minPairCount)
       .join(broadcast(freq.withColumnRenamed("item", "item1")
         .withColumnRenamed("n_item", "n1")), "item1")
@@ -165,11 +165,10 @@ object Affinity {
     // bi/freq persist + self-release: see [[frequentTriples]]; pairs
     // additionally persists because the both-directions union consumes
     // the whole pair derivation twice
-    val bi = basketItems(df, basket, item).persist()
-    val freq = frequentItems(bi, minItemCount).persist()
-    val pairs = pairCounts(bi, freq)
-      .filter(col("n_pair") >= minPairCount)
-      .persist()
+    val bi = Materialize.persist(basketItems(df, basket, item))
+    val freq = Materialize.persist(frequentItems(bi, minItemCount))
+    val pairs = Materialize.persist(pairCounts(bi, freq)
+      .filter(col("n_pair") >= minPairCount))
     val both = pairs.unionAll(pairs.select(col("item2").as("item1"),
       col("item1").as("item2"), col("n_pair")))
     val scored = both
@@ -180,7 +179,7 @@ object Affinity {
       .select(col("item1"), col("item2"), col("n_pair"),
         round(col("n_pair").cast("double") /
           sqrt((col("n1") * col("n2")).cast("double")), 6).as("cosine"))
-    Caching.unpersistAfterUse(
+    Materialize.releaseAfterUse(
       scored
         .withColumn("rank", row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy("item1").orderBy(col("cosine").desc, col("item2"))))
@@ -200,10 +199,10 @@ object Affinity {
   def pmiPairs(df: DataFrame, doc: Column, term: Column,
       minTermCount: Long, minPairCount: Long): DataFrame = {
     // bi/freq persist + self-release: see [[frequentTriples]]
-    val bi = basketItems(df, doc, term).persist()
-    val freq = frequentItems(bi, minTermCount).persist()
+    val bi = Materialize.persist(basketItems(df, doc, term))
+    val freq = Materialize.persist(frequentItems(bi, minTermCount))
     val total = bi.select(countDistinct(col("basket")).as("n_docs"))
-    Caching.unpersistAfterUse(pairCounts(bi, freq)
+    Materialize.releaseAfterUse(pairCounts(bi, freq)
       .filter(col("n_pair") >= minPairCount)
       .join(broadcast(freq.withColumnRenamed("item", "item1")
         .withColumnRenamed("n_item", "n1")), "item1")

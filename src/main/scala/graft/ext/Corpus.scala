@@ -117,7 +117,7 @@ object Corpus {
     * gram build at 0.83 s of the 3.09 s total — the rest was ~20
     * stages of scheduling over kilobyte frames). The gram table and
     * `pairs` are persisted and self-release after the result's first
-    * materialization ([[Caching.unpersistAfterUse]]). Duplicate rows
+    * materialization ([[Materialize.releaseAfterUse]]). Duplicate rows
     * in `pairs` are deduped by the final rollup (the join form
     * multiplied them — aligned eval sets carry distinct pairs either
     * way).
@@ -131,7 +131,7 @@ object Corpus {
     val toks = docs.select(col(idCol).as("d"),
       TextStats.tokens(col(textCol)).as("l"))
     // one pass: o = 1 unigrams, o = 2 bigrams (the zip_with form)
-    val grams = toks.select(col("d"), explode(expr(
+    val grams = Materialize.persist(toks.select(col("d"), explode(expr(
         """concat(
           |  transform(l, x -> struct(1 AS o, x AS g)),
           |  zip_with(slice(l, 1, greatest(size(l) - 1, 0)),
@@ -139,16 +139,14 @@ object Corpus {
           |           (x, y) -> struct(2 AS o, concat(x, ' ', y) AS g)))""".stripMargin))
         .as("og"))
       .select(col("d"), col("og.o").as("o"), col("og.g").as("g"))
-      .groupBy("d", "o", "g").agg(count(lit(1)).as("c"))
-      .persist()
+      .groupBy("d", "o", "g").agg(count(lit(1)).as("c")))
     // persist `pairs` only if the CALLER hasn't: the CacheManager keys
     // entries by plan, so persisting (and later self-releasing) a frame
     // the caller independently cached would evict THEIR entry after this
     // operator's first materialization (round-14 ADVICE). A
     // caller-cached frame is reused as-is and never released here.
-    val callerCachedPairs =
-      pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pairsP = if (callerCachedPairs) pairs else pairs.persist()
+    val callerCachedPairs = pairs.storageLevel.isValid
+    val pairsP = if (callerCachedPairs) pairs else Materialize.persist(pairs)
     val refTot = grams.groupBy(col("d").as("ref_id"), col("o"))
       .agg(sum("c").as("tot"))
     val clipped = pairsP
@@ -164,7 +162,7 @@ object Corpus {
       pairs.sparkSession.range(1, 3).select(col("id").cast("int").as("o")))
     def rec(tot: Column, ov: Column): Column =
       when(tot > 0, round(ov.cast("double") / tot.cast("double"), 6))
-    Caching.unpersistAfterUse(
+    Materialize.releaseAfterUse(
       spine.join(clipped, Seq("cand_id", "ref_id", "o"), "left")
         .join(refTot, Seq("ref_id", "o"), "left")
         .na.fill(0L, Seq("ov", "tot"))
@@ -434,7 +432,7 @@ object Corpus {
     * per-round shuffle is vocabulary-sized, never token-sized), the
     * merge application is a NARROW per-word fold (no shuffle), and
     * the per-round state is snapshotted with its predecessor
-    * [[Graph.release]]d, the iterative-kernel discipline. The one
+    * released, the iterative-kernel discipline. The one
     * driver scalar per round is the winning rule itself — the A4-mode
     * bounded collect: k rules ARE the model being trained. Exhausting
     * the vocabulary ends the loop early on any engine (an empty top-1
@@ -445,12 +443,10 @@ object Corpus {
                textCol: String = "text"): DataFrame = {
     require(rounds >= 1 && rounds <= 32, "rounds must be in [1, 32]")
     val spark = docs.sparkSession
-    def snapshot(df: DataFrame): DataFrame = df.localCheckpoint(eager = true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val wc = docs.select(explode(TextStats.tokens(col(textCol))).as("w"))
       .filter(col("w").rlike("^[a-z0-9]+$") && length(col("w")) >= 2)
       .groupBy("w").agg(count(lit(1)).as("n"))
-    var state = snapshot(wc.select(col("n"), concat_ws("|", expr(
+    var state = Materialize.snapshot(wc.select(col("n"), concat_ws("|", expr(
       "transform(sequence(1, length(w)), i -> substring(w, i, 1))")).as("seq")))
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, Long)]
@@ -484,15 +480,15 @@ object Corpus {
              |    WHEN (acc = '$a' OR endswith(acc, '|$a')) AND x = '$b'
              |    THEN concat(substring(acc, 1, length(acc) - ${a.length}), '$a$b')
              |    ELSE concat(acc, '|', x) END)""".stripMargin
-        val next = snapshot(state
+        val next = Materialize.snapshot(state
           .select(col("n"), split(col("seq"), "\\|").as("l"))
           .select(col("n"), expr(fold).as("seq")))
-        Graph.release(state)
+        Materialize.release(state)
         state = next
       }
       r += 1
     }
-    Graph.release(state)
+    Materialize.release(state)
     import spark.implicits._
     merges.toSeq.toDF("round", "lhs", "rhs", "n_pair")
       .select(col("round").cast("int").as("round"), col("lhs"), col("rhs"),

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Portability note: every hash here is built from `md5` so results are
   * reproducible across engines (the DuckDB oracle computes the same
   * hex). `xxhash64` would be faster but is Spark-specific; for a 100 TB
-  * run swap [[hashExpr]] to `xxhash64` — the operator shapes are
+  * run swap [[permDigest]] to `xxhash64` — the operator shapes are
   * hash-agnostic.
   *
   * Scale design:
@@ -25,6 +25,10 @@ import org.apache.spark.sql.functions._
   *     `maxBucketSize` hard-caps pathological buckets.
   *   - Pairwise n-gram Jaccard is exact verification, meant to run on
   *     LSH candidates (or small corpora), never the full cross product.
+  *
+  * Storage follows [[Materialize]]'s rules; the connected-components
+  * operators return a label snapshot on their distributed path, the
+  * caller's to [[Materialize.release]].
   */
 object Dedup {
 
@@ -68,18 +72,12 @@ object Dedup {
         i => array_join(slice(toks, i + 1, lit(n)), " ")))
   }
 
-  /** Cross-engine-stable 'permutation' hash for MinHash: the `perm`-th
-    * disjoint 8-hex-char slice of one md5 per shingle (one-permutation
-    * style — one digest feeds up to 4 independent 32-bit hashes, 4×
-    * cheaper than hashing per permutation). Lexicographic min over a
-    * doc's shingles of a fixed-length hex slice is a valid min-wise
-    * signature per permutation.
-    */
-  def hashExpr(perm: Int, shingle: Column): Column =
-    substring(permDigest(perm / 4, shingle), perm % 4 * 8 + 1, 8)
-
-  /** One md5 digest covers 4 permutation slices; digest group `j` > 0
-    * salts the shingle to stay independent of group 0.
+  /** Cross-engine-stable 'permutation' hashes for MinHash: one md5
+    * digest per shingle covers 4 permutations as disjoint 8-hex-char
+    * slices (one-permutation style — 4× cheaper than hashing per
+    * permutation; the lexicographic min of a fixed-length hex slice
+    * over a doc's shingles is a valid min-wise signature). Digest group
+    * `j` > 0 salts the shingle to stay independent of group 0.
     */
   private def permDigest(j: Int, shingle: Column): Column =
     if (j == 0) md5(shingle) else md5(concat(lit(s"$j:"), shingle))
@@ -531,6 +529,10 @@ object Dedup {
     * ~0.4 s of fixed scheduling/checkpoint cost for a 12 k-edge graph,
     * so 11 rounds cost ~4.5 s where union-find costs milliseconds.
     * Labels are identical (component minimum).
+    *
+    * Storage: the pair and edge persists are released before returning;
+    * the distributed path returns its final label snapshot, the
+    * caller's to [[Materialize.release]].
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
                           id1Col: String = "id1", id2Col: String = "id2",
@@ -539,32 +541,28 @@ object Dedup {
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     // persist the pair set FIRST: the sizing count and the symmetrizing
     // union below read it, and `pairs` is typically an expensive LSH plan
-    val p = pairs.persist()
+    val p = Materialize.persist(pairs)
     val nPairs = p.count()
     val idType = p.schema(id1Col).dataType
     if (Graph.integralType(idType) && nPairs <= Graph.localEdgeCap(spark)) {
       val out = localMinLabelComponents(p, id1Col, id2Col, idType)
-      p.unpersist()
+      Materialize.release(p)
       return out
     }
-    val edges = p.select(col(id1Col).as("src"), col(id2Col).as("dst"))
-      .union(p.select(col(id2Col).as("src"), col(id1Col).as("dst")))
-      .distinct()
-      .repartition(ScaleOps.graphPartitions(nPairs), col("src"))
-      .persist()
+    val edges = Materialize.persist(
+      p.select(col(id1Col).as("src"), col(id2Col).as("dst"))
+        .union(p.select(col(id2Col).as("src"), col(id1Col).as("dst")))
+        .distinct()
+        .repartition(ScaleOps.graphPartitions(nPairs), col("src")))
     val (labels, converged) = Graph.relax(edges,
       edges.select(col("src").as("id"), col("src").as("v")).distinct(),
-      maxIter, maximize = false, "label",
-      df => if (checkpointDir.isDefined) df.checkpoint(eager = true)
-        else df.localCheckpoint(eager = true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    p.unpersist()
-    edges.unpersist()
+      maxIter, maximize = false, "label", reliable = checkpointDir.isDefined)
+    Materialize.release(p, edges)
     // correctness-first: a silent non-converged result would be WRONG
     // labels (components split in two), not slow labels — fail loudly
     // and let the caller raise maxIter (rounds needed = graph diameter)
     if (!converged) {
-      Graph.release(labels)
+      Materialize.release(labels)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds; " +
           "component diameter exceeds maxIter — raise it")
@@ -630,18 +628,20 @@ object Dedup {
     * label = component minimum, every node of the edge set present.
     *
     * Each round is two map-side-combined aggregates + two edge-keyed
-    * joins; the edge set is snapshotted per round (serialized storage,
-    * superseded snapshots released) and convergence is detected inside
-    * the same action via an order-independent edge-set fingerprint
-    * (count + XOR of per-edge xxhash64 — a 64-bit collision while the
-    * count also matches is negligible, and a spurious EARLY match is
-    * harmless only at a true fixpoint; the closing star-shape check
-    * below fails loudly if convergence was misdetected).
+    * joins; the edge set is snapshotted per round (superseded snapshots
+    * released) and convergence is detected inside the same action via
+    * an order-independent edge-set fingerprint (count + XOR of per-edge
+    * xxhash64 — a 64-bit collision while the count also matches is
+    * negligible, and a spurious EARLY match is harmless only at a true
+    * fixpoint; the closing star-shape check below fails loudly if
+    * convergence was misdetected).
+    *
+    * Storage: every internal snapshot is released before returning;
+    * the distributed path returns its label snapshot, the caller's to
+    * [[Materialize.release]].
     */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 60): DataFrame = {
     val spark = pairs.sparkSession
-    def snapshot(df: DataFrame): DataFrame = df.localCheckpoint(eager = true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.select(col("src").as("u"), col("dst").as("v"))
         .union(e.select(col("dst").as("u"), col("src").as("v")))
@@ -663,56 +663,68 @@ object Dedup {
     // min-label: a node exists iff it appears in the edge set) but
     // large-star would drop an isolated self-loop — strip them here and
     // re-attach unlabeled ones as their own component at the end
-    val raw = snapshot(pairs.select(col(pairs.columns.head).as("src"),
-      col(pairs.columns(1)).as("dst")))
     // same size-gated union-find fast path as [[connectedComponents]]
     // (identical labels; self-loops resolve to themselves either way);
-    // the count scans the just-materialized snapshot blocks, not the
-    // caller's plan
+    // the gate's count rides on the snapshot's own job
+    val (raw, Row(nRaw: Long)) = Materialize.snapshot(
+      pairs.select(col(pairs.columns.head).as("src"), col(pairs.columns(1)).as("dst")),
+      count(lit(1)))
     val idType = raw.schema("src").dataType
-    if (Graph.integralType(idType) && raw.count() <= Graph.localEdgeCap(spark)) {
+    if (Graph.integralType(idType) && nRaw <= Graph.localEdgeCap(spark)) {
       val out = localMinLabelComponents(raw, "src", "dst", idType)
-      Graph.release(raw)
+      Materialize.release(raw)
       return out
     }
-    val selfNodes = raw.filter(col("src") === col("dst"))
-      .select(col("src").as("id")).distinct()
-    var edges = snapshot(raw.filter(col("src") =!= col("dst")))
+    var edges = Materialize.snapshot(raw.filter(col("src") =!= col("dst")))
     var fp = (-1L, -1L)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val obs = org.apache.spark.sql.Observation(s"ccs_round_$i")
-      val next = snapshot(
-        smallStar(largeStar(edges))
-          .observe(obs, count(lit(1)).as("n"),
-            // bit_xor: order-independent, overflow-free under ANSI;
-            // the edge set is distinct so no two rows cancel
-            expr("bit_xor(xxhash64(src, dst))").as("h")))
-      Graph.release(edges)
+      val (next, Row(n: Long, h)) = Materialize.snapshot(
+        smallStar(largeStar(edges)), count(lit(1)),
+        // bit_xor: order-independent, overflow-free under ANSI; the
+        // edge set is distinct so no two rows cancel
+        expr("bit_xor(xxhash64(src, dst))"))
+      Materialize.release(edges)
       edges = next
-      val nfp = (obs.get("n").asInstanceOf[Long],
-        Option(obs.get("h")).fold(0L)(_.asInstanceOf[Long]))
+      val nfp = (n, Option(h).fold(0L)(_.asInstanceOf[Long]))
       converged = nfp == fp
       fp = nfp
       i += 1
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds")
-    // star-forest shape proof: at a true fixpoint no node is both a
-    // leaf (src) and a center (dst) — this turns the astronomically
-    // unlikely fingerprint-collision misdetection into a loud failure
-    if (!edges.select(col("src")).intersect(edges.select(col("dst"))).isEmpty)
+    if (!converged) {
+      Materialize.release(raw, edges)
+      throw new IllegalStateException(
+        s"connectedComponentsStar did not converge in $maxIter rounds")
+    }
+    // at the star fixpoint every edge points at its component minimum:
+    // a leaf (src) takes its center (dst), a center itself, and a
+    // self-loop node no edge reaches is its own component. One job
+    // snapshots the labels and proves the star-forest shape: the edge
+    // labels of a node must agree — a node that is both a leaf and a
+    // center, or a leaf of two centers, would get two — which turns the
+    // astronomically unlikely fingerprint-collision misdetection into a
+    // loud failure. A self-loop node inside a component keeps the
+    // component minimum, which is at most its own id.
+    val (labels, Row(split: Long)) = Materialize.snapshot(
+      edges.select(col("src").as("id"), col("dst").as("label"), lit(true).as("e"))
+        .unionAll(edges.select(col("dst").as("id"), col("dst").as("label"), lit(true).as("e")))
+        .unionAll(raw.filter(col("src") === col("dst"))
+          .select(col("src").as("id"), col("src").as("label"), lit(false).as("e")))
+        .groupBy("id")
+        .agg(min("label").as("label"), min(when(col("e"), col("label"))).as("lo"),
+          max(when(col("e"), col("label"))).as("hi"))
+        .select(col("id"),
+          when(col("lo").isNull || col("lo") === col("hi"), col("label")).as("label")),
+      count(when(col("label").isNull, 1)))
+    Materialize.release(raw, edges)
+    if (split > 0) {
+      Materialize.release(labels)
       throw new IllegalStateException(
         "connectedComponentsStar fixpoint is not a star forest — " +
           "convergence was misdetected, raise maxIter")
-    // at the star fixpoint every edge points at its component minimum
-    val labels = edges.select(col("src").as("id"), col("dst").as("label"))
-      .union(edges.select(col("dst").as("id"), col("dst").as("label")))
-      .distinct()
-    labels.union(
-      selfNodes.join(labels, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("label")))
+    }
+    labels
   }
 
   /** Final dedup step a training-data pipeline runs: resolve candidate

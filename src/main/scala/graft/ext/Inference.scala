@@ -20,16 +20,12 @@ import org.apache.spark.sql.functions._
   * (The same cannot be said of aggregating doubles directly; callers
   * quantize measures to integers — e.g. `floor(value·100)` cents —
   * before handing them in.)
+  *
+  * Storage: a grid or base frame that several consumers of a lazy
+  * result read is persisted and released after the result's first run
+  * ([[Materialize.releaseAfterUse]]); a second run recomputes it.
   */
 object Inference {
-
-  /** See [[Caching.unpersistAfterUse]] (round 14: promoted to a shared
-    * helper so Corpus/TextStats operators reuse the same discipline).
-    * Kept as a local alias because every persist in this file routes
-    * through it.
-    */
-  private def unpersistAfterUse(cached: DataFrame, result: DataFrame): DataFrame =
-    Caching.unpersistAfterUse(result, cached)
 
   private def meanC(n: Column, s: Column): Column =
     s.cast("double") / n.cast("double")
@@ -868,23 +864,22 @@ object Inference {
     * language-ID evaluation — executed three times (round-13 30×
     * sweep caught it as a 9.4× time ratio; the grid itself is ≤|cats|²
     * rows). The grid self-unpersists after the result's first
-    * materialization ([[unpersistAfterUse]], round 14) — no cache
+    * materialization ([[Materialize.releaseAfterUse]]) — no cache
     * entry or `clearCache()` convention survives the call.
     * Overflow: n² < 2⁶³ holds to ~3·10⁹ rows;
     * past that, compute on a hash sample — κ is a rate, it
     * concentrates fast.
     */
   def cohenKappa(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val conf = df.groupBy(col(xCol).as("x"), col(yCol).as("y"))
-      .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val conf = Materialize.persist(df.groupBy(col(xCol).as("x"), col(yCol).as("y"))
+      .agg(count(lit(1)).as("n")))
     val tot = conf.agg(sum("n").as("n_tot"),
       sum(when(col("x") === col("y"), col("n")).otherwise(0L)).as("n_agree"))
     val rm = conf.groupBy("x").agg(sum("n").as("rm"))
     val cm = conf.groupBy("y").agg(sum("n").as("cm"))
     val pe = rm.join(cm, col("x") === col("y"))
       .agg(coalesce(sum(col("rm") * col("cm")), lit(0L)).as("pe_num"))
-    unpersistAfterUse(conf, tot.crossJoin(pe) // two 1-row scalar aggregates
+    Materialize.releaseAfterUse(tot.crossJoin(pe) // two 1-row scalar aggregates
       .select(col("n_tot"), col("n_agree"),
         round(col("n_agree").cast("double") / col("n_tot").cast("double"), 6)
           .as("p_observed"),
@@ -892,7 +887,7 @@ object Inference {
           (col("n_tot") * col("n_tot")).cast("double"), 6).as("p_expected"),
         round((col("n_tot") * col("n_agree") - col("pe_num")).cast("double") /
           (col("n_tot") * col("n_tot") - col("pe_num")).cast("double"), 6)
-          .as("kappa")))
+          .as("kappa")), conf)
   }
 
   /** Split-conformal prediction intervals per group, fully
@@ -942,17 +937,16 @@ object Inference {
     * pipeline (for q_fleiss_kappa: scans + three language-ID rater
     * evaluations) executes twice — round-13 measured the double
     * evaluation as ~2× the query. The grid self-unpersists after the
-    * result's first materialization ([[unpersistAfterUse]], round
-    * 14) — no cache entry or `clearCache()` convention survives the
-    * call. Returns one row: (n_items, n_raters, p_bar, p_e, kappa),
-    * rounded at 6.
+    * result's first materialization ([[Materialize.releaseAfterUse]])
+    * — no cache entry or `clearCache()` convention survives the call.
+    * Returns one row: (n_items, n_raters, p_bar, p_e, kappa), rounded
+    * at 6.
     */
   def fleissKappa(assign: DataFrame, item: Column, category: Column,
       nRaters: Int): DataFrame = {
     require(nRaters >= 2, "Fleiss' kappa needs at least 2 raters")
-    val cells = assign.select(item.as("i"), category.as("cat"))
-      .groupBy("i", "cat").agg(count(lit(1)).as("nij"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val cells = Materialize.persist(assign.select(item.as("i"), category.as("cat"))
+      .groupBy("i", "cat").agg(count(lit(1)).as("nij")))
     val complete = cells.groupBy("i")
       .agg(sum("nij").as("n_i"), sum(col("nij") * col("nij")).as("sq_i"))
       .filter(col("n_i") === nRaters)
@@ -961,7 +955,7 @@ object Inference {
     val perCat = cells.join(complete.select(col("i")), Seq("i"), "left_semi")
       .groupBy("cat").agg(sum("nij").as("cj"))
       .agg(coalesce(sum(col("cj") * col("cj")), lit(0L)).as("b"))
-    unpersistAfterUse(cells, perItem.crossJoin(perCat) // two 1-row scalar aggregates
+    Materialize.releaseAfterUse(perItem.crossJoin(perCat) // two 1-row scalar aggregates
       .select(col("n_items"), lit(nRaters).cast("int").as("n_raters"),
         (col("sum_sq") - col("n_items") * nRaters).as("a"),
         (col("n_items") * (nRaters.toLong * (nRaters - 1))).as("d1"),
@@ -973,7 +967,8 @@ object Inference {
         round(col("b").cast("double") / col("d2").cast("double"), 6)
           .as("p_e"),
         round((col("a") * col("d2") - col("b") * col("d1")).cast("double") /
-          (col("d1") * (col("d2") - col("b"))).cast("double"), 6).as("kappa")))
+          (col("d1") * (col("d2") - col("b"))).cast("double"), 6).as("kappa")),
+      cells)
   }
 
   /** Wilcoxon signed-rank test — the PAIRED complement to
@@ -1080,14 +1075,12 @@ object Inference {
     // q_conformal, a 150k-row join — 28 parquet scans in the plan),
     // and the model feeds the calibration join, the test join AND the
     // final assembly (round 14, guide §2.4); both self-release
-    val rows = df.select(g :+ ScaleOps.splitByKey(key).as("split")
-      :+ y.cast("long").as("y"): _*)
-      .persist()
-    val model = rows.filter(col("split") === "train")
+    val rows = Materialize.persist(df.select(g :+ ScaleOps.splitByKey(key).as("split")
+      :+ y.cast("long").as("y"): _*))
+    val model = Materialize.persist(rows.filter(col("split") === "train")
       .groupBy(g: _*)
       .agg(count(lit(1)).as("n_train"), sum("y").as("sy"))
-      .select(g :+ col("n_train") :+ expr("sy DIV n_train").as("y_hat"): _*)
-      .persist()
+      .select(g :+ col("n_train") :+ expr("sy DIV n_train").as("y_hat"): _*))
     val calScores = rows.filter(col("split") === "val")
       .join(broadcast(model), group)
       .select(g :+ abs(col("y") - col("y_hat")).as("score"): _*)
@@ -1099,7 +1092,7 @@ object Inference {
       .agg(count(lit(1)).as("n_test"),
         sum(when(abs(col("y") - col("y_hat")) <= col("qhat"), 1L).otherwise(0L))
           .as("covered"))
-    Caching.unpersistAfterUse(
+    Materialize.releaseAfterUse(
       model.join(qhat, group).join(test, group)
         .select(g ++ Seq(col("n_train"), col("y_hat"), col("qhat").cast("long").as("qhat"),
           col("n_test"), col("covered"),
@@ -1830,28 +1823,21 @@ object Inference {
     * 1-row scalar, and each output value is a fixed float tower over
     * exact longs, rounded at 6. t is null when MSW ≤ 0 or N ≤ k.
     *
-    * STORAGE CONTRACT (the [[Graph.sccLabels]] discipline): the k-row
-    * power-sum frame is eagerly localCheckpointed (it has three
+    * Storage: the k-row power-sum frame is persisted (it has three
     * consumers — both self-join sides and the MSW scalar — and
-    * self-join aliasing defeats exchange reuse). The checkpoint blocks
-    * live until the CALLER runs `spark.catalog.clearCache()` (as
-    * Bench/Verify do between queries) or the driver GCs; a long-lived
-    * session embedding this operator must clear the cache once the
-    * result is consumed.
+    * self-join aliasing defeats exchange reuse) and released after the
+    * result's first run ([[Materialize.releaseAfterUse]]).
     */
   def tukeyPairs(df: DataFrame, group: String, x: Column): DataFrame = {
     // the k-row power-sum frame has THREE consumers (both self-join
     // sides and the MSW scalar); self-join aliasing defeats exchange
     // reuse, so without materialization the ROW-SCALE aggregate runs
-    // three times (30× sweep: 11.6 s → one scan). Eager-checkpoint the
-    // k rows once — k is a category cardinality, the snapshot is tiny;
-    // Bench/Verify clearCache between queries releases it (the
-    // [[Graph.sccLabels]] storage contract).
-    val g = df.select(col(group).as("g"), x.cast("long").as("x"))
+    // three times (30× sweep: 11.6 s → one scan). Persist the k rows —
+    // k is a category cardinality, the cache is tiny — and free them
+    // once the result has run.
+    val g = Materialize.persist(df.select(col(group).as("g"), x.cast("long").as("x"))
       .groupBy("g").agg(count(lit(1)).as("n"), sum("x").as("s"),
-        sum(col("x") * col("x")).as("ss"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        sum(col("x") * col("x")).as("ss")))
     val tot = g.agg(count(lit(1)).as("k"), sum("n").as("nt"),
       sum("ss").cast("double").as("ssd"),
       sum(col("s").cast("double") * col("s").cast("double") /
@@ -1864,11 +1850,11 @@ object Inference {
       col("b.s").cast("double") / col("b.n").cast("double")
     val se = sqrt(msw * (lit(1.0) / col("a.n").cast("double") +
       lit(1.0) / col("b.n").cast("double")))
-    pairs.select(col("a.g").as("g_a"), col("b.g").as("g_b"),
+    Materialize.releaseAfterUse(pairs.select(col("a.g").as("g_a"), col("b.g").as("g_b"),
       col("a.n").as("n_a"), col("b.n").as("n_b"),
       round(diff, 6).as("mean_diff"),
       when(col("nt") > col("k") && msw > 0, round(diff / se, 6))
-        .as("t_stat"))
+        .as("t_stat")), g)
   }
 
   /** Gini concentration coefficient per group over per-unit totals:

@@ -598,20 +598,18 @@ object ScaleOps {
     * edges. Cost: one count on the snapshot (work the first iteration
     * would materialize anyway) + one cached-read pass to fill the
     * sized frame. The caller owns the returned persisted frame and
-    * should unpersist it after the iteration's final action.
+    * should [[Materialize.release]] it after the iteration's final action.
     */
   def sizedEdges(edges: DataFrame, keyCol: String = "src"): DataFrame = {
-    val p = edges.persist()
+    val p = Materialize.persist(edges)
     val parts = graphPartitions(p.count())
     val have = p.rdd.getNumPartitions
     if (have == parts) p // already right-sized; keep the one cached copy
     else {
-      val sized =
-        (if (have > parts) p.coalesce(parts)
-         else p.repartition(parts, col(keyCol)))
-          .persist()
+      val sized = Materialize.persist(
+        if (have > parts) p.coalesce(parts) else p.repartition(parts, col(keyCol)))
       sized.count() // fill from the cached snapshot before releasing it
-      p.unpersist()
+      Materialize.release(p)
       sized
     }
   }

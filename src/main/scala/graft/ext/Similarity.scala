@@ -345,16 +345,15 @@ object Similarity {
     var centroids = corpus
       .orderBy(col(idCol)).limit(k)
       .select(row_number().over(seedW).cast("long").as(idCol), col(vecCol))
-      .localCheckpoint(eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Materialize.snapshot)
     var i = 0
     var prevInertia = Double.MaxValue
     var done = false
     while (i < iters && !done) {
-      val assigned = ivfAssign(corpus, centroids, nProbe = 1,
+      val assigned = Materialize.persist(ivfAssign(corpus, centroids, nProbe = 1,
         idCol = idCol, vecCol = vecCol)
         .select(col(idCol), col("centroid_id"), col("centroid_cos"))
-        .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol)))
       val means = assigned
         .select(col("centroid_id"), posexplode(col(vecCol)).as(Seq("dim", "v")))
         .groupBy("centroid_id", "dim")
@@ -368,7 +367,7 @@ object Similarity {
       // clusters that captured no vectors keep their previous centroid
       val next = means
         .unionByName(centroids.join(means.select(idCol), Seq(idCol), "left_anti"))
-        .localCheckpoint(eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(Materialize.snapshot)
       // exact fixed point over k rows: any centroid whose vector moved?
       val moved = next.as("n")
         .join(centroids.as("p"), col(s"n.$idCol") === col(s"p.$idCol"))
@@ -384,8 +383,8 @@ object Similarity {
         if (prevInertia - cur <= tol) done = true
         prevInertia = cur
       }
-      assigned.unpersist(blocking = false)
-      Graph.release(centroids) // superseded k-row snapshot, freed per round
+      // the round's assignment and the superseded k-row snapshot
+      Materialize.release(assigned, centroids)
       centroids = next
       i += 1
       if (!moved) done = true

@@ -81,15 +81,18 @@ object Spatial {
     * Scale shape: points reduce to CELLS in one map-side-combined
     * aggregate before anything quadratic can happen — the component
     * search runs on the cell graph (bounded by grid area, not data
-    * volume), via [[graft.ext.Dedup.connectedComponents]]'s
-    * one-action-per-round min-label loop. The ×9 neighbor probe
+    * volume), via [[graft.ext.Dedup.connectedComponentsStar]]'s
+    * alternating star loop. The ×9 neighbor probe
     * explodes only cells, and every join back to points is an
     * equi-join on the cell key. At 100 TB the per-point cost is two
     * scans and two cell-keyed hash joins.
     *
     * Output: one row per cluster plus one `cluster_id = -1` noise row —
     * `(cluster_id, n_points, n_core_points, n_cells)` with `n_cells`
-    * the distinct cells holding the row's points.
+    * the distinct cells holding the row's points. The output is an
+    * eager snapshot, so the cell cache and the component labels are
+    * released before returning; it is the caller's to
+    * [[Materialize.release]].
     */
   def gridDensityClusters(points: DataFrame, id: String, x: Column, y: Column,
                           cellSize: Int, minPts: Long,
@@ -100,23 +103,22 @@ object Spatial {
         floor(x.cast("double") / cellSize).cast("long").as("cx"),
         floor(y.cast("double") / cellSize).cast("long").as("cy"))
     // the cell histogram is bounded by GRID AREA, not data volume —
-    // snapshot it once (serialized, GC-reclaimed with the frame) so the
-    // component loop, the border join, and the final point join all
-    // read the same materialized cells instead of re-aggregating
-    // points; total point-scan cost of the operator is exactly two
-    // passes (this aggregate + the final cluster-assignment join)
-    val cells = pts.groupBy("cx", "cy").agg(count(lit(1)).as("n"))
-      .withColumn("k", col("cx") * packBase + col("cy"))
-      .localCheckpoint(eager = true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // persist it so the component loop, the border join, and the final
+    // point join all read the same cached cells instead of
+    // re-aggregating points; total point-scan cost of the operator is
+    // exactly two passes (this aggregate + the final cluster-assignment
+    // join)
+    val cells = Materialize.persist(pts.groupBy("cx", "cy").agg(count(lit(1)).as("n"))
+      .withColumn("k", col("cx") * packBase + col("cy")))
     // packing is collision-free only for cell coords in [0, packBase);
     // a negative or overly wide span would SILENTLY merge distinct
-    // cells — fail loudly instead (one scalar action on the already
-    // materialized cell histogram, bounded by grid area)
+    // cells — fail loudly instead (one scalar action, bounded by grid
+    // area, that also fills the cell cache)
     val ext = cells.agg(min("cx"), max("cx"), min("cy"), max("cy")).head()
     if (!ext.isNullAt(0)) {
       val ok = ext.getLong(2) >= 0 && ext.getLong(3) < packBase &&
         ext.getLong(0) >= 0 && ext.getLong(1) < Long.MaxValue / packBase
+      if (!ok) Materialize.release(cells)
       require(ok, s"cell coordinates (cx in [${ext.getLong(0)}, ${ext.getLong(1)}], " +
         s"cy in [${ext.getLong(2)}, ${ext.getLong(3)}]) do not fit the " +
         s"packBase=$packBase collision-free packing — shift coordinates " +
@@ -140,8 +142,8 @@ object Spatial {
     // all-core grid, where the residual is the two point scans, and
     // the round count (not per-round work) is what survives a wider
     // grid (ScaleSpec gates equality of the two algorithms)
-    val lab = Dedup.connectedComponentsStar(edges)
-      .select(col("id").as("k"), col("label").as("cluster_id"))
+    val cc = Dedup.connectedComponentsStar(edges)
+    val lab = cc.select(col("id").as("k"), col("label").as("cluster_id"))
     // border resolution at CELL level: a non-core cell takes the min
     // label among its 3×3 core neighbors (deterministic tie rule)
     val borderLab = probed(cells.filter(col("n") < minPts)
@@ -158,9 +160,11 @@ object Spatial {
       .select(col("k"),
         coalesce(col("core_cl"), col("bord_cl"), lit(-1L)).as("cluster_id"),
         col("core_cl").isNotNull.cast("long").as("is_core"))
-    assigned.groupBy("cluster_id")
+    val out = Materialize.snapshot(assigned.groupBy("cluster_id")
       .agg(count(lit(1)).as("n_points"), sum("is_core").as("n_core_points"),
-        countDistinct("k").as("n_cells"))
+        countDistinct("k").as("n_cells")))
+    Materialize.release(cells, cc)
+    out
   }
 
   /** Each point's nearest neighbor within Chebyshev `radius` (points

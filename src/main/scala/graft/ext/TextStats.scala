@@ -232,9 +232,8 @@ object TextStats {
     val toks = docs.select(col(idCol), explode(tokens(col(textCol))).as("term"))
     val tfCols = qTerms.zipWithIndex.map { case (tm, i) =>
       sum(when(col("term") === tm, 1L).otherwise(0L)).as(s"_tf$i") }
-    val perDoc = toks.groupBy(col(idCol))
-      .agg(count(lit(1)).as("dl"), tfCols: _*)
-      .persist()
+    val perDoc = Materialize.persist(toks.groupBy(col(idCol))
+      .agg(count(lit(1)).as("dl"), tfCols: _*))
     val corpus = perDoc.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_len"))
     val unpivot = array(qTerms.zipWithIndex.map { case (tm, i) =>
       struct(lit(tm).as("term"), col(s"_tf$i").as("tf")) }: _*)
@@ -248,7 +247,7 @@ object TextStats {
       (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5))
     val weight = idf * (col("tf") * (k1 + 1.0)) /
       (col("tf") + lit(k1) * (lit(1.0) - b + lit(b) * (col("dl") / avgLen)))
-    Caching.unpersistAfterUse(
+    Materialize.releaseAfterUse(
       tf.join(broadcast(df), "term")
         .crossJoin(broadcast(corpus))
         .groupBy(idCol)
@@ -453,7 +452,7 @@ object TextStats {
     * 4× (18 parquet scans in the sf0.1 plan). Both are persisted
     * (token-scale and vocab-scale respectively) and self-released
     * after the result's first materialization
-    * ([[Caching.unpersistAfterUse]]).
+    * ([[Materialize.releaseAfterUse]]).
     *
     * Returns (id, pred, score_nano, correct) — correct compares the
     * prediction against the training label (resubstitution accuracy;
@@ -463,15 +462,13 @@ object TextStats {
       label: Column): DataFrame = {
     val base = docs.select(id.as("did"), label.as("cls"),
       tokens(text).as("toks"))
-    val tf = base
+    val tf = Materialize.persist(base
       .select(col("did"), col("cls"), explode(col("toks")).as("term"))
-      .groupBy("did", "cls", "term").agg(count(lit(1)).as("tf"))
-      .persist()
+      .groupBy("did", "cls", "term").agg(count(lit(1)).as("tf")))
     val docLen = tf.groupBy("did", "cls").agg(sum("tf").as("len"))
     // model: per-(class, term) nano log-prob; per-class floor + prior
-    val cnt = tf.groupBy(col("cls").as("mcls"), col("term"))
-      .agg(sum("tf").as("cnt"))
-      .persist()
+    val cnt = Materialize.persist(tf.groupBy(col("cls").as("mcls"), col("term"))
+      .agg(sum("tf").as("cnt")))
     val totc = cnt.groupBy("mcls").agg(sum("cnt").as("tot"))
     val vocab = cnt.select("term").distinct().agg(count(lit(1)).as("v"))
     val nTot = base.agg(count(lit(1)).as("n_all"))
@@ -499,7 +496,7 @@ object TextStats {
         (col("prior_nano") + coalesce(col("sp"), lit(0L)) +
           (col("len") - coalesce(col("tfp"), lit(0L))) * col("floor_nano"))
           .as("score"))
-    Caching.unpersistAfterUse(
+    Materialize.releaseAfterUse(
       scored.groupBy("did", "cls")
         .agg(min(struct((-col("score")).as("ns"), col("mcls").as("c"))).as("w"))
         .select(col("did").as("id"), col("w.c").as("pred"),

@@ -74,4 +74,24 @@ class ContractSpec extends AnyFunSuite {
       !s.contains("BETWEEN 2 AND 1000") },
       "stale 1000-doc bucket cap survives in an oracle")
   }
+
+  test("ext storage lifetimes go through Materialize alone") {
+    // every snapshot, persist and release in ext/ belongs to
+    // ext.Materialize; a hand-rolled one elsewhere escapes its rules
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/ext")
+    val files = dir.toFile.listFiles().filter(_.getName.endsWith(".scala"))
+      .filter(_.getName != "Materialize.scala")
+    assert(files.length >= 20, s"ext sources not found under $dir")
+    val banned = Seq("localCheckpoint", "(?<!Materialize)\\.persist\\(",
+      "\\.cache\\(\\)", "\\.unpersist\\(", "StorageLevel",
+      "QueryExecutionListener").map(_.r)
+    val comment = "^\\s*(//|\\*|/\\*)".r
+    val hits = for {
+      f <- files.toSeq.sortBy(_.getName)
+      (line, i) <- java.nio.file.Files.readString(f.toPath).split("\n").zipWithIndex
+      if comment.findFirstIn(line).isEmpty
+      b <- banned if b.findFirstIn(line).isDefined
+    } yield s"${f.getName}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("storage outside Materialize:\n", "\n", ""))
+  }
 }

@@ -396,7 +396,7 @@ class ScaleSpec extends SparkSpec {
     assert(hops.count() == 13)
     assert(sc.getPersistentRDDs.size <= before + 1,
       "bfsHops must release superseded per-round snapshots")
-    graft.ext.Graph.release(hops)
+    graft.ext.Materialize.release(hops)
     assert(sc.getPersistentRDDs.size <= before,
       "release must free the returned snapshot's blocks")
     val beforeK = sc.getPersistentRDDs.size
@@ -422,7 +422,7 @@ class ScaleSpec extends SparkSpec {
       assert(cc.count() == 13)
       assert(sc.getPersistentRDDs.size <= beforeCC + 1,
         "connectedComponents must release superseded label snapshots")
-      graft.ext.Graph.release(cc)
+      graft.ext.Materialize.release(cc)
     } finally {
       spark.conf.unset("spark.graft.graph.localEdges")
       spark.conf.unset("spark.graft.graph.localEdges")
@@ -582,6 +582,139 @@ class ScaleSpec extends SparkSpec {
     assert(labels(graft.ext.Dedup.connectedComponentsStar(grid)) === gl)
     assert(labels(graft.ext.Dedup.connectedComponents(rand)) === rl)
     assert(labels(graft.ext.Dedup.connectedComponentsStar(rand)) === rl)
+  }
+
+  test("connectedComponentsStar: the size gate's count rides on the snapshot's job") {
+    import spark.implicits._
+    // Dataset actions of one call, counted as in the one-action-per-round
+    // test: marker queries before and after bracket the call's actions
+    def actions(call: => Any): Int = {
+      val marks = new java.util.concurrent.atomic.AtomicInteger
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+          if (qe.analyzed.output.exists(_.name == "action_count_mark")) {
+            if (marks.incrementAndGet() == 2) done.countDown()
+          } else if (marks.get == 1) n.incrementAndGet()
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+          if (marks.get == 1) n.incrementAndGet()
+      }
+      def mark() = spark.range(1).toDF("action_count_mark").collect()
+      spark.listenerManager.register(l)
+      try {
+        mark(); call; mark()
+        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally spark.listenerManager.unregister(l)
+      n.get
+    }
+    val path = (1L to 12L).sliding(2).map(p => (p(0), p(1))).toSeq.toDF("id1", "id2")
+    // fast path: one job snapshots and counts the pairs, one collects
+    // them for union-find
+    assert(actions(graft.ext.Dedup.connectedComponentsStar(path)) == 2)
+  }
+
+  test("releaseAfterUse: frames stay cached until the result's first run, then free") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import org.apache.spark.sql.{DataFrame, Observation}
+    val M = graft.ext.Materialize
+    def cached(df: DataFrame) = df.storageLevel.isValid
+    // a 7-row result over two persisted frames
+    def scoped(): (DataFrame, Seq[DataFrame]) = {
+      val a = M.persist(spark.range(0, 700).toDF("x").withColumn("y", col("x") % 7))
+      val b = M.persist(a.groupBy("y").agg(count(lit(1)).as("n")))
+      (M.releaseAfterUse(b.join(a.groupBy("y").agg(sum("x").as("s")), "y"), a, b),
+        Seq(a, b))
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // the release runs on the listener bus: wait for it
+    def freed(fs: Seq[DataFrame]) =
+      eventually(timeout(60.seconds)) { assert(fs.forall(!cached(_))) }
+    // an action's own observation completes on the same listener bus
+    // once that action's end is handled, so after it nothing that
+    // action could free is still pending
+    def otherAction(df: DataFrame): Unit = {
+      val o = Observation()
+      df.observe(o, count(lit(1))).collect()
+      o.get
+    }
+
+    val (r, fs) = scoped()
+    assert(fs.forall(cached))
+    otherAction(spark.range(10).toDF("z"))
+    otherAction(fs.head) // an action on one of the frames, not the result
+    assert(fs.forall(cached), "an action that does not run the result freed its frames")
+    val first = rows(r)
+    assert(first.size == 7)
+    freed(fs)
+    assert(rows(r) == first, "a second run must recompute the same rows")
+
+    // a failing first action frees them too
+    val a = M.persist(spark.range(0, 100).toDF("x"))
+    val bad = M.releaseAfterUse(a.select(assert_true(col("x") < 50)), a)
+    assert(cached(a))
+    intercept[Exception](bad.collect())
+    freed(Seq(a))
+
+    // the bench's cold run: a noop write wrapped in an outer observe
+    val (r2, fs2) = scoped()
+    val outer = Observation("outer_rows")
+    r2.observe(outer, count(lit(1)).as("n"))
+      .write.format("noop").mode("overwrite").save()
+    assert(outer.get("n") == 7L)
+    freed(fs2)
+
+    // an RDD action
+    val (r3, fs3) = scoped()
+    assert(r3.rdd.count() == 7L)
+    freed(fs3)
+  }
+
+  test("internal snapshots are freed after use and the result runs twice") {
+    import spark.implicits._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    def added(before: Set[Int]) = sc.getPersistentRDDs.keySet.toSet -- before
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    // tukeyPairs: a lazy result; its k-row frame goes after the first run
+    val grp = (0 until 60).map(i => (s"g${i % 3}", i.toLong)).toDF("g", "x")
+    val b0 = sc.getPersistentRDDs.keySet.toSet
+    val t = graft.ext.Inference.tukeyPairs(grp, "g", col("x"))
+    val t1 = rows(t)
+    assert(t1.size == 3)
+    eventually(timeout(60.seconds)) { assert(added(b0).isEmpty) }
+    assert(rows(t) == t1)
+    // star CC and the grid clustering on it, distributed path: only the
+    // returned snapshot stays, and releasing it leaves nothing
+    spark.conf.set("spark.graft.graph.localEdges", "0")
+    try {
+      val path = ((1L to 12L).sliding(2).map(p => (p(0), p(1))).toSeq ++
+        Seq((20L, 21L), (30L, 30L))).toDF("id1", "id2")
+      val b1 = sc.getPersistentRDDs.keySet.toSet
+      val cc = graft.ext.Dedup.connectedComponentsStar(path)
+      val c1 = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(c1 === ((1L to 12L).map(_ -> 1L) ++ Seq(20L -> 20L, 21L -> 20L,
+        30L -> 30L)).toMap)
+      assert(added(b1).size == 1, "star CC must free its pair and edge snapshots")
+      assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == c1)
+      graft.ext.Materialize.release(cc)
+      assert(added(b1).isEmpty)
+      val pts = Seq((1L, 1L, 1L), (2L, 2L, 2L), (3L, 11L, 5L), (4L, 12L, 6L),
+        (5L, 15L, 15L), (6L, 35L, 35L), (7L, 36L, 36L), (8L, 99L, 99L))
+        .toDF("id", "x", "y")
+      val g = graft.ext.Spatial
+        .gridDensityClusters(pts, "id", col("x"), col("y"), cellSize = 10, minPts = 2)
+      val g1 = rows(g)
+      assert(g1.size == 3)
+      assert(added(b1).size == 1, "gridDensityClusters must free its cells and labels")
+      assert(rows(g) == g1)
+      graft.ext.Materialize.release(g)
+      assert(added(b1).isEmpty)
+    } finally spark.conf.unset("spark.graft.graph.localEdges")
   }
 
   test("pageRankDirected: dangling mass keeps total rank at exactly 1") {
