@@ -11,12 +11,13 @@ import scala.concurrent.duration._
   *
   * Queries run in sorted name order. Each gets one untimed cold run
   * (codegen, JIT, parquet footer cache) and `SPARK_GRAFT_BENCH_RUNS`
-  * (default 3) timed warm runs, each after `clearCache()`, so a query
-  * that persists intermediates neither leaks memory nor pre-warms a
-  * later one. A row reports the minimum and the median of its warm
-  * runs; "value" is the sum of the minima. Every run writes to the
-  * `noop` sink: `count()` would let Catalyst prune the computed
-  * columns, so the expressions being timed would never run.
+  * (default 3) timed warm runs, each after [[ext.Materialize.releaseAll]],
+  * so a query that persists intermediates or returns a snapshot neither
+  * leaks memory nor pre-warms a later one. A row reports the minimum
+  * and the median of its warm runs; "value" is the sum of the minima.
+  * Every run writes to the `noop` sink: `count()` would let Catalyst
+  * prune the computed columns, so the expressions being timed would
+  * never run.
   *
   * The cold run counts its own output through `observe`, so the "rows"
   * map costs no extra execution. A query with 0 rows at the bench scale
@@ -130,12 +131,12 @@ object Bench {
       val cold = timed(spark, group)(fn(spark, sfDir).observe(obs, count(lit(1))))
       val rows = Await.result(obs.future, 1.minute).getLong(0)
       val warm = Seq.fill(runs) {
-        spark.catalog.clearCache()
+        ext.Materialize.releaseAll(spark)
         timed(spark, group)(fn(spark, sfDir))
       }
       Right(Row(cold, warm, rows))
     } catch { case e: Throwable => Left(message(e)) }
-    finally spark.catalog.clearCache()
+    finally ext.Materialize.releaseAll(spark)
 
   /** Queries whose cold run observed 0 rows, sorted. */
   def vacuous(res: Results): Seq[String] =

@@ -20,9 +20,9 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that persist intermediates (LSH signatures) must not
-      // accumulate cache across the run
-      spark.catalog.clearCache()
+      // persisted intermediates and returned snapshots must not
+      // accumulate across the run
+      ext.Materialize.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

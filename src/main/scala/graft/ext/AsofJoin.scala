@@ -123,13 +123,6 @@ object AsofJoin {
         when(useBack, col(s"_b_$c")).otherwise(col(s"_f_$c")).as(c)): _*)
   }
 
-  /** Convenience guard: true when `right` is unique per (key, time) —
-    * the precondition for a well-defined as-of match.
-    */
-  def rightIsUnique(right: DataFrame, keyCols: Seq[String], rightTime: String): Boolean =
-    right.groupBy((keyCols :+ rightTime).map(col): _*)
-      .count().filter(col("count") > 1).isEmpty
-
   /** Range (interval) join: left rows against right [start, end]
     * intervals on the same key, point-in-interval semantics. A naive
     * theta-join degenerates to per-key cross products; here both sides

@@ -159,25 +159,6 @@ object Dedup {
     * where `band_hash` concatenates `rowsPerBand` adjacent signature
     * columns. Docs sharing any (band, band_hash) are candidates.
     */
-  /** Rows-per-band for a banding scheme targeting a Jaccard
-    * `threshold`: among the (b, r) factorizations of `nHashes`, pick
-    * the r whose S-curve midpoint (1/b)^(1/r) — the similarity at
-    * which a pair's candidate probability crosses ~50 % — is closest
-    * to the target. Low thresholds → many narrow bands (high recall on
-    * weak similarity); high thresholds → few wide bands (precision).
-    * The principled way to set [[lshBands]]' parameter instead of
-    * hand-picking it.
-    */
-  def rowsPerBandForThreshold(nHashes: Int, threshold: Double): Int = {
-    require(nHashes >= 1, "need at least one hash")
-    require(threshold > 0.0 && threshold < 1.0, "threshold in (0,1)")
-    (1 to nHashes).filter(nHashes % _ == 0)
-      .minBy { r =>
-        val b = nHashes / r
-        math.abs(math.pow(1.0 / b, 1.0 / r) - threshold)
-      }
-  }
-
   def lshBands(signatures: DataFrame, k: Int, rowsPerBand: Int,
                idCol: String = "doc_id"): DataFrame = {
     require(k % rowsPerBand == 0, "k must be divisible by rowsPerBand")
@@ -382,31 +363,6 @@ object Dedup {
       .select(col("id1"), col("id2"), col("jaccard"))
   }
 
-  /** Candidate pairs of the naive inverted-index join vs the prefix
-    * filter, for the reduction assertion in tests.
-    */
-  private[graft] def candidateCounts(docs: DataFrame, n: Int, threshold: Double,
-                                     idCol: String = "doc_id",
-                                     textCol: String = "text"): (Long, Long) = {
-    val sh = docs
-      .select(col(idCol).as("id"), explode(shingles(col(textCol), n)).as("shingle"))
-      .distinct()
-    val naive = sh.as("a").join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
-      .select("a.id", "b.id").distinct().count()
-    val freq = sh.groupBy("shingle").agg(count(lit(1)).as("_f"))
-    val byRarity = Window.partitionBy("id").orderBy(col("_f"), col("shingle"))
-    val prefix = sh.join(freq, "shingle")
-      .withColumn("_pos", row_number().over(byRarity))
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy("id")))
-      .filter(col("_pos") <= col("_n") - ceil(col("_n") * threshold) + 1)
-      .select("id", "shingle")
-    val pruned = prefix.as("a").join(prefix.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
-      .select("a.id", "b.id").distinct().count()
-    (naive, pruned)
-  }
-
   /** Shared SimHash shape: explode tokens, hash each, sum the ±1 bit
     * contributions per signature position, assemble the sign pattern.
     * Variants differ only in the per-token hash column, the per-bit
@@ -451,9 +407,9 @@ object Dedup {
     * 64-column hash-aggregate, all codegen'd. Disjoint bit powers sum
     * to the exact two's-complement long (bit 63 contributes
     * Long.MinValue), so the assembled signature is oracle-portable as
-    * BIGINT arithmetic. Swap md5 for xxhash64 (same shape, one call
-    * instead of a digest slice) when cross-engine parity is not needed
-    * — see [[simhashXx]].
+    * BIGINT arithmetic. Swapping md5 for xxhash64 (same shape, one call
+    * instead of a digest slice) is the faster form when cross-engine
+    * parity is not needed.
     */
   def simhash64(docs: DataFrame, idCol: String = "doc_id",
                 textCol: String = "text"): DataFrame =
@@ -487,18 +443,6 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
-
-  /** [[simhash64]] on Spark's native `xxhash64` instead of an md5
-    * slice: one 64-bit hash call per token (no hex decode), the fastest
-    * form for a Spark-only 100-TB run. Not DuckDB-oracle-able (no
-    * common xxhash64), so it is unit-gated: same clustering behavior,
-    * engine-specific bits.
-    */
-  def simhashXx(docs: DataFrame, idCol: String = "doc_id",
-                textCol: String = "text"): DataFrame =
-    simhashAgg(docs, 64, t => xxhash64(t),
-      b => shiftright(col("h"), b).bitwiseAND(1L),
-      b => lit(1L << b), lit(0L), idCol, textCol)
 
   /** Connected components over an undirected pair set by iterative
     * min-label propagation: every node starts labeled with its own id;

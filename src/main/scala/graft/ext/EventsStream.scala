@@ -399,42 +399,12 @@ object EventsStream {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_users"))
 
-  /** Production file sink: `foreachBatch` writing each micro-batch to
-    * a `batch_id=N` partition with overwrite — the standard idempotent
-    * exactly-once-per-batch pattern. A replayed batch (restart between
-    * sink write and offset commit) OVERWRITES its own partition instead
-    * of appending duplicates; `partitionOverwriteMode=dynamic` at the
-    * writer level (never session conf) keeps other partitions intact.
-    * Returns the completed query; read the sink back with
-    * `spark.read.parquet(outDir)`.
-    */
-  def sinkToParquetIdempotent(stream: DataFrame, outDir: String,
-                              checkpointDir: String): StreamingQuery = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    recordRun(q)
-    q
-  }
-
   /** Streaming materialized-view maintenance: each micro-batch writes
     * its PARTIAL aggregates (n, Σ per key) to a `batch_id=K` partition
     * of a parquet state table; the served rollup is a groupBy-sum over
     * the partials ([[readRollup]]). The streaming form of the
-    * `q_incr_agg` pattern, with the same idempotence mechanism as
-    * [[sinkToParquetIdempotent]]: a replayed batch OVERWRITES its own
+    * `q_incr_agg` pattern, idempotent by partition overwrite: a
+    * replayed batch OVERWRITES its own
     * partition rather than double-merging — exactly-once effect on the
     * rollup without transactions, because partials are only ever
     * replaced, never read-modify-written.
@@ -479,8 +449,8 @@ object EventsStream {
     * ([[readSnapshot]] picks the max) — no torn reads, because a
     * generation becomes the max only after its write finishes.
     *
-    * Exactly-once comes from the generation discipline, same mechanism
-    * as [[sinkToParquetIdempotent]]'s partition overwrite: a REPLAYED
+    * Exactly-once comes from the generation discipline, the same
+    * mechanism as [[maintainRollup]]'s partition overwrite: a REPLAYED
     * batch k ignores its own stale `gen=k` (the `< k` filter) and
     * rewrites it from the same inputs — byte-identical, because the
     * merge is deterministic.

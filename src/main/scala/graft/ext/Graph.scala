@@ -417,8 +417,10 @@ object Graph {
     * round counts) — mis-sizing those is the classic silent-wrong-
     * result trap this measures away. Both walks are [[bfsHops]]
     * (size-gated local fast path included); the two scalar decisions
-    * between them (min id, argmax hop) are deliberate 1-row driver
-    * actions, the same bounded-scalar pattern as the A4 mode.
+    * between them (min id, argmax hop) and the second walk's maximum
+    * are deliberate 1-row driver actions, the same bounded-scalar
+    * pattern as the A4 mode; each walk is released once read, so the
+    * one-row result holds no storage.
     *
     * Both eccentricities are BOUNDED at `maxHops` — on a graph whose
     * diameter exceeds the bound the result reads `maxHops` (raise it),
@@ -443,10 +445,10 @@ object Graph {
       .select(col("id").cast("long"), col("hop").cast("int")).head
     Materialize.release(b1)
     val (farId, ecc1) = (far.getLong(0), far.getInt(1))
-    bfsHops(e, Seq(farId).toDF("id"), maxHops)
-      .agg(max(col("hop")).cast("int").as("diameter_lb"))
-      .select(lit(seed0).as("seed_id"), lit(farId).as("far_id"),
-        lit(ecc1).as("ecc_seed"), col("diameter_lb"))
+    val b2 = bfsHops(e, Seq(farId).toDF("id"), maxHops)
+    val diameter = b2.agg(max(col("hop")).cast("int")).head.getInt(0)
+    Materialize.release(b2)
+    Seq((seed0, farId, ecc1, diameter)).toDF("seed_id", "far_id", "ecc_seed", "diameter_lb")
   }
 
   /** Longest-path layering of a DAG — assign every node the length of
@@ -558,38 +560,35 @@ object Graph {
     *
     * Scale: each round is one [[edgeSupport]] pass over the surviving
     * edges — O(|E|^1.5) intersection work in-row, shuffle
-    * output-proportional — plus a semi-join restriction; the surviving
-    * undirected edge list is snapshotted per round and its predecessor
-    * released (plan depth O(1)), together with the round's orientation
-    * caches.
+    * output-proportional — whose filtered output, the survivors with
+    * their support over the round's input, is snapshotted; the
+    * predecessor is released (plan depth O(1)), together with the
+    * round's orientation caches.
     *
     * Input must be symmetrized; returns the surviving undirected edges
     * with their support over the FINAL surviving set:
-    * (id1, id2, support), id1 < id2.
-    *
-    * Storage: the returned frame is lazy and reads the final round's
-    * survivor snapshot plus the closing [[edgeSupport]]'s orientation
-    * persists. `spark.catalog.clearCache()` drops the persists; the
-    * snapshot's blocks stay until the driver garbage-collects it
-    * (releasing it here would break every run of the result).
+    * (id1, id2, support), id1 < id2. At the fixpoint no edge fell, so
+    * the last round's snapshot IS that result; a peel that stops at
+    * `rounds` recounts support over its survivors into one more
+    * snapshot. Either way the returned frame is a snapshot, the
+    * caller's to [[Materialize.release]].
     */
   def kTrussPeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 2 && rounds >= 1, "k must be >= 2 and rounds positive")
-    var und = Materialize.snapshot(edges
+    def support(und: DataFrame) = edgeSupportCore(
+      und.select(col("id1").as("src"), col("id2").as("dst"))
+        .unionAll(und.select(col("id2").as("src"), col("id1").as("dst"))))
+    var (und, Row(remaining: Long)) = Materialize.snapshot(edges
       .select(least(col("src"), col("dst")).as("id1"),
         greatest(col("src"), col("dst")).as("id2"))
-      .distinct())
-    var remaining = -1L
+      .distinct(), count(lit(1)))
     var r = 0
     var fixpoint = false
     while (r < rounds && !fixpoint) {
-      val sym = und.select(col("id1").as("src"), col("id2").as("dst"))
-        .unionAll(und.select(col("id2").as("src"), col("id1").as("dst")))
-      val (sup, caches) = edgeSupportCore(sym)
-      val keep = sup.filter(col("support") >= k - 2)
-        .select(col("id1"), col("id2"))
-      val (next, Row(n: Long)) = Materialize.snapshot(
-        und.join(keep, Seq("id1", "id2"), "left_semi"), count(lit(1)))
+      val (sup, caches) = support(und)
+      // survivors, with their support over this round's input
+      val (next, Row(n: Long)) =
+        Materialize.snapshot(sup.filter(col("support") >= k - 2), count(lit(1)))
       // the round's orientation caches are fully consumed by `next`
       Materialize.release(caches :+ und: _*)
       und = next
@@ -597,9 +596,14 @@ object Graph {
       remaining = n
       r += 1
     }
-    edgeSupport(und.select(col("id1").as("src"), col("id2").as("dst"))
-        .unionAll(und.select(col("id2").as("src"), col("id1").as("dst"))))
-      .select(col("id1"), col("id2"), col("support"))
+    // at the fixpoint no edge fell, so each support is over the final set
+    if (fixpoint) und
+    else {
+      val (sup, caches) = support(und)
+      val out = Materialize.snapshot(sup)
+      Materialize.release(caches :+ und: _*)
+      out
+    }
   }
 
   /** Fixed-round k-core peeling: each round drops every node with
@@ -632,7 +636,9 @@ object Graph {
     * Input edges must be symmetrized ([[symmetrize]]); returns
     * (id, degree) for nodes with ≥ 1 surviving edge after the final
     * round, degree counted over the surviving edge list — identical
-    * output to the restrict-based formulation, round for round.
+    * output to the restrict-based formulation, round for round. The
+    * returned frame is the last round's snapshot, the caller's to
+    * [[Materialize.release]].
     */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
@@ -642,15 +648,15 @@ object Graph {
     // materializes each round ([[Materialize.snapshot]]), so each round
     // is exactly ONE Spark action.
     var (deg, Row(nAlive: Long)) = Materialize.snapshot(e.groupBy("src")
-      .agg(count(lit(1)).as("deg")).select(col("src").as("id"), col("deg")),
+      .agg(count(lit(1)).as("degree")).select(col("src").as("id"), col("degree")),
       count(lit(1)))
     var r = 0
     var done = nAlive == 0L
     while (r < rounds && !done) {
       // both filters are narrow reads of the degree snapshot — no
       // separate materialization of the removed set is needed
-      val removed = deg.filter(col("deg") < k).select(col("id"))
-      val alive = deg.filter(col("deg") >= k)
+      val removed = deg.filter(col("degree") < k).select(col("id"))
+      val alive = deg.filter(col("degree") >= k)
       // edges from a still-alive src into a just-removed dst lower
       // src's degree; edges between two removed nodes die unobserved
       // (neither endpoint remains to count them)
@@ -658,16 +664,18 @@ object Graph {
         .join(removed.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
         .join(alive.select(col("id").as("src")), Seq("src"), "left_semi")
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
+      // a node left with no edge (degree 0) is dropped now: its removal
+      // next round would lower no neighbor's degree
       val (next, Row(n: Long)) = Materialize.snapshot(alive.join(delta, Seq("id"), "left")
-        .select(col("id"), (col("deg") - coalesce(col("d"), lit(0L))).as("deg")),
-        count(lit(1)))
+        .select(col("id"), (col("degree") - coalesce(col("d"), lit(0L))).as("degree"))
+        .filter(col("degree") >= 1), count(lit(1)))
       Materialize.release(deg)
       deg = next
       done = n == nAlive // nothing removed: further rounds are identities
       nAlive = n
       r += 1
     }
-    deg.filter(col("deg") >= 1).select(col("id"), col("deg").as("degree"))
+    deg
   }
 
   /** Personalized PageRank: teleportation goes to the SEED set (mass
@@ -1050,9 +1058,11 @@ object Graph {
     * scalar + contribution — so the plan would double per round
     * without the cut.
     *
-    * Returns (id, pr) rounded at 6.
+    * Returns (id, pr) rounded at 6: the last round's snapshot, the
+    * caller's to [[Materialize.release]].
     */
   def pageRankDirected(edges: DataFrame, iters: Int, d: Double = 0.85): DataFrame = {
+    require(iters >= 1, "iters must be >= 1")
     val e = edges.select(col("src"), col("dst"))
     val deg = e.groupBy("src").agg(count(lit(1)).as("out_deg"))
     val nodes = e.select(col("src").as("id"))
@@ -1061,23 +1071,26 @@ object Graph {
       .select(col("id"), coalesce(col("out_deg"), lit(0L)).as("out_deg"))
     val n = nodes.count()
     var pr = spine.withColumn("pr", lit(1.0 / n))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val dangling = pr.filter(col("out_deg") === 0L)
         .agg(coalesce(sum("pr"), lit(0.0)).as("dm")) // 1-row scalar
       val contrib = e
         .join(pr.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
         .agg(sum(col("pr") / col("out_deg").cast("double")).as("inflow"))
+      val rank = lit((1.0 - d) / n) + lit(d) *
+        (coalesce(col("inflow"), lit(0.0)) + col("dm") / n)
+      // the last round's snapshot is the rounded result itself
+      val out = if (i < iters) Seq(col("id"), col("out_deg"), rank.as("pr"))
+        else Seq(col("id"), round(rank, 6).as("pr"))
       val next = Materialize.snapshot(spine
         .join(contrib, Seq("id"), "left")
         .crossJoin(dangling) // one row: the broadcastable dangling mass
-        .select(col("id"), col("out_deg"),
-          (lit((1.0 - d) / n) + lit(d) *
-            (coalesce(col("inflow"), lit(0.0)) + col("dm") / n)).as("pr")))
+        .select(out: _*))
       Materialize.release(pr) // superseded (no-op on the round-0 derived frame)
       pr = next
     }
-    pr.select(col("id"), round(col("pr"), 6).as("pr"))
+    pr
   }
 
   /** HITS (hubs & authorities, Kleinberg) over a DIRECTED edge list,
@@ -1106,7 +1119,7 @@ object Graph {
     * half-step re-reads it.
     *
     * Returns (id, hub, auth) with both scores max-normalized to [0,1]
-    * and rounded at 6.
+    * and rounded at 6: a snapshot, the caller's to [[Materialize.release]].
     */
   def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
@@ -1117,33 +1130,32 @@ object Graph {
       .union(e.select(col("dst").as("id"))).distinct())
     var h = nodes.withColumn("h", lit(1L))
     var a = nodes.withColumn("a", lit(0L))
+    // each half-step's maximum rides on its snapshot's own job
+    var maxH, maxA: Any = null
     for (_ <- 1 to iters) {
       val aAgg = e.join(h.select(col("id").as("src"), col("h")), "src")
         .groupBy(col("dst").as("id")).agg(sum("h").as("a"))
-      val aNext = Materialize.snapshot(nodes.join(aAgg, Seq("id"), "left")
-        .select(col("id"), coalesce(col("a"), lit(0L)).as("a")))
+      val (aNext, Row(ma)) = Materialize.snapshot(nodes.join(aAgg, Seq("id"), "left")
+        .select(col("id"), coalesce(col("a"), lit(0L)).as("a")), max("a"))
       Materialize.release(a) // superseded (no-op on the round-0 derived frame)
       a = aNext
       val hAgg = e.join(a.select(col("id").as("dst"), col("a")), "dst")
         .groupBy(col("src").as("id")).agg(sum("a").as("h"))
-      val hNext = Materialize.snapshot(nodes.join(hAgg, Seq("id"), "left")
-        .select(col("id"), coalesce(col("h"), lit(0L)).as("h")))
+      val (hNext, Row(mh)) = Materialize.snapshot(nodes.join(hAgg, Seq("id"), "left")
+        .select(col("id"), coalesce(col("h"), lit(0L)).as("h")), max("h"))
       Materialize.release(h)
       h = hNext
+      maxH = mh
+      maxA = ma
     }
-    // Materialize the joined scores ONCE: both consumers below (the
-    // 1-row maxima and the normalized output) would otherwise replay
-    // the final join — then release every internal snapshot it
-    // supersedes.
-    val ha = Materialize.snapshot(h.join(a, "id"))
+    // the normalized scores are the returned snapshot; every internal
+    // one is released
+    def scaled(c: String, m: Any) =
+      round(col(c).cast("double") / nullif(lit(m), lit(0L)).cast("double"), 6)
+    val out = Materialize.snapshot(h.join(a, "id")
+      .select(col("id"), scaled("h", maxH).as("hub"), scaled("a", maxA).as("auth")))
     Materialize.release(h, a, nodes)
-    // one-row maxima, broadcast back — the scalar-attach pattern every
-    // share-of-total query uses (BroadcastNestedLoop on a 1-row side)
-    val maxes = ha.agg(max("h").as("mh"), max("a").as("ma"))
-    ha.crossJoin(maxes)
-      .select(col("id"),
-        round(col("h").cast("double") / nullif(col("mh"), lit(0L)).cast("double"), 6).as("hub"),
-        round(col("a").cast("double") / nullif(col("ma"), lit(0L)).cast("double"), 6).as("auth"))
+    out
   }
 
   /** Bounded-hop weighted single-source shortest paths (multi-source):
@@ -1179,7 +1191,8 @@ object Graph {
     * one per-node argmax — all map-side combinable; each round
     * snapshots (plan depth O(1)) and releases its predecessor. Input
     * is the symmetrized edge list; isolated nodes never appear (an
-    * edge list defines them away). Returns (id, community).
+    * edge list defines them away). Returns (id, community): the last
+    * round's snapshot, the caller's to [[Materialize.release]].
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
@@ -1189,9 +1202,9 @@ object Graph {
     // round and dominated the query)
     val e = Materialize.persist(edges.select(col("src"), col("dst")))
     var lbl = Materialize.snapshot(e.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")))
+      .withColumn("community", col("id")))
     for (_ <- 1 to rounds) {
-      val votes = e.join(lbl.select(col("id").as("src"), col("lbl")), "src")
+      val votes = e.join(lbl.select(col("id").as("src"), col("community").as("lbl")), "src")
         .groupBy(col("dst").as("id"), col("lbl"))
         .agg(count(lit(1)).as("c"))
       // argmax by (count, −label): lexicographic struct max = plurality
@@ -1199,7 +1212,7 @@ object Graph {
       val next = Materialize.snapshot(votes
         .groupBy("id")
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("best"))
-        .select(col("id"), (-col("best.nl")).as("lbl")))
+        .select(col("id"), (-col("best.nl")).as("community")))
       Materialize.release(lbl)
       lbl = next
     }
@@ -1208,7 +1221,7 @@ object Graph {
     // before returning — otherwise every call strands an edge-list's
     // storage until driver GC (round-9 verdict finding #1)
     Materialize.release(e)
-    lbl.select(col("id"), col("lbl").as("community"))
+    lbl
   }
 
   /** Conductance of a labeled partition: for every community c,

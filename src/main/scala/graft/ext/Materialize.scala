@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
@@ -21,7 +21,8 @@ import org.apache.spark.storage.StorageLevel
   *  3. A returned snapshot is the caller's to [[release]].
   *
   * `spark.catalog.clearCache()` drops persisted frames but NOT
-  * checkpoint blocks: those live until [[release]]d or until the driver
+  * checkpoint blocks: those live until [[release]]d (or freed with
+  * everything else by [[releaseAll]]) or until the driver
   * garbage-collects their RDD.
   *
   * Storage is MEMORY_AND_DISK_SER for snapshots and persists alike.
@@ -77,6 +78,17 @@ private[graft] object Materialize {
       case Some(rdd) => rdd.unpersist(blocking = false)
       case None => df.unpersist(blocking = false)
     }
+  }
+
+  /** Frees what finished queries left in storage: `clearCache()` drops
+    * the persisted frames, and every RDD the SparkContext still holds
+    * persisted — the blocks of returned snapshots among them — is
+    * unpersisted. For a caller that runs query after query and keeps
+    * none of their results ([[graft.Bench]], [[graft.Verify]]).
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 
   /** `result`, unchanged in rows and laziness, that [[release]]s

@@ -53,14 +53,6 @@ object Multimodal {
       lit(kind).as("kind"),
       encode(col(textCol), "UTF-8").as("payload"))
 
-  /** Pure-SQL metadata extraction (no decode): byte length + checksum.
-    * Narrow, codegen'd, oracle-friendly.
-    */
-  def withByteMeta(media: DataFrame): DataFrame =
-    media
-      .withColumn("byte_len", octet_length(col("payload")))
-      .withColumn("checksum", md5(col("payload")))
-
   /** Batched decode via mapPartitions: one codec init per partition,
     * rows streamed through it. This is where a real codec goes.
     */
@@ -80,59 +72,9 @@ object Multimodal {
       }
   }
 
-  /** A media row with an extracted feature vector. */
-  case class MediaFeatures(media_id: Long, kind: String, features: Array[Float])
-
-  /** Feature extraction plumbing (the embedding-model slot): batched
-    * per-partition execution so a real vision/audio model loads once
-    * per task and consumes rows as batches. The STUB derives a
-    * deterministic `dim`-float vector from the payload's md5 bytes —
-    * byte value / 256, so the fake is reproducible across runs,
-    * partitionings and engines. Downstream (ANN, near-dup) consumes
-    * only the small typed vector; the opaque payload never shuffles.
-    */
-  def extractFeatures(media: DataFrame, dim: Int = 16): Dataset[MediaFeatures] = {
-    require(dim >= 1 && dim <= 16, "stub digest yields at most 16 bytes")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select("media_id", "kind", "payload").as[MediaRow]
-      .mapPartitions { rows =>
-        val md5 = java.security.MessageDigest.getInstance("MD5") // once per task
-        rows.map { r =>
-          val d = md5.digest(r.payload)
-          MediaFeatures(r.media_id, r.kind,
-            Array.tabulate(dim)(j => (d(j) & 0xff) / 256.0f))
-        }
-      }
-  }
-
-  /** Resize plumbing (binary → binary transform slot): the STUB
-    * truncates or cyclically pads the payload to exactly `outBytes` —
-    * the shape (per-row native transform, output size fixed by target
-    * dimensions) of a real image resize, without an image library.
-    * Runs in the same batched per-partition model as the decode.
-    */
-  def resizeTo(media: DataFrame, outW: Int, outH: Int): Dataset[MediaRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val outBytes = outW * outH
-    media.select("media_id", "kind", "payload").as[MediaRow]
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val out = new Array[Byte](outBytes)
-          if (r.payload.nonEmpty) {
-            var i = 0
-            while (i < outBytes) { out(i) = r.payload(i % r.payload.length); i += 1 }
-          }
-          MediaRow(r.media_id, r.kind, out)
-        }
-      }
-  }
-
   /** Cheap SQL-only feature path: the first `dim` md5 bytes of the
     * payload as doubles in [0,1) — one narrow codegen'd projection, no
-    * mapPartitions, bit-identical to [[extractFeatures]]'s stub
-    * (unit-asserted). The form an engine uses when features are
+    * mapPartitions. The form an engine uses when features are
     * hash-derived rather than model-derived.
     */
   def sqlFeatures(payload: org.apache.spark.sql.Column, dim: Int): org.apache.spark.sql.Column = {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * Spark's exact `percentile` aggregate is an ImperativeAggregate that
   * buffers a value→count map PER GROUP in executor memory — fine at
-  * bench scale, an OOM at datalake scale. The two alternatives here:
+  * bench scale, an OOM at datalake scale. The alternative here:
   *
   *   - [[exactQuantiles]]: exact percentile_cont semantics in two
   *     scalable passes — a hash-aggregate collapses rows to
@@ -19,11 +19,6 @@ import org.apache.spark.sql.functions._
   *     over DISTINCT values only; per-row state is O(1). Interpolation
   *     reproduces Spark's `percentile` formula bit-for-bit:
   *     `(hi - pos)·v_lo + (pos - lo)·v_hi` at `pos = p·(n-1)`.
-  *   - [[approxQuantiles]]: `approx_percentile` (Greenwald-Khanna
-  *     sketch, mergeable, bounded memory) for when an error bound is
-  *     acceptable: rank error ≤ n / accuracy — at the default
-  *     accuracy 10000 the returned value's rank is within 0.01 % of
-  *     the exact one.
   */
 object Quantiles {
 
@@ -34,7 +29,7 @@ object Quantiles {
     * interval, a rank target lands in exactly one of them, and both
     * carry the same value, so every quantile below is tie-safe.
     * Exposed package-private so operators that already hold a
-    * distinct-value table ([[ScaleOps.robustOutliers]]'s deviation
+    * distinct-value table ([[ScaleOps.robustOutliersDisc]]'s deviation
     * pass) can rank it without a second pass over raw rows.
     */
   private[ext] def rankCounts(counts: DataFrame,
@@ -148,20 +143,6 @@ object Quantiles {
         ps.tail.zip(outCols.tail).map { case (p, name) =>
           min(when(cond(p), col("_v"))).as(name)
         }: _*)
-  }
-
-  /** Sketch-based quantiles: bounded-memory, mergeable, the default at
-    * raw 100 TB scale. Rank error ≤ n/accuracy (Greenwald-Khanna) —
-    * document the bound at the call site when serving results.
-    */
-  def approxQuantiles(df: DataFrame, valueCol: String, groupCols: Seq[String],
-                      ps: Seq[Double], outCols: Seq[String],
-                      accuracy: Int = 10000): DataFrame = {
-    require(ps.size == outCols.size, "one output column per quantile")
-    val aggs = ps.zip(outCols).map { case (p, name) =>
-      percentile_approx(col(valueCol), lit(p), lit(accuracy)).as(name)
-    }
-    df.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Exact WEIGHTED discrete quantiles: the smallest value whose

@@ -407,36 +407,23 @@ object ScaleOps {
     * themselves the way they inflate a stddev — the standard
     * data-quality screen before training on numeric features.
     *
+    * Medians are DISCRETE (percentile_disc semantics): median and MAD
+    * are ACTUAL data values located by pure integer rank comparisons,
+    * never interpolated — so the summary is drift-free across engines
+    * and engine VERSIONS (interpolated quantiles differ in last-ulp
+    * formula order between engines; a rounded report can flip on that).
+    *
     * Plan: ONE pass over the raw rows collapses to a per-group
     * distinct-value count table (map-side combine; shuffle volume =
     * distinct values, not rows); median, the |v−med| deviation table,
     * MAD, and the weighted outlier count all derive from that table
-    * via [[Quantiles.rankCounts]]' cumulative-rank logic — bit-equal
-    * to Spark's exact `percentile` but with O(1) per-row state (no
-    * per-group value map, the OOM at datalake scale) and no second
-    * scan of the raw data for the MAD. The aggregate joins are
-    * co-partitioned on the group keys. Every comparison is on
-    * unrounded doubles computed by the identical operation tree
-    * cross-engine; only the REPORTED med/mad round.
-    */
-  def robustOutliers(df: DataFrame, keys: Seq[String], valueCol: String,
-                     zCut: Double = 3.0): DataFrame =
-    robustOutliersImpl(df, keys, valueCol, zCut, disc = false)
-
-  /** [[robustOutliers]] with DISCRETE medians (percentile_disc
-    * semantics): median and MAD are ACTUAL data values located by pure
-    * integer rank comparisons, never interpolated — so the summary is
-    * drift-free across engines and engine VERSIONS (interpolated
-    * quantiles differ in last-ulp formula order between engines; a
-    * rounded report can flip on that). The gate-able form; the cont
-    * twin stays for callers wanting classical medians.
+    * via [[Quantiles.rankCounts]]' cumulative-rank logic, with O(1)
+    * per-row state (no per-group value map, the OOM at datalake scale)
+    * and no second scan of the raw data for the MAD. Every comparison
+    * is on unrounded doubles; only the REPORTED med/mad round.
     */
   def robustOutliersDisc(df: DataFrame, keys: Seq[String], valueCol: String,
-                         zCut: Double = 3.0): DataFrame =
-    robustOutliersImpl(df, keys, valueCol, zCut, disc = true)
-
-  private def robustOutliersImpl(df: DataFrame, keys: Seq[String], valueCol: String,
-                                 zCut: Double, disc: Boolean): DataFrame = {
+                         zCut: Double = 3.0): DataFrame = {
     val keyCols = keys.map(col)
     val wAll = Window.partitionBy(keyCols: _*)
     // The median is attached to the ranked table as a WINDOW AGGREGATE
@@ -452,26 +439,13 @@ object ScaleOps {
     // plan-asserted in PlanSpec. The selection expressions mirror
     // Quantiles.quantiles(Disc)FromRanked exactly, so the located
     // values are identical.
-    def withMedian(ranked: DataFrame, out: String): DataFrame =
-      if (disc) {
-        // percentile_disc: smallest value whose interval covers 0.5·n
-        val t = lit(0.5) * col("_n").cast("double")
-        val qualifies =
-          col("_start").cast("double") < t && t <= col("_end").cast("double")
-        ranked.withColumn(out, min(when(qualifies, col("_v"))).over(wAll))
-      } else {
-        // Spark `percentile` interpolation at pos = 0.5·(n−1)
-        val pos = lit(0.5) * (col("_n") - 1).cast("double")
-        val lo = floor(pos)
-        val hi = ceil(pos)
-        def covers(r: Column) = col("_start") <= r && r < col("_end")
-        val vLo = max(when(covers(lo), col("_v"))).over(wAll)
-        val vHi = max(when(covers(hi), col("_v"))).over(wAll)
-        ranked.withColumn(out,
-          when(hi === lo, vLo)
-            .otherwise((hi.cast("double") - pos) * vLo +
-              (pos - lo.cast("double")) * vHi))
-      }
+    def withMedian(ranked: DataFrame, out: String): DataFrame = {
+      // percentile_disc: smallest value whose interval covers 0.5·n
+      val t = lit(0.5) * col("_n").cast("double")
+      val qualifies =
+        col("_start").cast("double") < t && t <= col("_end").cast("double")
+      ranked.withColumn(out, min(when(qualifies, col("_v"))).over(wAll))
+    }
     // ONE pass over the raw rows: collapse to (group, value, count)
     // with map-side combine (null measures dropped up front — `n`
     // counts the group's non-null measure rows; a null is neither an

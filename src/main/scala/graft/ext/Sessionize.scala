@@ -1,23 +1,16 @@
 package graft.ext
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Gap-based sessionization of an event stream, in two equivalent
-  * forms: a batch window query (DuckDB-oracle-able) and a Structured
-  * Streaming `flatMapGroupsWithState` with event-time timeouts — the
-  * custom-state primitive for semantics windowed aggs can't express.
+/** Gap-based sessionization of an event log as a batch window query
+  * (DuckDB-oracle-able).
   *
-  * Scale design: both forms shuffle once on the session KEY. The batch
-  * form's per-key window sort is the unavoidable cost of gap semantics;
-  * real deployments key by high-cardinality ids (user, device), so
-  * per-key partitions stay small. The streaming form holds ONE open
-  * session per key in state and emits on close/timeout, so state is
-  * O(active keys), bounded by the event-time timeout.
+  * Scale design: the query shuffles once on the session KEY. The
+  * per-key window sort is the unavoidable cost of gap semantics; real
+  * deployments key by high-cardinality ids (user, device), so per-key
+  * partitions stay small.
   *
   * ==Exact-gap boundary contract==
   * The lag+cumsum batch form here and Spark's built-in
@@ -29,18 +22,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sampled clocks) must pick one convention and nudge the gap by one
   * unit to match the other; at native microsecond event resolution an
   * exact-gap tie has measure ~0 and the two forms agree — which
-  * ExtSpec ("streamed sessions are a subset of the batch sessions")
-  * and the `q_session_window` / `q_sessionize` oracles gate on the
-  * real testdata.
+  * ExtSpec ("built-in session_window equals the lag+cumsum batch form
+  * on real data") and the `q_session_window` / `q_sessionize` oracles
+  * gate on the real testdata.
   */
 object Sessionize {
-
-  case class SessionOut(event_type: String, session_start: Timestamp,
-                        session_end: Timestamp, n_events: Long)
-  /** Streaming state: the one open session per key. Public because the
-    * state encoder's generated code instantiates it.
-    */
-  case class OpenSession(startMicros: Long, endMicros: Long, n: Long)
 
   /** Per-key burstiness of inter-event gaps: B = (σ−μ)/(σ+μ) over the
     * MILLISECOND gaps between consecutive events — −1 for a perfectly
@@ -238,68 +224,4 @@ object Sessionize {
         count(lit(1)).as("len_slots"))
       .drop("grp")
   }
-
-  /** Streaming form: one open session per key in `GroupState`; a new
-    * event either extends it or closes it (emitting the finished
-    * session); an event-time timeout at `end + gap` flushes sessions
-    * the watermark has passed. Sessions still open when the stream
-    * stops are NOT emitted — the caller decides whether to flush state
-    * on shutdown (batch reconciliation is the usual answer).
-    */
-  def sessionizeStream(spark: SparkSession, path: String,
-                       gapSeconds: Int): Dataset[SessionOut] = {
-    import spark.implicits._
-    val gapMicros = gapSeconds * 1000000L
-    EventsStream.singleFileStream(spark, path)
-      .select(col("ts").cast("timestamp").as("ts"), col("event_type"))
-      .withWatermark("ts", "0 seconds")
-      .as[(Timestamp, String)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[OpenSession, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[(Timestamp, String)],
-         state: GroupState[OpenSession]) =>
-          def tsOf(micros: Long): Timestamp = {
-            // micro-exact: Timestamp(millis) would truncate sub-milli
-            val t = new Timestamp(micros / 1000000 * 1000)
-            t.setNanos((micros % 1000000).toInt * 1000)
-            t
-          }
-          def toOut(s: OpenSession) = SessionOut(key, tsOf(s.startMicros), tsOf(s.endMicros), s.n)
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(toOut).toList
-            state.remove()
-            out.iterator
-          } else {
-            val sorted = rows.map(r => r._1.getTime * 1000 +
-              (r._1.getNanos / 1000) % 1000).toSeq.sorted
-            var open = state.getOption
-            val closed = List.newBuilder[SessionOut]
-            sorted.foreach { t =>
-              open match {
-                case Some(s) if t - s.endMicros <= gapMicros =>
-                  open = Some(s.copy(endMicros = math.max(s.endMicros, t), n = s.n + 1))
-                case Some(s) =>
-                  closed += toOut(s)
-                  open = Some(OpenSession(t, t, 1))
-                case None =>
-                  open = Some(OpenSession(t, t, 1))
-              }
-            }
-            open.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.endMicros / 1000 + gapSeconds * 1000L)
-            }
-            closed.result().iterator
-          }
-      }
-  }
-
-  /** Run the bounded stream to completion and return the emitted
-    * (closed) sessions.
-    */
-  def runSessionStreamOnce(spark: SparkSession, path: String, gapSeconds: Int,
-                           queryName: String = "sessions"): DataFrame =
-    EventsStream.runToMemory(
-      sessionizeStream(spark, path, gapSeconds), queryName, OutputMode.Append)
 }

@@ -300,107 +300,6 @@ object Similarity {
     }
   }
 
-  /** Distributed Lloyd's k-means for IVF centroid training. Each
-    * iteration: assign every vector to its nearest centroid
-    * ([[ivfAssign]] — broadcast centroids, map-side-combined argmax),
-    * then recompute centroids as the element-wise mean via posexplode →
-    * (cluster, dim) hash aggregate — shuffle volume k × dim, never the
-    * corpus. Empty clusters keep their previous centroid. Seeds default
-    * to the first k vectors in id order (deterministic); at real scale
-    * train on a hash-sampled subset ([[graft.SparkEntry]]'s
-    * q_hash_sample pattern) — Lloyd's needs only a representative
-    * sample, not the corpus.
-    *
-    * Float caveat: cluster means average floats, so the trained
-    * centroids carry partition-order drift (~1e-7) — fine for a
-    * QUANTIZER (assignment near a cluster boundary is arbitrary anyway)
-    * but not for a cross-engine oracle gate; the unit gate asserts
-    * inertia (1 − cosine to assigned centroid) is non-increasing.
-    *
-    * Early exit (round-8 verdict item 7): training stops before `iters`
-    * when the new centroids equal the previous round's EXACTLY (k-row
-    * float-for-float check — the iteration is a deterministic function
-    * of the centroid frame, so every remaining round would be a no-op
-    * and the returned frame is IDENTICAL to the fixed-iteration result;
-    * oracle-safe by construction). `tol > 0` additionally stops when
-    * the round's inertia improves by ≤ tol — cheaper convergence for
-    * callers that accept an approximate quantizer; 0 (the default, and
-    * what every oracle-gated query uses) never takes that path.
-    */
-  def kmeansTrain(corpus: DataFrame, k: Int, iters: Int = 5,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  tol: Double = 0.0): DataFrame =
-    kmeansTrainRounds(corpus, k, iters, idCol, vecCol, tol)._1
-
-  /** [[kmeansTrain]] exposing the executed round count for the
-    * early-exit unit gate.
-    */
-  private[graft] def kmeansTrainRounds(corpus: DataFrame, k: Int,
-      iters: Int, idCol: String, vecCol: String,
-      tol: Double): (DataFrame, Int) = {
-    require(k >= 1 && iters >= 0, "need k >= 1, iters >= 0")
-    require(tol >= 0.0, "tol must be non-negative")
-    // centroid frames carry (idCol, vecCol) — the shape ivfAssign expects
-    val seedW = Window.orderBy(col(idCol))
-    var centroids = corpus
-      .orderBy(col(idCol)).limit(k)
-      .select(row_number().over(seedW).cast("long").as(idCol), col(vecCol))
-      .transform(Materialize.snapshot)
-    var i = 0
-    var prevInertia = Double.MaxValue
-    var done = false
-    while (i < iters && !done) {
-      val assigned = Materialize.persist(ivfAssign(corpus, centroids, nProbe = 1,
-        idCol = idCol, vecCol = vecCol)
-        .select(col(idCol), col("centroid_id"), col("centroid_cos"))
-        .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol)))
-      val means = assigned
-        .select(col("centroid_id"), posexplode(col(vecCol)).as(Seq("dim", "v")))
-        .groupBy("centroid_id", "dim")
-        .agg(avg(col("v")).as("m"))
-        .groupBy("centroid_id")
-        // array_sort on (dim, m) structs restores dimension order after
-        // the unordered collect
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-        .select(col("centroid_id").as(idCol),
-          transform(col("dm"), s => s.getField("m").cast("float")).as(vecCol))
-      // clusters that captured no vectors keep their previous centroid
-      val next = means
-        .unionByName(centroids.join(means.select(idCol), Seq(idCol), "left_anti"))
-        .transform(Materialize.snapshot)
-      // exact fixed point over k rows: any centroid whose vector moved?
-      val moved = next.as("n")
-        .join(centroids.as("p"), col(s"n.$idCol") === col(s"p.$idCol"))
-        .filter(col(s"n.$vecCol") =!= col(s"p.$vecCol"))
-        .limit(1).count() > 0
-      if (tol > 0.0) {
-        // the round's inertia comes from the assignment ALREADY
-        // materialized above (1 − cosine to the round's centroid) —
-        // no extra corpus pass
-        val cur = assigned
-          .agg(avg(lit(1.0) - coalesce(col("centroid_cos"), lit(0.0))))
-          .head().getDouble(0)
-        if (prevInertia - cur <= tol) done = true
-        prevInertia = cur
-      }
-      // the round's assignment and the superseded k-row snapshot
-      Materialize.release(assigned, centroids)
-      centroids = next
-      i += 1
-      if (!moved) done = true
-    }
-    (centroids, i)
-  }
-
-  /** Mean cosine distance (1 − cosine) of every vector to its assigned
-    * centroid — the convergence metric for [[kmeansTrain]].
-    */
-  def inertia(corpus: DataFrame, centroids: DataFrame,
-              idCol: String = "vec_id", vecCol: String = "embedding"): Double =
-    ivfAssign(corpus, centroids, nProbe = 1, idCol, vecCol)
-      .agg(avg(lit(1.0) - coalesce(col("centroid_cos"), lit(0.0))))
-      .head().getDouble(0)
-
   /** IVF-style ANN search: corpus vectors are pre-assigned to their
     * nearest centroid's inverted list ([[ivfAssign]], nProbe = 1); each
     * query probes its `nProbe` nearest lists and ranks candidates by
@@ -469,8 +368,8 @@ object Similarity {
     *
     * Returns one row per input vector: (idCol, centroid_id, kept).
     * Scale: pair work is Σ |cluster|² / 2 — size the centroid count so
-    * clusters hold ~√(pair budget) vectors ([[kmeansTrain]] for real
-    * centroids); the per-pair kernel is the native codegen dot.
+    * clusters hold ~√(pair budget) vectors; the per-pair kernel is the
+    * native codegen dot.
     */
   def semanticDedup(vecs: DataFrame, centroids: DataFrame, threshold: Double,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -592,8 +491,7 @@ object Similarity {
     *     codebook assignment needs.
     *  2. The codebook is the sub-vectors of `codebook`'s rows (code id
     *     = row id) — supplied data, like [[ivfTopK]]'s centroids, so
-    *     training stays a separate concern ([[kmeansTrain]] per
-    *     subspace is the production trainer).
+    *     training stays a separate concern.
     *  3. Assignment: per (vector, subspace), the code minimizing the
     *     exact integer L2 distance, ties to the smallest code id. The
     *     codebook is broadcast (subspaces × codes × dim/subspaces

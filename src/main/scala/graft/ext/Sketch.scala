@@ -64,38 +64,6 @@ object Sketch {
       depth, width)
   }
 
-  /** Distinct-count (HLL) sketches per group, as a keyed sketch TABLE —
-    * the cardinality companion to [[countMin]]'s frequency table. Built
-    * on Spark's DataSketches-backed `hll_sketch_agg`: one map-side-
-    * combined aggregate, shuffle volume ≤ groups × 2^lgK bytes
-    * regardless of input size. The output is a durable artifact: write
-    * it per day/partition, then [[hllMerge]] rolls windows up WITHOUT
-    * re-reading the raw data — the mergeability exact `count(distinct)`
-    * fundamentally lacks (its shuffle carries every distinct value, and
-    * two day-level exact counts cannot be combined at all).
-    * Register-max merge is lossless: merging shards yields the SAME
-    * estimate as one build over the union (unit-gated in ExtSpec).
-    * Standard error ≈ 1.04/√2^lgK (~0.8 % at the default lgK=12).
-    */
-  def hllByKey(df: DataFrame, keys: Seq[String], item: Column, lgK: Int = 12): DataFrame = {
-    require(lgK >= 4 && lgK <= 21, "DataSketches HLL wants lgK in [4, 21]")
-    df.groupBy(keys.map(col): _*)
-      .agg(hll_sketch_agg(item, lit(lgK)).as("hll"))
-  }
-
-  /** Roll up keyed sketch tables (same lgK) into one sketch per key. */
-  def hllMerge(tables: Seq[DataFrame], keys: Seq[String]): DataFrame = {
-    require(tables.nonEmpty, "nothing to merge")
-    tables.reduce(_ unionByName _)
-      .groupBy(keys.map(col): _*)
-      .agg(hll_union_agg(col("hll"), lit(false)).as("hll"))
-  }
-
-  /** Read the estimate off a keyed sketch table. */
-  def hllEstimate(sketches: DataFrame, keys: Seq[String]): DataFrame =
-    sketches.select(keys.map(col) :+
-      hll_sketch_estimate(col("hll")).cast("long").as("approx_ndv"): _*)
-
   /** Sliding-window distinct count, EXACT form: deduplicate to
     * (keys, day, item), explode each survivor to the `windowDays`
     * window-ends it participates in, count distinct per window. A
@@ -104,9 +72,8 @@ object Sketch {
     *
     * Scale: shuffle = distinct (keys, day, item) triples × windowDays.
     * Exact is right while the per-day item universe is modest; when
-    * items ~ corpus (distinct users at 100 TB), switch to
-    * [[slidingDistinctHll]] — same window shape over mergeable daily
-    * sketches, shuffle ≤ (keys, day) × 2^lgK bytes, independent of
+    * items ~ corpus (distinct users at 100 TB), the same window shape
+    * over mergeable daily sketches bounds the shuffle independently of
     * item count.
     */
   def slidingDistinctExact(df: DataFrame, keys: Seq[String], item: Column,
@@ -119,27 +86,6 @@ object Sketch {
           .as("window_end"): _*)
       .groupBy(keys.map(col) :+ col("window_end"): _*)
       .agg(countDistinct(col("_item")).as("n_distinct"))
-  }
-
-  /** Sliding-window distinct count over MERGEABLE daily HLL sketches:
-    * build one sketch per (keys, day) — the durable per-partition
-    * artifact — then union-merge each window's days and read the
-    * estimate. Never re-touches raw data per window; the unit gate
-    * asserts agreement with [[slidingDistinctExact]] on the fixture.
-    */
-  def slidingDistinctHll(df: DataFrame, keys: Seq[String], item: Column,
-                         dateCol: Column, windowDays: Int = 7,
-                         lgK: Int = 12): DataFrame = {
-    require(windowDays >= 1, "windowDays must be >= 1")
-    val daily = df.withColumn("_d", dateCol)
-    hllByKey(daily, keys :+ "_d", item, lgK)
-      .select(keys.map(col) :+ col("hll") :+
-        explode(expr(s"sequence(_d, date_add(_d, ${windowDays - 1}), interval 1 day)"))
-          .as("window_end"): _*)
-      .groupBy(keys.map(col) :+ col("window_end"): _*)
-      .agg(hll_union_agg(col("hll"), lit(false)).as("hll"))
-      .select(keys.map(col) :+ col("window_end") :+
-        hll_sketch_estimate(col("hll")).cast("long").as("n_distinct"): _*)
   }
 
   /** Point-query the sketch: for each probe row's `item`, the minimum
@@ -159,7 +105,7 @@ object Sketch {
   // --------------------------------------------------------------------
   // Deterministic (cross-engine reproducible) cardinality sketches.
   //
-  // [[hllByKey]] above rides Spark's DataSketches HLL — the right
+  // Spark's DataSketches HLL (`hll_sketch_agg`) is the right
   // production choice, but its sketch bytes are engine-private, so its
   // estimates can only be unit-gated. The two sketches below trade a
   // little constant factor for full determinism: every register /

@@ -55,55 +55,6 @@ object StatefulOps {
     }
   }
 
-  /** [[RunningTotalsProcessor]] with a REAL state TTL — the unbounded-
-    * key-universe configuration the base processor's scaladoc
-    * recommends, as code: `TTLConfig(ttl)` makes the STORE expire a
-    * key's totals `ttl` after their last update (processing time — the
-    * only clock TTL supports), so idle keys stop occupying state
-    * without any user-code bookkeeping. Expired values are never
-    * returned by `get`/`exists` even before physical cleanup runs —
-    * that read-side guarantee is what the eviction gate asserts
-    * (StatefulTtlSpec: state found before expiry, absent after).
-    *
-    * Emits (key, n, cents, had_state); `had_state=false` on a key's
-    * first batch AND on the first batch after TTL eviction — the
-    * observable difference between a carried and an evicted key.
-    */
-  private[ext] class TtlRunningTotalsProcessor(ttl: java.time.Duration)
-      extends StatefulProcessor[Long, (Long, Long), (Long, Long, Long, Boolean)] {
-    @transient private var totals: ValueState[(Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      totals = getHandle.getValueState[(Long, Long)](
-        "totals", Encoders.product[(Long, Long)], TTLConfig(ttl))
-
-    override def handleInputRows(key: Long, rows: Iterator[(Long, Long)],
-        timerValues: TimerValues): Iterator[(Long, Long, Long, Boolean)] = {
-      val had = totals.exists()
-      var (n, cents) = if (had) totals.get() else (0L, 0L)
-      rows.foreach { case (_, c) => n += 1; cents += c }
-      totals.update((n, cents))
-      Iterator.single((key, n, cents, had))
-    }
-  }
-
-  /** TTL-configured running totals over an arbitrary (key, cents)
-    * stream (tests drive it with a MemoryStream for batch-by-batch
-    * clock control). TimeMode must be ProcessingTime — the mode state
-    * TTL is defined against. The state-store provider must already be
-    * RocksDB on the dataset's session (the TTL API rejects the default
-    * provider), which is the caller's one setup line.
-    */
-  def ttlRunningTotals(ds: org.apache.spark.sql.Dataset[(Long, Long)],
-                       ttl: java.time.Duration): DataFrame = {
-    val s = ds.sparkSession
-    import s.implicits._
-    ds.groupByKey(_._1)
-      .transformWithState(new TtlRunningTotalsProcessor(ttl),
-        TimeMode.ProcessingTime(), OutputMode.Update())
-      .toDF("user_id", "n_purchases", "cents", "had_state")
-  }
-
   /** Update-mode stream of per-user purchase totals over the events
     * file: filter → cent-quantize → keyed transformWithState. Runs on
     * the conf-isolated clone [[EventsStream.readEventsStream]] builds;

@@ -136,10 +136,6 @@ object TextStats {
   /** ASCII punctuation regex class, portable across Java regex and RE2. */
   val PunctClass = "[!-/:-@\\[-`{-~]"
 
-  /** Whitespace token count. */
-  def wsTokenCount(text: Column): Column =
-    size(tokens(text))
-
   /** BPE-ish subword-piece count: runs of letters, runs of digits, and
     * single other non-space chars each count as one piece.
     */
@@ -176,11 +172,6 @@ object TextStats {
           when(col("punct_ratio") <= 0.2, 0.3).otherwise(0.0) +
           when(col("mean_word_len").between(2.0, 12.0), 0.3).otherwise(0.0), 2))
   }
-
-  /** Stable document fingerprint: md5 of case- and whitespace-
-    * normalized text (content-defined identity for dedup joins).
-    */
-  def fingerprint(text: Column): Column = Dedup.normalizedFingerprint(text)
 
   /** Term-frequency / document-frequency skeleton (the distributed
     * TF-IDF shape): explode tokens once, aggregate tf per (doc, term)

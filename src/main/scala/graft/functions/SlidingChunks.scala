@@ -26,9 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Output schema and semantics are identical to `chunkDocs`
   * (unit-gated): 0-based `chunk_ix`, 1-based `start_token`, final
   * chunks clamp at the document end, empty/null token arrays emit
-  * nothing. Registered for SQL strings as
-  * `sliding_chunks(tokens, chunkTokens, stride)` via
-  * [[graft.plans.GraftExtensions]].
+  * nothing.
   */
 case class SlidingChunks(tokens: Expression, chunkTokens: Int, stride: Int)
     extends Generator with CodegenFallback {

@@ -226,7 +226,7 @@ private[graft] object QueriesSim {
 
 
     // ext dedup: production-width 64-bit SimHash (md5-slice form so the
-    // oracle can mirror it; simhashXx is the Spark-only fast path)
+    // oracle can mirror it)
     "q_simhash64" -> ((s, dir) => {
       Dedup.simhash64(spread(t(s, dir, "documents"))).orderBy("doc_id")
     }),

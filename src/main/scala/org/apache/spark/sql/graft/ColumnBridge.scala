@@ -42,33 +42,4 @@ object ColumnBridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
       case _ => None
     }
-
-  /** A sibling session on the same SparkContext/SharedState with the
-    * given [[org.apache.spark.sql.SparkSessionExtensions]] applied.
-    *
-    * The supported production path is
-    * `spark.sql.extensions=graft.plans.GraftExtensions` at application
-    * start; extensions are fixed per session at construction, so an
-    * already-running application (or a test harness sharing one
-    * session) cannot retrofit them through the public builder. This
-    * constructor-level door — accessible because the classic session
-    * constructor is `private[sql]` — is for embedding and tests.
-    */
-  def sessionWithExtensions(
-      spark: org.apache.spark.sql.SparkSession,
-      configure: org.apache.spark.sql.SparkSessionExtensions => Unit)
-      : org.apache.spark.sql.SparkSession = {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    configure(ext)
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // the full constructor is Scala-private to the classic package
-    // (bytecode-public): reached reflectively, and only here
-    val ctor = classOf[org.apache.spark.sql.classic.SparkSession].getConstructor(
-      classOf[org.apache.spark.SparkContext], classOf[Option[_]], classOf[Option[_]],
-      classOf[org.apache.spark.sql.SparkSessionExtensions],
-      classOf[scala.collection.immutable.Map[_, _]],
-      classOf[scala.collection.immutable.Map[_, _]])
-    ctor.newInstance(classic.sparkContext, Some(classic.sharedState), None, ext,
-      Map.empty[String, String], Map.empty[String, String])
-  }
 }

@@ -31,6 +31,18 @@ class BenchSpec extends SparkSpec {
     }
   }
 
+  test("a query that returns a snapshot leaves no persisted RDD behind") {
+    // clearCache() alone frees persisted frames, not checkpoint blocks:
+    // every run's returned snapshot would stay until driver GC
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val row = measure("q_snapshot", (s, _) => ext.Materialize.snapshot(s.range(5).toDF()))
+      .fold(e => fail(e), identity)
+    assert(row.rows == 5)
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"${left.size} persisted RDDs left after measuring")
+  }
+
   test("a failing query lands in errors, an empty one in vacuous") {
     val res = Seq(
       "q_throws" -> measure("q_throws", (_, _) => sys.error("boom")),

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Driver-contract invariants that need no SparkSession. A query
   * without an oracle silently downgrades to a rows-only check in the
@@ -93,5 +94,64 @@ class ContractSpec extends AnyFunSuite {
       b <- banned if b.findFirstIn(line).isDefined
     } yield s"${f.getName}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("storage outside Materialize:\n", "\n", ""))
+  }
+
+  test("every public ext def is reached from src/main or is a kept reference") {
+    // a def nothing in src/main names is library surface no query,
+    // pipeline or main runs; it stays only as the reference a spec
+    // compares a reached operator against (name -> that spec and test)
+    val kept = Map(
+      "Dedup.shinglesHof" ->
+        ("ExtSpec", "dedup: codegen shingles equal HOF shingles"),
+      "Dedup.linkageScore" ->
+        ("ExtSpec", "linkage pattern histogram == enumerated pair-join histogram"),
+      "EventsStream.hourlyStats" ->
+        ("ExtSpec", "events: streaming hourly agg matches batch hourly agg"),
+      "Forecast.ewma" ->
+        ("ForecastChunkedSpec", "chunked folds match the collected fold at round-6"),
+      "ScaleOps.zorderDim" ->
+        ("ScaleSpec", "zorderKey: deinterleave roundtrips arbitrary coordinates"),
+      "Similarity.dot" ->
+        ("ExtSpec", "similarity: native dot is bit-equal to the HOF dot"),
+      "Similarity.cosine" ->
+        ("ExtSpec", "similarity: IVF assignment is the brute-force argmax"),
+      "Similarity.planeDotSpec" ->
+        ("ExtSpec", "similarity: native PlaneDot bit-equals the element_at spec form"),
+      "TimeFill.forwardFillViaSpine" ->
+        ("ExtSpec", "timefill: lead+explode forward fill equals the spine-join witness"))
+    def read(p: java.nio.file.Path) = java.nio.file.Files.readString(p)
+    val comment = "^\\s*(//|\\*|/\\*)".r
+    val word = "[A-Za-z_]\\w*".r
+    def code(p: java.nio.file.Path) =
+      read(p).split("\n").filter(comment.findFirstIn(_).isEmpty).toSeq
+    val main = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    // occurrences of every identifier on the non-comment lines of src/main
+    val uses = main.flatMap(code).flatMap(word.findAllIn)
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val ext = main.filter(_.getParent.endsWith("ext"))
+    assert(ext.size >= 20, "ext sources not found under src/main/scala/graft/ext")
+    // private[graft] defs are checked too: a qualified-private def with no
+    // src/main caller is as dead as a public one
+    val decl = "^\\s*((?:\\w+(?:\\[\\w+\\])?\\s+)*)def\\s+([A-Za-z_]\\w*)".r.unanchored
+    val unreached = (for {
+      f <- ext
+      line <- code(f)
+      m <- decl.findFirstMatchIn(line).toSeq
+      mods = m.group(1).split("\\s+").toSet
+      if !mods("override") && !mods("private")
+      name = m.group(2)
+      if uses(name) == word.findAllIn(line).count(_ == name)
+    } yield s"${f.getFileName.toString.stripSuffix(".scala")}.$name").toSet
+    assert(unreached.diff(kept.keySet).isEmpty,
+      s"ext defs nothing in src/main reaches: ${unreached.diff(kept.keySet).toSeq.sorted}")
+    kept.foreach { case (ref, (spec, test)) =>
+      val text = read(java.nio.file.Paths.get(s"src/test/scala/graft/$spec.scala"))
+      assert(text.contains(ref) && text.contains(s"test(\"$test"),
+        s"$ref: $spec no longer compares against it in \"$test\"")
+    }
   }
 }

@@ -127,19 +127,6 @@ class CorpusSpec extends SparkSpec {
     }
   }
 
-  test("sliding_chunks reaches SQL strings via GraftExtensions") {
-    val ext = org.apache.spark.sql.graft.ColumnBridge.sessionWithExtensions(
-      spark, new graft.plans.GraftExtensions()(_))
-    val got = ext.sql(
-      """SELECT chunk_ix, start_token, n_chunk_tokens, chunk_text
-        |FROM (SELECT sliding_chunks(
-        |        filter(split(lower('a b c d e'), '\\s+'), t -> t <> ''), 3, 2))
-        |ORDER BY chunk_ix""".stripMargin).collect()
-    assert(got.map(_.getString(3)).toSeq == Seq("a b c", "c d e", "e"))
-    assert(got.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
-      Seq((0L, 1L, 3L), (1L, 3L, 3L), (2L, 5L, 1L)))
-  }
-
   test("oovRate: counts tokens outside the top-V vocab; frequency ties break by token") {
     val d = docs(
       1L -> "aa aa aa bb bb cc",   // aa x3, bb x2, cc x1

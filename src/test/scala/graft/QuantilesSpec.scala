@@ -41,30 +41,6 @@ class QuantilesSpec extends SparkSpec {
     assert(got.toSeq == Seq(("a", 1.0), ("b", 7.0)))
   }
 
-  test("approxQuantiles lands within the documented rank-error bound") {
-    val ps = Seq(0.5, 0.95)
-    val accuracy = 10000
-    val approx = Quantiles.approxQuantiles(li, "l_extendedprice",
-        Seq("l_returnflag"), ps, Seq("p50", "p95"), accuracy)
-      .orderBy("l_returnflag").collect()
-    val n = li.count()
-    val rankTol = math.ceil(n.toDouble / accuracy).toLong + 1
-    val sorted = li.select("l_returnflag", "l_extendedprice").collect()
-      .map(r => (r.getString(0), r.getDouble(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    approx.foreach { r =>
-      val vs = sorted(r.getString(0))
-      ps.zipWithIndex.foreach { case (p, i) =>
-        val v = r.getDouble(i + 1)
-        val targetRank = (p * (vs.length - 1)).round
-        val lo = math.max(0, targetRank - rankTol).toInt
-        val hi = math.min(vs.length - 1, targetRank + rankTol).toInt
-        assert(v >= vs(lo) && v <= vs(hi),
-          s"approx p$p=$v outside rank window [${vs(lo)}, ${vs(hi)}]")
-      }
-    }
-  }
-
   test("exactQuantilesDisc reproduces percentile_disc bit-for-bit (real + random data)") {
     val ps = Seq(0.0, 0.25, 0.5, 0.95, 1.0)
     val names = ps.indices.map(i => s"q$i")

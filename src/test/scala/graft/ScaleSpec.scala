@@ -518,10 +518,11 @@ class ScaleSpec extends SparkSpec {
     val dag = chain(20)
     val wdag = dag.withColumn("w", lit(2L))
     val seed = Seq(0L).toDF("id")
-    // a triangle plus a pendant edge: the 3-truss peel drops the
-    // pendant in round 1 and finds the fixpoint in round 2
-    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
-    val triSym = G.symmetrize(tri.toDF("id1", "id2"))
+    // K4 minus an edge: the 4-truss peel keeps only the shared edge in
+    // round 1 and drops it in round 2, so neither budget reaches the
+    // fixpoint (which ends the peel without its closing support pass)
+    val k4m = G.symmetrize(Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L))
+      .toDF("id1", "id2"))
     spark.conf.set("spark.graft.graph.localEdges", "0")
     try {
       // (name, call with fewer rounds, call with more, extra rounds):
@@ -539,8 +540,8 @@ class ScaleSpec extends SparkSpec {
           () => G.sccLabels(chain(8)).count(), 2),
         ("bipartiteComponents", () => G.bipartiteComponents(chain(2)).count(),
           () => G.bipartiteComponents(chain(8)).count(), 2),
-        ("kTrussPeel", () => G.kTrussPeel(triSym, k = 3, rounds = 1).count(),
-          () => G.kTrussPeel(triSym, k = 3, rounds = 4).count(), 1))
+        ("kTrussPeel", () => G.kTrussPeel(k4m, k = 4, rounds = 1).count(),
+          () => G.kTrussPeel(k4m, k = 4, rounds = 2).count(), 1))
       cases.foreach { case (name, few, more, n) =>
         val (a, b) = (actions(few()), actions(more()))
         assert(b - a == n, s"$name: $a actions, then $b with $n more rounds")
@@ -714,6 +715,30 @@ class ScaleSpec extends SparkSpec {
       assert(rows(g) == g1)
       graft.ext.Materialize.release(g)
       assert(added(b1).isEmpty)
+      // graph operators that return their last snapshot, or a one-row
+      // result that holds none: releasing the result leaves nothing
+      val G = graft.ext.Graph
+      val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
+      val sym = G.symmetrize(tri.toDF("id1", "id2"))
+      val chain = G.symmetrize(path.filter($"id1" =!= $"id2"))
+      Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "kCorePeel" -> (() => G.kCorePeel(sym, k = 2, rounds = 3)),
+        "kTrussPeel at its fixpoint" -> (() => G.kTrussPeel(sym, k = 3, rounds = 4)),
+        "kTrussPeel out of rounds" -> (() => G.kTrussPeel(sym, k = 3, rounds = 1)),
+        "labelPropagation" -> (() => G.labelPropagation(sym, rounds = 2)),
+        "hits" -> (() => G.hits(tri, iters = 2)),
+        "pageRankDirected" -> (() => G.pageRankDirected(tri, iters = 2)),
+        "diameterDoubleBfs" -> (() => G.diameterDoubleBfs(chain, maxHops = 20))
+      ).foreach { case (name, op) =>
+        val b = sc.getPersistentRDDs.keySet.toSet
+        val res = op()
+        val r1 = rows(res)
+        assert(r1.nonEmpty, name)
+        assert(added(b).size <= 1, s"$name must free its internal snapshots")
+        assert(rows(res) == r1, s"$name: a second run differs")
+        graft.ext.Materialize.release(res)
+        assert(added(b).isEmpty, s"$name: releasing the result leaves storage behind")
+      }
     } finally spark.conf.unset("spark.graft.graph.localEdges")
   }
 

@@ -1,85 +1,9 @@
 package graft
 
-import graft.ext.StatefulOps
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
-
-/** Store-side TTL eviction gate for the transformWithState processor
-  * family: the same key is touched in two micro-batches; with a TTL
-  * shorter than the inter-batch pause the second batch must find NO
-  * prior state (the store's read-side expiry guarantee), with a long
-  * TTL it must find the carried totals. The control case is what makes
-  * the eviction assertion meaningful — it proves absence came from the
-  * TTL, not from a broken state cell.
+/** State-store sizing of the streaming stateful operators: the local
+  * partition cap on their session clone and the knob that lifts it.
   */
 class StatefulTtlSpec extends SparkSpec {
-
-  /** Poll the memory sink until it holds `n` rows. ProcessingTime time
-    * mode keeps the engine triggering (empty) batches forever, so
-    * `processAllAvailable` never quiesces — sink-row polling is the
-    * reliable wait for this operator family.
-    */
-  private def awaitRows(name: String, n: Int, timeoutMs: Long = 60000L): Unit = {
-    val deadline = System.nanoTime() + timeoutMs * 1000000L
-    while (spark.table(name).count() < n) {
-      assert(System.nanoTime() < deadline, s"sink $name never reached $n rows")
-      Thread.sleep(100)
-    }
-  }
-
-  private def runTwoBatches(ttl: java.time.Duration,
-      pauseMs: Long, name: String): Array[org.apache.spark.sql.Row] = {
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      implicit val ctx = spark.sqlContext
-      val in = MemoryStream[(Long, Long)]
-      val q: StreamingQuery = StatefulOps.ttlRunningTotals(in.toDS(), ttl)
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name).start()
-      try {
-        in.addData((7L, 100L))
-        awaitRows(name, 1)
-        Thread.sleep(pauseMs)
-        in.addData((7L, 50L))
-        awaitRows(name, 2)
-      } finally q.stop()
-      // update-mode sink: one row per (batch, key) touch
-      spark.table(name).collect()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("stateful: short TTL evicts idle state inside the store") {
-    // TTL 300 ms, pause 3 s: the value expired long before batch 2, so
-    // the processor must see exists()=false and restart from zero
-    val rows = runTwoBatches(java.time.Duration.ofMillis(300), 3000L, "ttl_evict")
-    assert(rows.length == 2, rows.mkString(";"))
-    assert(rows.forall(_.getLong(0) == 7L))
-    assert(rows.forall(!_.getBoolean(3)), // neither batch found prior state
-      s"state survived past its TTL: ${rows.mkString(";")}")
-    assert(rows.map(_.getLong(1)).sorted.sameElements(Array(1L, 1L)))
-    assert(rows.map(_.getLong(2)).toSet == Set(100L, 50L)) // batch-local totals
-  }
-
-  test("stateful: long TTL carries state across batches (eviction control)") {
-    val rows = runTwoBatches(java.time.Duration.ofHours(1), 100L, "ttl_keep")
-      .sortBy(_.getLong(1))
-    assert(rows.length == 2, rows.mkString(";"))
-    assert(!rows(0).getBoolean(3) && rows(0).getLong(1) == 1L &&
-      rows(0).getLong(2) == 100L)
-    assert(rows(1).getBoolean(3), "second batch lost unexpired state")
-    assert(rows(1).getLong(1) == 2L && rows(1).getLong(2) == 150L)
-  }
 
   test("stream state partitions: the local 8-cap yields to the sizing knob") {
     // the 8-state-partition cap is LOCAL-ONLY tuning (SCALING.md); a
