@@ -14,6 +14,11 @@ package graft
   * this line). Raise that one logger to ERROR in the session every main
   * builds and in the test session — library code never touches global
   * log config.
+  *
+  * DAGScheduler logs "Failed to cancel job group ... Cannot find active
+  * jobs for it" twice on every streaming query stop, once the query's
+  * jobs are already done. That one message is filtered out; the
+  * logger's other WARNs ("Broadcasting large task binary") stay.
   */
 object Log {
   def silenceNoisyWarnings(): Unit = {
@@ -34,6 +39,27 @@ object Log {
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.rdd.MapPartitionsRDD",
         org.apache.logging.log4j.Level.ERROR)
+      dropMessage("org.apache.spark.scheduler.DAGScheduler", "Failed to cancel job group")
     } catch { case _: Throwable => () } // logging config must never fail a run
+  }
+
+  /** Deny one message (by substring) on one logger, leaving the
+    * logger's level and every other message as they are.
+    */
+  private def dropMessage(logger: String, text: String): Unit = {
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    import org.apache.logging.log4j.core.config.LoggerConfig
+    import org.apache.logging.log4j.core.filter.StringMatchFilter
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val conf = ctx.getConfiguration
+    val own = Option(conf.getLoggers.get(logger)).getOrElse {
+      // no level of its own: it inherits its parent's, as before
+      val c = new LoggerConfig(logger, null, true)
+      conf.addLogger(logger, c)
+      c
+    }
+    own.addFilter(StringMatchFilter.newBuilder().setMatchString(text)
+      .setOnMatch(Filter.Result.DENY).setOnMismatch(Filter.Result.NEUTRAL).build())
+    ctx.updateLoggers()
   }
 }

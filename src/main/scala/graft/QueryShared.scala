@@ -20,7 +20,7 @@ private[graft] object QueryShared {
   /** One-time-per-(JVM, dir) setup for q_dsv2_scan's fixed-width
     * fixture: verifies the on-disk extract still matches the live
     * lineitem table by (row count, Σ l_orderkey) and (re)exports it if
-    * stale, then memoizes so warm bench runs time ONLY the DSv2 read.
+    * stale, then memoizes so warm bench runs time ONLY the source read.
     * computeIfAbsent gives per-key once-semantics under Bench's
     * single-threaded loop and Verify's sequential run alike; the value
     * is the fixture path. Thread-safe: concurrent first calls for the

@@ -136,8 +136,9 @@ object Layout {
   /** Total record width in chars (last field end). */
   val recordWidth: Int = fields.map { case (_, p, l) => p + l - 1 }.max
 
-  /** The layout as a `graft-fixedwidth` source option string
-    * (`name:pos:len,...` — see [[graft.sources.FixedWidthSource]]).
+  /** The layout as the `graft-fixedwidth` source's `layout` option
+    * (`name:pos:len,...`), [[recordWidth]] being its `recordLength`
+    * (see [[graft.sources.FixedWidthSource]]).
     */
   def spec: String = fields.map { case (n, p, l) => s"$n:$p:$l" }.mkString(",")
 

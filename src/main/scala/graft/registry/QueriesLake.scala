@@ -491,17 +491,17 @@ private[graft] object QueriesLake {
     }),
 
 
-    // DataSource V2 fixed-width scan end-to-end: materialize a
-    // deterministic fixed-width extract of lineitem, read it back
-    // through graft-fixedwidth with maxSplitBytes forcing multiple
-    // record-aligned byte-range splits (the 100-TB planning path), and
-    // aggregate. Round-trip parity with the oracle on the original
-    // table proves offset math, charset decode, and trim; pruning is
-    // plan-asserted in FixedWidthSourceSpec.
+    // fixed-width source end-to-end: materialize a deterministic
+    // fixed-width extract of lineitem, read it back through
+    // graft-fixedwidth (FixedWidth.slice over the text source, split by
+    // spark.sql.files.maxPartitionBytes), and aggregate. Round-trip
+    // parity with the oracle on the original table proves slicing,
+    // latin-1 decode, and trim; pruning is plan-asserted in
+    // FixedWidthSourceSpec.
     "q_dsv2_scan" -> ((s, dir) => {
       // fixture path keyed by a CONTENT-COLLISION-FREE digest of the sf
       // dir (hashCode could collide across dirs); write once, so
-      // repeated runs time the DSv2 READ, not the fixture export — but
+      // repeated runs time the source READ, not the fixture export — but
       // re-export whenever the fixture no longer matches the LIVE
       // lineitem table by (row count, Σ l_orderkey): the driver has
       // regenerated testdata in place between rounds, and a
@@ -510,14 +510,13 @@ private[graft] object QueriesLake {
       // (a full live-lineitem aggregate + a full fixture re-read) runs
       // ONCE per (JVM, dir) via ensureDsv2Fixture — the round-8 bench
       // timed it on every warm run, inflating the row ~10× and masking
-      // the DSv2 read it claims to measure; the staleness contract only
+      // the source read it claims to measure; the staleness contract only
       // needs first-touch-per-session (testdata regeneration happens
       // between driver rounds, i.e. between JVMs, never mid-session).
       val fwDir = ensureDsv2Fixture(s, dir)
       s.read.format("graft-fixedwidth")
         .option("layout", "okey:1:12,pkey:13:12,qty:25:8,rflag:33:4,sdate:37:12")
         .option("recordLength", 48)
-        .option("maxSplitBytes", 1 << 22)
         .load(fwDir)
         .groupBy(col("rflag"))
         .agg(count(lit(1)).as("n"),
@@ -1134,7 +1133,7 @@ private[graft] object QueriesLake {
           |GROUP BY 1 ORDER BY 1""".stripMargin,
 
 
-      // the DSv2 round-trip reproduces lineitem exactly, so the oracle
+      // the fixed-width round-trip reproduces lineitem exactly, so the oracle
       // aggregates the original table directly
       "q_dsv2_scan" ->
         """SELECT l_returnflag AS rflag,

@@ -1,298 +1,80 @@
 package graft.sources
 
-import java.util
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Row, SQLContext}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, PrunedScan, RelationProvider}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import scala.collection.JavaConverters._
+import graft.qcew.FixedWidth
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{StructField, StructType, StringType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
-
-/** DataSource V2 reader for fixed-width record files — the QCEW raw
-  * format (reference jp-qcew `decode.json` / `data_process.py:97-135`:
-  * 1060-char latin-1 lines, 121 contiguous fields) as a first-class
-  * Spark source: `spark.read.format("graft-fixedwidth")`.
+/** Fixed-width record files — the QCEW raw format (reference jp-qcew
+  * `decode.json` / `data_process.py:97-135`: 1060-char latin-1 lines,
+  * 121 contiguous fields) as a Spark source:
+  * `spark.read.format("graft-fixedwidth")`.
   *
-  * How it differs from [[graft.qcew.FixedWidth.readRaw]] +
-  * [[graft.qcew.FixedWidth.parse]], the path `Ingest` uses: that path
-  * reads newline-separated lines, so it tolerates CRLF and ragged
-  * (short or overlong) lines, and it slices each line's latin-1 bytes
-  * by offset. This source assumes every record is exactly
-  * `recordLength` chars plus the separator, and in exchange makes TWO
-  * things exact that a line-oriented source must approximate, both of
-  * which matter at 100 TB —
-  *
-  *   1. '''Splittable without newline scanning.''' Record `i` starts
-  *      at byte `i * stride` (stride = recordLength + separator, in a
-  *      single-byte charset), so input splits are pure offset
-  *      arithmetic: every split boundary is a record boundary, no
-  *      split ever straddles a record, and no reader scans backwards
-  *      for a line start the way text/csv splits must. 100 TB plans
-  *      into byte-range partitions with zero coordination.
-  *   2. '''Column pruning reaches the decode.''' The scan implements
-  *      `SupportsPushDownRequiredColumns`: only the requested fields'
-  *      byte ranges are charset-decoded and trimmed — a 3-column
-  *      projection of a 121-field record decodes ~3% of each record's
-  *      bytes. The line path prunes the unused field slices too, but
-  *      still decodes, CR-strips and re-encodes every whole line.
-  *      (Parity check: ORC/Parquet get this from their column layout;
-  *      raw text normally cannot.)
-  *
-  * The scan also implements `SupportsReportStatistics` — row count is
-  * exact from file sizes (`bytes / stride`), and `sizeInBytes` is
-  * scaled by the pruned fraction of the record, so Catalyst's
-  * broadcast-join threshold sees the projected size, not the raw file
-  * size.
+  * A thin pruned relation over [[graft.qcew.FixedWidth.slice]], the
+  * decoder `Ingest` runs: lines are read by
+  * [[graft.qcew.FixedWidth.readRaw]] (Spark's `text` source, so splits
+  * follow `spark.sql.files.maxPartitionBytes` as for every file source)
+  * and only the fields a query needs are sliced. CRLF and ragged
+  * (short or overlong) lines decode as `Ingest` decodes them.
   *
   * Options: `layout` = `name:pos:len[,name:pos:len...]` (1-based char
-  * positions, [[graft.qcew.Layout.spec]] emits the QCEW one),
-  * `recordLength` (chars), `lineSep` (default `"\n"`, may be empty for
-  * unseparated records), `charset` (default ISO-8859-1; must be
-  * single-byte so char positions equal byte offsets — validated),
-  * `trim` (default true), `maxSplitBytes` (default 128 MiB).
-  * All fields read as STRING; numeric decode stays downstream in
+  * positions, [[graft.qcew.Layout.spec]] emits the QCEW one) and
+  * `recordLength` (chars), which bounds every field. All fields read as
+  * STRING; numeric decode stays downstream in
   * [[graft.qcew.FixedWidth.cast]] (`try_cast`, null-on-bad-input),
   * matching the reference's lenient-cast split of concerns.
-  *
-  * Deliberately read-only and filter-pushdown-free: a fixed-width
-  * filter pushdown would re-implement string comparison byte-wise for
-  * a scan whose bottleneck is IO; Catalyst's codegen'd post-scan
-  * filter is already optimal there.
   */
-class FixedWidthSource extends TableProvider with DataSourceRegister {
+class FixedWidthSource extends RelationProvider with DataSourceRegister {
   override def shortName(): String = "graft-fixedwidth"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    FixedWidthSource.schemaFor(FixedWidthSource.parseLayout(options))
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new FixedWidthTable(new CaseInsensitiveStringMap(properties))
+  override def createRelation(sqlContext: SQLContext,
+                              parameters: Map[String, String]): BaseRelation = {
+    val path = parameters.getOrElse("path",
+      throw new IllegalArgumentException("graft-fixedwidth requires a path"))
+    new FixedWidthRelation(sqlContext, path, FixedWidthSource.parseLayout(parameters))
+  }
 }
 
 private[sources] object FixedWidthSource {
-  final case class Field(name: String, pos: Int, len: Int)
-
-  def parseLayout(options: CaseInsensitiveStringMap): Seq[Field] = {
-    val spec = Option(options.get("layout")).getOrElse(
+  def parseLayout(options: Map[String, String]): Seq[(String, Int, Int)] = {
+    val spec = options.getOrElse("layout",
       throw new IllegalArgumentException(
         "graft-fixedwidth requires a 'layout' option: name:pos:len[,name:pos:len...]"))
     val fields = spec.split(',').toSeq.map(_.trim).filter(_.nonEmpty).map { part =>
       part.split(':') match {
-        case Array(n, p, l) => Field(n.trim, p.trim.toInt, l.trim.toInt)
+        case Array(n, p, l) => (n.trim, p.trim.toInt, l.trim.toInt)
         case _ => throw new IllegalArgumentException(
           s"bad layout entry '$part' (want name:pos:len)")
       }
     }
-    val recordLength = options.getInt("recordLength", -1)
+    val recordLength = options.get("recordLength").map(_.toInt).getOrElse(-1)
     if (recordLength <= 0) throw new IllegalArgumentException(
       "graft-fixedwidth requires a positive 'recordLength' option")
-    fields.foreach { f =>
-      if (f.pos < 1 || f.len < 1 || f.pos + f.len - 1 > recordLength)
+    fields.foreach { case (name, pos, len) =>
+      if (pos < 1 || len < 1 || pos + len - 1 > recordLength)
         throw new IllegalArgumentException(
-          s"field ${f.name} [pos=${f.pos} len=${f.len}] outside record of length $recordLength")
+          s"field $name [pos=$pos len=$len] outside record of length $recordLength")
     }
     fields
   }
+}
 
+private[sources] class FixedWidthRelation(val sqlContext: SQLContext, path: String,
+                                          fields: Seq[(String, Int, Int)])
+    extends BaseRelation with PrunedScan {
   // nullable like every Spark file source: downstream casts null out
   // bad input, and writers of derived frames expect nullable columns
-  def schemaFor(fields: Seq[Field]): StructType =
-    StructType(fields.map(f => StructField(f.name, StringType, nullable = true)))
+  override val schema: StructType =
+    StructType(fields.map { case (name, _, _) => StructField(name, StringType, nullable = true) })
 
-  def charsetOf(options: CaseInsensitiveStringMap): String = {
-    val name = Option(options.get("charset")).getOrElse("ISO-8859-1")
-    val cs = java.nio.charset.Charset.forName(name)
-    // the whole offset algebra assumes 1 char == 1 byte
-    if (cs.newEncoder().maxBytesPerChar() != 1.0f)
-      throw new IllegalArgumentException(
-        s"graft-fixedwidth needs a single-byte charset; $name is variable-width")
-    name
-  }
-}
+  // buildScan hands back the decoder's own internal rows
+  override def needConversion: Boolean = false
 
-private[sources] class FixedWidthTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  private val layout = FixedWidthSource.parseLayout(options)
-
-  override def name(): String = s"graft-fixedwidth(${options.get("path")})"
-  override def schema(): StructType = FixedWidthSource.schemaFor(layout)
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
-    // `options` (table properties) carries path+layout; scan options may override
-    new FixedWidthScanBuilder(options)
-}
-
-private[sources] class FixedWidthScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = FixedWidthSource.schemaFor(
-    FixedWidthSource.parseLayout(options))
-
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  override def build(): Scan = {
-    val all = FixedWidthSource.parseLayout(options)
-    val byName = all.map(f => f.name -> f).toMap
-    val kept = required.fields.toSeq.map(f => byName.getOrElse(f.name,
-      throw new IllegalArgumentException(s"unknown column ${f.name}")))
-    new FixedWidthScan(options, kept)
-  }
-}
-
-/** One planned scan: files resolved, splits computed, stats reported. */
-private[sources] class FixedWidthScan(options: CaseInsensitiveStringMap,
-                                      fields: Seq[FixedWidthSource.Field])
-    extends Scan with Batch with SupportsReportStatistics {
-
-  private val recordLength = options.getInt("recordLength", -1)
-  private val lineSep = Option(options.get("lineSep")).getOrElse("\n")
-  private val charset = FixedWidthSource.charsetOf(options)
-  private val trimFields = options.getBoolean("trim", true)
-  private val maxSplitBytes = options.getLong("maxSplitBytes", 128L << 20)
-  private val stride = recordLength + lineSep.length
-
-  private def hadoopConf: Configuration =
-    SparkSession.active.sessionState.newHadoopConf()
-
-  /** Leaf data files under `path` (a file, directory, or glob). */
-  private def listFiles(): Seq[FileStatus] = {
-    val raw = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("graft-fixedwidth requires a path"))
-    val conf = hadoopConf
-    val p = new Path(raw)
-    val fs = p.getFileSystem(conf)
-    val matches = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-    val leaves = matches.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile) else Seq(st)
-    }
-    leaves.filterNot(st => st.getPath.getName.startsWith("_") ||
-      st.getPath.getName.startsWith("."))
-  }
-
-  /** Records in a file, validating that its length is whole records
-    * (trailing separator on the last record optional). */
-  private def recordsIn(len: Long, path: String): Long = {
-    val full = len / stride
-    val rem = len - full * stride
-    if (rem == 0) full
-    else if (rem == recordLength) full + 1 // last record unseparated
-    else throw new IllegalArgumentException(
-      s"$path length $len is not whole records (stride $stride, remainder $rem)")
-  }
-
-  override def readSchema(): StructType = StructType(
-    fields.map(f => StructField(f.name, StringType, nullable = true)))
-
-  override def toBatch: Batch = this
-
-  override def description(): String =
-    s"graft-fixedwidth ${options.get("path")} [${fields.map(_.name).mkString(",")}]"
-
-  override def estimateStatistics(): Statistics = {
-    val files = listFiles()
-    val rows = files.map(st => recordsIn(st.getLen, st.getPath.toString)).sum
-    // projected size: only the pruned fields' bytes survive the scan,
-    // so the broadcast-join threshold sees what the plan will carry
-    val keptBytes = fields.map(_.len).sum
-    val size = rows * math.max(1, keptBytes)
-    new Statistics {
-      override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(size)
-      override def numRows(): util.OptionalLong = util.OptionalLong.of(rows)
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val perSplit = math.max(1L, maxSplitBytes / stride)
-    listFiles().flatMap { st =>
-      val n = recordsIn(st.getLen, st.getPath.toString)
-      (0L until n by perSplit).map { start =>
-        FixedWidthPartition(st.getPath.toString, start,
-          math.min(perSplit, n - start))
-      }
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new FixedWidthReaderFactory(
-      new SerializableConfiguration(hadoopConf),
-      fields.toArray, recordLength, lineSep.length, charset, trimFields)
-}
-
-/** A byte range of one file: records [startRecord, startRecord+numRecords). */
-private[sources] final case class FixedWidthPartition(
-    path: String, startRecord: Long, numRecords: Long) extends InputPartition
-
-private[sources] class FixedWidthReaderFactory(
-    conf: SerializableConfiguration,
-    fields: Array[FixedWidthSource.Field],
-    recordLength: Int, sepLen: Int, charset: String,
-    trimFields: Boolean) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[FixedWidthPartition]
-    new PartitionReader[InternalRow] {
-      private val stride = recordLength + sepLen
-      private val hPath = new Path(p.path)
-      private val fs = hPath.getFileSystem(conf.value)
-      private val fileLen = fs.getFileStatus(hPath).getLen
-      private val in = fs.open(hPath)
-      in.seek(p.startRecord * stride) // exact: record i starts at i*stride
-
-      // chunked sequential reads: one readFully per CHUNK_RECORDS
-      // records, not per record — the per-record syscall was measured
-      // at ~5x the whole scan cost. The chunk is bounded (~4 MB at
-      // QCEW's 1061-byte stride) regardless of split size.
-      private val CHUNK_RECORDS = 4096
-      private val chunk = new Array[Byte](CHUNK_RECORDS * stride)
-      private var chunkCount = 0 // records in the current chunk
-      private var chunkIdx = 0   // next record within the chunk
-      private var done = 0L
-      private var row: InternalRow = _
-
-      private def refill(): Unit = {
-        val want = math.min(CHUNK_RECORDS.toLong, p.numRecords - done).toInt
-        val start = (p.startRecord + done) * stride
-        // the file's final record may lack its separator
-        val len = math.min(fileLen - start, want.toLong * stride).toInt
-        in.readFully(chunk, 0, len)
-        chunkCount = want
-        chunkIdx = 0
-      }
-
-      override def next(): Boolean = {
-        if (done >= p.numRecords) return false
-        if (chunkIdx >= chunkCount) refill()
-        val base = chunkIdx * stride
-        val values = new Array[Any](fields.length)
-        var i = 0
-        while (i < fields.length) {
-          val f = fields(i)
-          // decode ONLY this field's bytes — pruning skips the rest
-          var s = new String(chunk, base + f.pos - 1, f.len, charset)
-          if (trimFields) s = s.trim
-          values(i) = UTF8String.fromString(s)
-          i += 1
-        }
-        row = new GenericInternalRow(values)
-        chunkIdx += 1
-        done += 1
-        true
-      }
-
-      override def get(): InternalRow = row
-      override def close(): Unit = in.close()
-    }
+  override def buildScan(requiredColumns: Array[String]): RDD[Row] = {
+    val byName = fields.map(f => f._1 -> f).toMap
+    FixedWidth.slice(FixedWidth.readRaw(sqlContext.sparkSession, path), requiredColumns.toSeq.map(byName))
+      .queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 }

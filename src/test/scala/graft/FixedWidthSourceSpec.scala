@@ -2,13 +2,13 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.RowDataSourceScanExec
 
-import graft.qcew.Layout
+import graft.qcew.{FixedWidth, Layout}
 
-/** DataSource V2 fixed-width source (graft-fixedwidth): splittable
-  * offset-math scan + column pruning that reaches the byte decode.
+/** The graft-fixedwidth source: a pruned relation over
+  * [[FixedWidth.slice]], so it decodes every line as `Ingest` does and
+  * column pruning reaches the slicing.
   */
 class FixedWidthSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -19,11 +19,15 @@ class FixedWidthSourceSpec extends SparkSpec {
   private val layout3 = "a:1:4,b:5:6,num:11:5"
   private val recLen = 15
 
-  private def read(path: String, extra: Map[String, String] = Map.empty) = {
-    val base = spark.read.format("graft-fixedwidth")
-      .option("layout", layout3).option("recordLength", recLen)
-    extra.foldLeft(base) { case (r, (k, v)) => r.option(k, v) }.load(path)
-  }
+  private def read(path: String) =
+    spark.read.format("graft-fixedwidth")
+      .option("layout", layout3).option("recordLength", recLen).load(path)
+
+  private def readQcew(path: String) =
+    spark.read.format("graft-fixedwidth")
+      .option("layout", Layout.spec)
+      .option("recordLength", Layout.recordWidth)
+      .load(path)
 
   test("reads records, trims fields, resolves by short name") {
     val dir = Files.createTempDirectory("fw-src")
@@ -33,14 +37,15 @@ class FixedWidthSourceSpec extends SparkSpec {
     assert(rows.map(_.getString(2)).toSeq === Seq("123", "45"))
   }
 
-  test("last record without trailing separator is read; bad length fails loudly") {
+  test("last record without a trailing separator is read; short lines decode") {
     val dir = Files.createTempDirectory("fw-nosep")
     writeLatin1(dir, "a.fw", "ab  cdcdcd  123\nzz  yyyyyy 45  ") // no final \n
     assert(read(dir.toString).count() === 2)
-    val bad = Files.createTempDirectory("fw-bad")
-    writeLatin1(bad, "a.fw", "short\n")
-    val e = intercept[Exception](read(bad.toString).count())
-    assert(e.getMessage != null)
+    val short = Files.createTempDirectory("fw-short")
+    writeLatin1(short, "a.fw", "short\n")
+    val r = read(short.toString).collect()
+    assert(r.length === 1)
+    assert(r.head.toSeq === Seq("shor", "t", ""))
   }
 
   test("latin-1 bytes decode at exact positions") {
@@ -52,14 +57,18 @@ class FixedWidthSourceSpec extends SparkSpec {
     assert(r.getString(2) === "123")
   }
 
-  test("splits are record-aligned: tiny maxSplitBytes yields many partitions, same rows") {
+  test("splits follow spark.sql.files.maxPartitionBytes; same rows") {
     val dir = Files.createTempDirectory("fw-split")
     val lines = (0 until 97).map(i => f"r$i%03d${"x" * 6}$i%5d").mkString("", "\n", "\n")
     writeLatin1(dir, "a.fw", lines)
     val whole = read(dir.toString).as[(String, String, String)].collect().toSet
-    val split = read(dir.toString, Map("maxSplitBytes" -> "64"))
-    assert(split.rdd.getNumPartitions > 10)
-    assert(split.as[(String, String, String)].collect().toSet === whole)
+    val confs = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    confs.foreach(spark.conf.set(_, "64"))
+    try {
+      val split = read(dir.toString)
+      assert(split.rdd.getNumPartitions > 10)
+      assert(split.as[(String, String, String)].collect().toSet === whole)
+    } finally confs.foreach(spark.conf.unset)
     assert(whole.size === 97)
   }
 
@@ -68,54 +77,30 @@ class FixedWidthSourceSpec extends SparkSpec {
     writeLatin1(dir, "a.fw", "ab  cdcdcd  123\n")
     val df = read(dir.toString).select("num")
     val scan = df.queryExecution.executedPlan.collectFirst {
-      case b: BatchScanExec => b
-    }.getOrElse(fail("no BatchScanExec in plan"))
-    assert(scan.scan.readSchema().fieldNames.toSeq === Seq("num"))
+      case s: RowDataSourceScanExec => s
+    }.getOrElse(fail("no RowDataSourceScanExec in plan"))
+    assert(scan.requiredSchema.fieldNames.toSeq === Seq("num"))
     assert(df.collect().map(_.getString(0)).toSeq === Seq("123"))
-  }
-
-  test("statistics report exact row count and pruned size") {
-    val dir = Files.createTempDirectory("fw-stats")
-    writeLatin1(dir, "a.fw", "ab  cdcdcd  123\nzz  yyyyyy 45  \n")
-    val scan = read(dir.toString).select("a").queryExecution.executedPlan.collectFirst {
-      case b: BatchScanExec => b.scan
-    }.get.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
-    val st = scan.estimateStatistics()
-    assert(st.numRows().getAsLong === 2L)
-    assert(st.sizeInBytes().getAsLong === 2L * 4) // field a only
   }
 
   test("QCEW layout via Layout.spec round-trips a fixture record") {
     val dir = Files.createTempDirectory("fw-qcew")
     val rec = QcewFixtures.record(2024, 1, "541511", "10", "11", "12", "500000")
     writeLatin1(dir, "q.fw", rec + "\n")
-    val df = spark.read.format("graft-fixedwidth")
-      .option("layout", Layout.spec)
-      .option("recordLength", Layout.recordWidth)
-      .load(dir.toString)
-      .select("year", "qtr", "naics_code", "total_wages")
+    val df = readQcew(dir.toString).select("year", "qtr", "naics_code", "total_wages")
     val r = df.collect().head
     assert(r.getString(0) === "2024" && r.getString(1) === "1")
     assert(r.getString(2) === "541511" && r.getString(3) === "500000")
   }
 
-  test("parity with the csv-reader path on the QCEW flagship parse") {
+  test("parity with FixedWidth.parse(readRaw) on all 121 fields of dirty lines") {
     val dir = Files.createTempDirectory("fw-parity")
-    val recs = (0 until 25).map(i =>
-      QcewFixtures.record(2020 + i % 3, 1 + i % 4, f"54151$i%01d",
-        (10 + i).toString, (11 + i).toString, (12 + i).toString,
-        (100000 + 7 * i).toString))
-    writeLatin1(dir, "q.fw", recs.mkString("", "\n", "\n"))
-    val viaDsv2 = graft.qcew.FixedWidth.cast(
-      spark.read.format("graft-fixedwidth")
-        .option("layout", Layout.spec)
-        .option("recordLength", Layout.recordWidth)
-        .load(dir.toString))
-    val viaCsv = graft.qcew.FixedWidth.parse(
-      graft.qcew.FixedWidth.readRaw(spark, dir.toString))
-    assert(viaDsv2.schema === viaCsv.schema)
-    val key = Seq("year", "qtr", "naics_code", "total_wages", "first_month_employment")
-    assert(viaDsv2.select(key.map(col): _*).collect().toSet ===
-      viaCsv.select(key.map(col): _*).collect().toSet)
+    writeLatin1(dir, "q.fw", QcewFixtures.dirtyLines.mkString("", "\n", "\n"))
+    val viaSource = FixedWidth.cast(readQcew(dir.toString))
+    val viaParse = FixedWidth.parse(FixedWidth.readRaw(spark, dir.toString))
+    assert(viaSource.columns.toSeq === viaParse.columns.toSeq)
+    assert(viaSource.schema.map(_.dataType) === viaParse.schema.map(_.dataType))
+    assert(viaSource.count() === QcewFixtures.dirtyLines.count(!QcewFixtures.blank(_)))
+    assert(viaSource.exceptAll(viaParse).isEmpty && viaParse.exceptAll(viaSource).isEmpty)
   }
 }

@@ -70,15 +70,7 @@ class FixedWidthSpec extends SparkSpec {
       StructType(Layout.fields.map { case (n, _, _) => StructField(n, StringType) })))
 
   test("parse matches a per-field String.substring of dirty latin-1 lines") {
-    val base = QcewFixtures.record(2023, 2, "722511", "3", "4", "5", "777",
-      name = "PANADERÍA LA ÑAPA")
-    val contact = base.updated(849, 'Ñ').updated(919, 'é').updated(1059, 'ÿ')
-    val lines = Seq(
-      contact,                                   // high bytes before and after pos 850
-      base + "\r",                               // CRLF line
-      base.take(595),                            // short: ends mid naics_code
-      base + "EXTRA TAIL ß",                     // overlong
-      " " * Layout.recordWidth)                  // only spaces
+    val lines = QcewFixtures.dirtyLines
     val tmp = Files.createTempDirectory("fw-parity")
     Files.write(tmp.resolve("a.txt"),
       lines.mkString("", "\n", "\n").getBytes(StandardCharsets.ISO_8859_1))
@@ -86,8 +78,9 @@ class FixedWidthSpec extends SparkSpec {
     assert(want.head.getAs[String]("qcew_contact") == "Ñ")
     val viaFile = FixedWidth.parse(FixedWidth.readRaw(spark, tmp.toString)).collect().toSeq
     val viaFrame = FixedWidth.parse(lines.toDF("value")).collect().toSeq
-    // readRaw's CSV reader skips the blank (last) line; a caller's frame keeps it
-    for ((how, got, exp) <- Seq(("readRaw", viaFile, want.init), ("frame", viaFrame, want))) {
+    // readRaw drops blank lines; a caller's frame keeps them
+    val wantFile = lines.zip(want).filterNot(lw => QcewFixtures.blank(lw._1)).map(_._2)
+    for ((how, got, exp) <- Seq(("readRaw", viaFile, wantFile), ("frame", viaFrame, want))) {
       assert(got.size == exp.size, how)
       got.zip(exp).zipWithIndex.foreach { case ((g, w), i) =>
         Layout.fields.indices.foreach { j =>
@@ -95,6 +88,19 @@ class FixedWidthSpec extends SparkSpec {
         }
       }
     }
+  }
+
+  test("readRaw keeps bytes 0x01 and 0x00 inside a record; later fields stay put") {
+    val l = QcewFixtures.record(2023, 2, "722511", "3", "3", "3", "777",
+      name = "AB\u0001CD\u0000EF")
+    val tmp = Files.createTempDirectory("fw-ctl")
+    Files.write(tmp.resolve("a.txt"), (l + "\n").getBytes(StandardCharsets.ISO_8859_1))
+    val r = FixedWidth.parse(FixedWidth.readRaw(spark, tmp.toString))
+      .select("leg_corp_name", "naics_code", "total_wages").collect()
+    assert(r.length == 1)
+    assert(r(0).getString(0) == "AB\u0001CD\u0000EF")
+    assert(r(0).getString(1) == "722511")
+    assert(r(0).getLong(2) == 777L)
   }
 
   test("chars above U+00FF become '?' one for one; later fields stay aligned") {

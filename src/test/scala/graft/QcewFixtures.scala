@@ -43,4 +43,24 @@ object QcewFixtures {
       "latitude" -> "18.22083",
       "longitude" -> "-66.59015"
     ))
+
+  /** Dirty raw lines, each a case the decoder must slice like a
+    * per-field `String.substring`: high latin-1 bytes before and after
+    * position 850, a CRLF line, a short line ending mid `naics_code`, an
+    * overlong line, and blank lines (spaces only, tab only, CR only).
+    */
+  val dirtyLines: Seq[String] = {
+    val base = record(2023, 2, "722511", "3", "4", "5", "777", name = "PANADERÍA LA ÑAPA")
+    Seq(
+      base.updated(849, 'Ñ').updated(919, 'é').updated(1059, 'ÿ'),
+      base + "\r",
+      base.take(595),
+      base + "EXTRA TAIL ß",
+      " " * Layout.recordWidth,
+      "\t",
+      "\r")
+  }
+
+  /** A line a raw read drops: every char at or below a space. */
+  def blank(line: String): Boolean = line.forall(_ <= ' ')
 }
