@@ -472,7 +472,7 @@ object Inference {
     * need not agree to the last ulp.
     *
     * Scale shape: one map-side-combined 9-group aggregate over the
-    * scan; the grid join is a broadcast of 9 rows. First-digit
+    * scan; the grid join broadcasts those (at most 9) counts. First-digit
     * extraction is numeric when possible; the string form used here
     * (first char of the decimal rendering) is exact for integral longs.
     */
@@ -488,8 +488,10 @@ object Inference {
         (1 to 9).map(d => math.log10(1.0 + 1.0 / d))
       ).getItem(col("id").cast("int") - 1).as("p"))
     val total = counts.agg(sum("n_obs").as("n"))
-    broadcast(expected)
-      .join(counts, Seq("digit"), "left")
+    // the hint goes on the build side: a left outer join cannot build
+    // its preserved (left) side, and `counts` has at most 9 rows
+    expected
+      .join(broadcast(counts), Seq("digit"), "left")
       .withColumn("n_obs", coalesce(col("n_obs"), lit(0L)))
       .crossJoin(broadcast(total))
       .select(col("digit"), col("n_obs"), col("n"),

@@ -2,6 +2,7 @@ package graft.qcew
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.BinaryType
 
 /** Fixed-width QCEW record scan + parse (SURVEY S1, P1, P2).
@@ -40,16 +41,25 @@ object FixedWidth {
   // the chars `String.trim` strips: a line of nothing else is blank
   private val Blank = (0 to 0x20).map(_.toChar).mkString
 
-  /** Read raw fixed-width lines (`\n`-separated) as one binary column
-    * `value`: each line's bytes with one trailing CR dropped. Blank
-    * lines (every byte <= 0x20, empty included) are dropped.
+  /** Read raw fixed-width lines (`\n`-separated) under `path` (a file, a
+    * directory or a glob) as one binary column `value`: each line's
+    * bytes with one trailing CR dropped. Blank lines (every byte <= 0x20,
+    * empty included) are dropped.
+    *
+    * The lines come from Spark's `text` source, but the files are listed
+    * here, once, on the driver: the glob's matches go to the scan
+    * already listed ([[org.apache.spark.sql.graft.ColumnBridge.listedText]]),
+    * so a glob of more than 32 files starts no listing job with one task
+    * per file. Hidden files (`_x`, `.x`) are skipped and a directory is
+    * listed as Spark lists it; a path that matches nothing fails as
+    * `spark.read.text` fails.
     */
   def readRaw(spark: SparkSession, path: String): DataFrame = {
     val b = col("value").cast(BinaryType)
     val crlf = substring(b, -1, 1) === lit(Array[Byte]('\r'))
-    spark.read.option("lineSep", "\n").text(path)
+    ColumnBridge.listedText(spark, path)
       // the decode runs only for a line that starts with a blank byte
-      .where(substring(b, 1, 1) > lit(Array[Byte](' ')) || trim(decode(b, Latin1), Blank) =!= "")
+      .where(substring(b, 1, 1) > lit(Array[Byte](' ')) || btrim(decode(b, Latin1), lit(Blank)) =!= "")
       .select(when(crlf, b.substr(lit(1), length(b) - 1)).otherwise(b).as("value"))
   }
 

@@ -15,9 +15,10 @@ import org.slf4j.LoggerFactory
   *
   * Spark-first design notes:
   *   - The scalable path is [[ingestAll]]: ONE read over the whole glob
-  *     (10^2..10^6 files — Spark's file listing is parallelized on the
-  *     driver + distributed for large trees) and ONE
-  *     `partitionBy(year, qtr)` write. The parse is narrow; the only
+  *     and ONE `partitionBy(year, qtr)` write. The glob is expanded
+  *     once on the driver and its files go to the scan already listed
+  *     ([[FixedWidth.readRaw]]); a matched directory is listed by
+  *     Spark, in parallel for a large tree. The parse is narrow; the only
   *     wide operation is the hash repartition on the partition keys,
   *     which puts each (year, qtr) in exactly one task, so the lake
   *     holds one file per partition with no small-file explosion.
@@ -32,6 +33,10 @@ import org.slf4j.LoggerFactory
   *     the reference's skip-if-exists file check.
   *   - [[ingestFile]] keeps the reference's per-file granularity
   *     (mode-named output, skip-if-exists) for drip-feed ingestion.
+  *   - Every lake write goes through [[LocalFs]] on a `file:` path
+  *     (writer options, not session conf): without libhadoop, Hadoop's
+  *     local filesystem starts a `chmod` process for each file and
+  *     directory it writes; [[LocalFs]] sets the same bits in-process.
   */
 object Ingest {
   private val log = LoggerFactory.getLogger(getClass)
@@ -75,7 +80,7 @@ object Ingest {
     val spark = df.sparkSession
     val tasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val writer = df.repartition(tasks, col("year"), col("qtr"))
-      .write.mode(SaveMode.Overwrite)
+      .write.options(LocalFs.writeOptions).mode(SaveMode.Overwrite)
     // a writer option, NOT spark.conf.set: a session-conf mutation would
     // silently flip overwrite semantics for every later write in the
     // caller's session
@@ -105,7 +110,7 @@ object Ingest {
       if (fs.exists(outPath)) {
         log.info(s"skip (exists): $out"); Some(out)
       } else {
-        parsed.coalesce(1).write.mode(SaveMode.Overwrite).parquet(out)
+        parsed.coalesce(1).write.options(LocalFs.writeOptions).mode(SaveMode.Overwrite).parquet(out)
         log.info(s"inserted: $out"); Some(out)
       }
     } finally parsed.unpersist()

@@ -1,11 +1,19 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path}
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryCompilationErrors
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.util.HadoopFSUtils
 
 /** Column <-> catalyst Expression bridge for graft's native expressions
-  * (e.g. [[graft.functions.DotFloat]]).
+  * (e.g. [[graft.functions.DotFloat]]), plus the other Spark internals
+  * graft reaches: a localCheckpoint's RDD and a pre-listed text scan.
   *
   * Spark 4 hides the classic converters behind `private[sql]`, so this
   * object lives in an `org.apache.spark.sql` subpackage to reach them —
@@ -42,4 +50,52 @@ object ColumnBridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
       case _ => None
     }
+
+  /** `spark.read.option("lineSep", "\n").text(path)`, with the listing
+    * already done: `path` (a file, a directory or a glob) is expanded
+    * once on the driver with `globStatus`, as Spark's `DataSource` does,
+    * and every matched file's status goes into the index's
+    * [[FileStatusCache]], so the index lists nothing for it. Above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
+    * Spark would list them with a distributed job, one task per path.
+    * A matched directory is not pre-filled: the index lists it as
+    * Spark does. Matched files with hidden names (`_x`, `.x`) are
+    * dropped, as Spark's listing drops them; a path that matches
+    * nothing fails with Spark's own PATH_NOT_FOUND error.
+    */
+  def listedText(spark: SparkSession, path: String): DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sessionState = session.sessionState
+    val pattern = new Path(path)
+    val fs = pattern.getFileSystem(sessionState.newHadoopConf())
+    val qualified = pattern.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    val matches = Option(fs.globStatus(qualified)).getOrElse(Array.empty[FileStatus])
+    if (matches.isEmpty) throw QueryCompilationErrors.dataPathNotExistError(qualified.toString)
+    val roots = matches.filter(m =>
+      m.isDirectory || !HadoopFSUtils.shouldFilterOutPathName(m.getPath.getName))
+    // not the session's shared cache, which is a no-op when
+    // spark.sql.hive.filesourcePartitionFileCacheSize is 0
+    val cache = new FileStatusCache {
+      private val leaves = new java.util.concurrent.ConcurrentHashMap[Path, Array[FileStatus]]()
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] = Option(leaves.get(p))
+      override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = leaves.put(p, files)
+      override def invalidateAll(): Unit = leaves.clear()
+    }
+    // a listing returns block locations unless the session ignores them;
+    // built as Spark's listing builds them, without owner, group and
+    // permission, whose lookup starts an `ls` process per file on a
+    // local filesystem without libhadoop
+    val locate = !sessionState.conf.ignoreDataLocality
+    roots.filterNot(_.isDirectory).foreach { f =>
+      cache.putLeafFiles(f.getPath, Array(
+        if (!locate) f
+        else new LocatedFileStatus(f.getLen, false, f.getReplication, f.getBlockSize,
+          f.getModificationTime, 0, null, null, null, null, f.getPath, f.hasAcl,
+          f.isEncrypted, f.isErasureCoded, fs.getFileBlockLocations(f, 0, f.getLen))))
+    }
+    val options = Map("lineSep" -> "\n")
+    val index = new InMemoryFileIndex(session, roots.map(_.getPath).toSeq, options, None, cache)
+    session.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      new StructType().add("value", StringType), None, new TextFileFormat, options)(session))
+  }
 }

@@ -1,11 +1,19 @@
 package graft
 
 import graft.qcew.{FixedWidth, Layout, NaicsAgg}
-import org.apache.spark.sql.Row
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.util.Try
 
 class FixedWidthSpec extends SparkSpec {
   import spark.implicits._
@@ -101,6 +109,79 @@ class FixedWidthSpec extends SparkSpec {
     assert(r(0).getString(0) == "AB\u0001CD\u0000EF")
     assert(r(0).getString(1) == "722511")
     assert(r(0).getLong(2) == 777L)
+  }
+
+  /** One entry per job `body` starts in the calling thread. Job events
+    * reach listeners asynchronously, so a job of another group runs
+    * last: once it is seen, every earlier job has been too.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"fw-jobs-${System.nanoTime}"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "probe")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      eventually(timeout(Span(10, Seconds))) { assert(seen.contains(s"$group-end")) }
+      seen.toArray(Array.empty[String]).toSeq.filter(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Each scan partition's files as (path, start, length, hosts). */
+  private def scanPartitions(df: DataFrame): Seq[Seq[(Path, Long, Long, Seq[String])]] =
+    df.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
+      .inputRDD.partitions.toSeq.map { case p: FilePartition =>
+        p.files.toSeq.map(f => (f.toPath, f.start, f.length, f.locations.toSeq))
+      }
+
+  test("readRaw over a 40-file glob starts no job: rows and scan partitions of " +
+      "spark.read.text, hidden files skipped") {
+    val dir = Files.createTempDirectory("fw-glob")
+    (0 until 40).foreach { i =>
+      Files.write(dir.resolve(f"r$i%02d.txt"), (0 to i % 3).map(j =>
+        QcewFixtures.record(2001 + i % 20, 1 + i % 4, "541511", s"$j", "1", "1", s"$i"))
+        .mkString("", "\n", "\n").getBytes(StandardCharsets.ISO_8859_1))
+    }
+    Files.write(dir.resolve("_x.txt"), "HIDDEN_\n".getBytes(StandardCharsets.ISO_8859_1))
+    Files.write(dir.resolve(".x.txt"), "HIDDEN.\n".getBytes(StandardCharsets.ISO_8859_1))
+    val glob = s"$dir/*.txt"
+    var raw: DataFrame = null
+    val jobs = jobsOf { raw = FixedWidth.readRaw(spark, glob) }
+    assert(jobs.isEmpty, s"readRaw started ${jobs.size} job(s) to list the glob")
+    // spark.read.text lists the 40 paths with a job (above the 32-path
+    // threshold); readRaw's lines must be its lines, file for file
+    var text: DataFrame = null
+    assert(jobsOf { text = spark.read.option("lineSep", "\n").text(glob) }.nonEmpty)
+    val want = text.select(col("value").cast("binary")).collect().map(_.getAs[Array[Byte]](0).toSeq)
+    val got = raw.collect().map(_.getAs[Array[Byte]](0).toSeq)
+    assert(got.length == (0 until 40).map(_ % 3 + 1).sum && got.toSeq == want.toSeq)
+    assert(!got.exists(_.startsWith("HIDDEN".getBytes.toSeq)), "a hidden file was read")
+    assert(scanPartitions(raw) == scanPartitions(text))
+  }
+
+  test("readRaw on a file, a directory, a missing path and an empty glob acts as spark.read.text") {
+    val dir = Files.createTempDirectory("fw-paths")
+    Files.write(dir.resolve("a.txt"), "aaa\nbbb\n".getBytes(StandardCharsets.ISO_8859_1))
+    Files.write(dir.resolve("_x.txt"), "hid\n".getBytes(StandardCharsets.ISO_8859_1))
+    Files.createDirectory(dir.resolve("sub"))
+    Files.write(dir.resolve("sub/b.txt"), "ccc\n".getBytes(StandardCharsets.ISO_8859_1))
+    def lines(df: DataFrame) = df.select(col("value").cast("string")).collect().map(_.getString(0)).toSeq
+    for (p <- Seq(s"$dir/a.txt", dir.toString, s"$dir/*", s"$dir/_x.txt"))
+      assert(lines(FixedWidth.readRaw(spark, p)) == lines(spark.read.text(p)), p)
+    assert(lines(FixedWidth.readRaw(spark, s"$dir/*")).sorted == Seq("aaa", "bbb", "ccc"))
+    for (p <- Seq(s"$dir/missing.txt", s"$dir/*.none", s"$dir/nowhere/*.txt")) {
+      val want = Try(spark.read.text(p)).failed.get
+      val got = Try(FixedWidth.readRaw(spark, p)).failed.get
+      assert(got.getClass == want.getClass && got.getMessage == want.getMessage, p)
+      assert(got.getMessage.contains("PATH_NOT_FOUND"), p)
+    }
   }
 
   test("chars above U+00FF become '?' one for one; later fields stay aligned") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -382,7 +384,17 @@ class MiningSpec extends SparkSpec {
     val vals = counts.zipWithIndex.flatMap { case (c, i) =>
       Seq.fill(c)((i + 1) * 100L + 7L) // e.g. digit 3 -> value 307
     } ++ Seq(-5L, 0L) // non-positive values must be ignored
-    val out = Inference.benford(vals.toDF("v"), col("v")).collect()
+    val df = Inference.benford(vals.toDF("v"), col("v"))
+    val out = df.collect()
+    // the (at most 9-row) observed counts are the broadcast build side
+    // of the grid's left join; a hint on the grid (its preserved side)
+    // would be dropped, leaving the strategy to the size estimate
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), plan)
+    val gridJoin = df.queryExecution.optimizedPlan.collectFirst {
+      case j: Join if j.joinType == LeftOuter => j.hint
+    }
+    assert(gridJoin.exists(_.rightHint.exists(_.strategy.contains(BROADCAST))), gridJoin)
     assert(out.length === 9)
     assert(out.map(_.getAs[Int]("digit")).toSeq === (1 to 9))
     assert(out.map(_.getAs[Long]("n_obs")).toSeq === counts.map(_.toLong))

@@ -86,6 +86,52 @@ class QcewModulesSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** The commands of the processes the JVM starts during `body`. */
+  private def processesDuring(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      body
+      rec.stop()
+      val dump = Files.createTempFile("processes", ".jfr")
+      rec.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.map(_.getString("command")).toSeq
+    } finally rec.close()
+  }
+
+  test("ingestAll starts no chmod process; lake permissions are Hadoop's") {
+    val raw = Files.createTempDirectory("rawperm")
+    (0 until 40).foreach { i =>
+      writeLatin1(raw, s"r$i.txt", Seq(
+        QcewFixtures.record(2001 + i % 10, 1 + i % 4, "541511", "1", "1", "1", s"$i")))
+    }
+    val lake = Files.createTempDirectory("lakeperm")
+    val chmods = processesDuring {
+      assert(Ingest.ingestAll(spark, raw.toString + "/*.txt", lake.toString).count() == 40)
+    }.filter(c => c.startsWith("chmod") && c.contains(lake.toString))
+    assert(chmods.isEmpty, s"${chmods.size} chmod processes, e.g. ${chmods.take(2)}")
+    // the same frame written through the session's own `file:` filesystem
+    val plain = Files.createTempDirectory("plainperm")
+    val plainChmods = processesDuring {
+      FixedWidth.parse(FixedWidth.readRaw(spark, raw.toString + "/*.txt"))
+        .write.mode("overwrite").partitionBy("year", "qtr").parquet(plain.toString)
+    }.count(c => c.startsWith("chmod") && c.contains(plain.toString))
+    // without libhadoop Hadoop starts one per file and directory: the
+    // recording sees processes
+    if (!org.apache.hadoop.io.nativeio.NativeIO.isAvailable) assert(plainChmods > 0)
+    def perms(root: java.nio.file.Path): Map[String, Set[String]] =
+      Files.walk(root).iterator().asScala.filter(_ != root).toSeq.groupBy { p =>
+        val name = p.getFileName.toString
+        if (Files.isDirectory(p)) "dir" else if (name.endsWith(".crc")) "crc"
+        else if (name.endsWith(".parquet")) "data" else name
+      }.map { case (kind, ps) => kind -> ps.map(p =>
+        java.nio.file.attribute.PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toSet }
+    val (got, want) = (perms(lake), perms(plain))
+    assert(Set("dir", "crc", "data").subsetOf(got.keySet))
+    got.foreach { case (kind, ps) => assert(want.get(kind).contains(ps), kind) }
+  }
+
   test("lake: dim-filter join triggers DYNAMIC partition pruning on the fact scan") {
     val raw = Files.createTempDirectory("rawdpp")
     val out = Files.createTempDirectory("lakedpp")
