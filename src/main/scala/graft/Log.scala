@@ -19,6 +19,14 @@ package graft
   * jobs for it" twice on every streaming query stop, once the query's
   * jobs are already done. That one message is filtered out; the
   * logger's other WARNs ("Broadcasting large task binary") stay.
+  *
+  * Every streaming query start logs three lines about what Spark does
+  * on its own: ResolveWriteToStream's "spark.sql.adaptive.enabled is
+  * not supported in streaming…" and MicroBatchExecution's "Disabling
+  * AQE…" (Spark turns AQE off for the stream), and
+  * ResolveWriteToStream's "Temporary checkpoint location created…"
+  * (Spark deletes that directory when the query stops). Those three
+  * messages are filtered out; the loggers' other messages stay.
   */
 object Log {
   def silenceNoisyWarnings(): Unit = {
@@ -40,6 +48,10 @@ object Log {
         "org.apache.spark.rdd.MapPartitionsRDD",
         org.apache.logging.log4j.Level.ERROR)
       dropMessage("org.apache.spark.scheduler.DAGScheduler", "Failed to cancel job group")
+      val stream = "org.apache.spark.sql.execution.streaming.runtime."
+      dropMessage(stream + "ResolveWriteToStream", "spark.sql.adaptive.enabled is not supported in streaming")
+      dropMessage(stream + "ResolveWriteToStream", "Temporary checkpoint location created")
+      dropMessage(stream + "MicroBatchExecution", "Disabling AQE since AQE is not supported in stateful")
     } catch { case _: Throwable => () } // logging config must never fail a run
   }
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.qcew.{NaicsAgg, Resample, Series}
 import graft.ext.{Affinity, AsofJoin, Bloom, Corpus, Dedup, EventsStream, Forecast, Graph, Inference, Multimodal, Privacy, Quantiles, ScaleOps, Sessionize, Similarity, Sketch, Spatial, StatefulOps, TextStats, TimeFill}
@@ -14,8 +15,12 @@ import graft.ext.{Affinity, AsofJoin, Bloom, Corpus, Dedup, EventsStream, Foreca
   */
 private[graft] object QueryShared {
 
+  /** Registry table `name` under `dir`: one parquet file, read with the
+    * schema from its footer ([[ColumnBridge.parquetFile]]), so opening
+    * a table starts no Spark job. A table that is not one file fails.
+    */
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    ColumnBridge.parquetFile(s, s"$dir/$name.parquet")
 
   /** One-time-per-(JVM, dir) setup for q_dsv2_scan's fixed-width
     * fixture: verifies the on-disk extract still matches the live

@@ -1,8 +1,11 @@
 package graft.ext
 
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType}
 
 /** Event-stream analytics (SURVEY §2.10 extension): tumbling-window
   * aggregates in both batch form (oracle-able with `date_trunc`) and
@@ -12,6 +15,12 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * (window, event_type) — bounded cardinality; the 10-minute watermark
   * bounds state retention, so executors hold O(windows-in-flight ×
   * types), independent of throughput.
+  *
+  * Every read of the events file, batch or stream, takes its schema
+  * from the file's footer on the driver ([[ColumnBridge.parquetFooter]]
+  * and [[ColumnBridge.parquetSchema]]), so building a frame starts no
+  * Spark job. Only the rollup and snapshot state directories, which
+  * hold many files, are read with Spark's schema inference.
   */
 object EventsStream {
 
@@ -42,19 +51,17 @@ object EventsStream {
     s
   }
 
-  /** Probe the stored type of `ts` without touching the caller's conf.
-    * The probe session enables nanos-as-long so a legacy
-    * TIMESTAMP(NANOS) file surfaces as LongType instead of throwing
-    * PARQUET_TYPE_ILLEGAL; for any other encoding the conf is a no-op
-    * and the real logical type comes back (TimestampNTZType for naive
-    * micros, TimestampType for UTC-adjusted micros).
+  /** Whether the file stores `ts` as INT64 TIMESTAMP(NANOS), which
+    * Spark reads only as a long, under the nanos-as-long legacy conf
+    * (without it the read fails with PARQUET_TYPE_ILLEGAL).
     */
-  private def probeTsType(spark: SparkSession, path: String): org.apache.spark.sql.types.DataType = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(path).schema.find(_.name == "ts")
-      .map(_.dataType)
-      .getOrElse(org.apache.spark.sql.types.TimestampType)
+  private def storesNanos(footer: org.apache.parquet.hadoop.Footer): Boolean = {
+    val file = footer.getParquetMetadata.getFileMetaData.getSchema
+    file.containsField("ts") && (file.getType(file.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+        t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+      case _ => false
+    })
   }
 
   /** Normalize a loaded `ts` column to TIMESTAMP (LTZ):
@@ -65,11 +72,11 @@ object EventsStream {
     *    window/date_trunc match the DuckDB oracle's naive timestamps;
     *  - TIMESTAMP -> pass through.
     */
-  private def normalizeTs(df: DataFrame, stored: org.apache.spark.sql.types.DataType): DataFrame =
+  private def normalizeTs(df: DataFrame, stored: DataType): DataFrame =
     stored match {
-      case org.apache.spark.sql.types.LongType =>
+      case LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _: org.apache.spark.sql.types.TimestampNTZType =>
+      case _: TimestampNTZType =>
         df.withColumn("ts", col("ts").cast("timestamp"))
       case _ => df
     }
@@ -77,14 +84,16 @@ object EventsStream {
   /** Read the events table, schema-dispatched on the stored `ts` type
     * (the driver has shipped both INT64-nanos and naive-micros
     * encodings across testdata generations; see [[normalizeTs]]). The
-    * nanos legacy conf is applied only when the file actually stores
-    * nanos, and only on a session clone.
+    * schema and the stored `ts` type come from one footer read on the
+    * driver ([[ColumnBridge.parquetFooter]]), so building the frame
+    * starts no Spark job. The nanos legacy conf is applied only when
+    * the file actually stores nanos, and only on a session clone.
     */
   def readEvents(spark: SparkSession, path: String): DataFrame = {
-    val stored = probeTsType(spark, path)
-    val isNanos = stored == org.apache.spark.sql.types.LongType
-    val s = if (isNanos) cloneSession(spark, nanos = true) else spark
-    normalizeTs(s.read.parquet(path), stored)
+    val footer = ColumnBridge.parquetFooter(spark, path)
+    val s = if (storesNanos(footer)) cloneSession(spark, nanos = true) else spark
+    val schema = ColumnBridge.parquetSchema(s, footer)
+    normalizeTs(s.read.schema(schema).parquet(path), schema("ts").dataType)
   }
 
   /** Batch tumbling-hour aggregate — the exact batch equivalent of the
@@ -97,18 +106,6 @@ object EventsStream {
         count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(20,4)")).as("total_value"))
       .orderBy("hour", "event_type")
-
-  /** Streaming parquet source for ONE file: the file source wants a
-    * directory, so stream the parent glob-filtered to the file name.
-    * Shared by every bounded-stream harness in this package.
-    */
-  private[ext] def singleFileStream(s: SparkSession, path: String): DataFrame = {
-    val schema = s.read.parquet(path).schema // bounded: schema inference once
-    val p = java.nio.file.Paths.get(path)
-    s.readStream.schema(schema)
-      .option("pathGlobFilter", p.getFileName.toString)
-      .parquet(p.getParent.toString)
-  }
 
   /** Per-completed-run micro-batch accounting, keyed by sink/query
     * name: (micro-batches, Σ batchDuration ms). Populated by every
@@ -167,10 +164,11 @@ object EventsStream {
   }
 
   /** The streaming twin of [[readEvents]]: bounded parquet stream over
-    * the events file, schema-dispatched on the stored `ts` type exactly
-    * like the batch read (nanos conf scoped to a session clone ONLY
-    * when the file stores nanos), `ts` normalized to a microsecond
-    * timestamp. Every streaming operator in this module starts here.
+    * the events file, with the schema from its footer and dispatched on
+    * the stored `ts` type exactly like the batch read (nanos conf set on
+    * the clone ONLY when the file stores nanos), `ts` normalized to a
+    * microsecond timestamp. Every streaming operator in this module
+    * starts here.
     *
     * The clone also caps `spark.sql.shuffle.partitions` (= state-store
     * instances per stateful operator) at 8 BY DEFAULT: per-micro-batch
@@ -184,8 +182,8 @@ object EventsStream {
     * clone; batch queries keep the session's parallelism.
     */
   def readEventsStream(spark: SparkSession, path: String): DataFrame = {
-    val stored = probeTsType(spark, path)
-    val s = cloneSession(spark, nanos = stored == org.apache.spark.sql.types.LongType)
+    val footer = ColumnBridge.parquetFooter(spark, path)
+    val s = cloneSession(spark, nanos = storesNanos(footer))
     val requested = s.conf.getOption("spark.graft.stream.statePartitions")
       .map(v => scala.util.Try(v.toInt).getOrElse(
         throw new IllegalArgumentException(
@@ -195,7 +193,11 @@ object EventsStream {
     val current = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
     s.conf.set("spark.sql.shuffle.partitions",
       requested.getOrElse(math.min(8, current)).toString)
-    normalizeTs(singleFileStream(s, path), stored)
+    // the file source streams a directory: the parent, filtered to the file
+    val schema = ColumnBridge.parquetSchema(s, footer)
+    val file = footer.getFile
+    normalizeTs(s.readStream.schema(schema).option("pathGlobFilter", file.getName)
+      .parquet(file.getParent.toString), schema("ts").dataType)
   }
 
   /** Streaming form: parquet source → watermark → tumbling window.
@@ -343,7 +345,7 @@ object EventsStream {
     val stream = readEventsStream(spark, path)
     val s = stream.sparkSession // the conf-scoped clone owns both sides
     val dim = broadcast(
-      s.read.parquet(path).select(col("event_type")).distinct()
+      ColumnBridge.parquetFile(s, path).select(col("event_type")).distinct()
         .withColumn("label", upper(col("event_type")))
         .withColumn("type_weight", length(col("event_type"))))
     stream.join(dim, Seq("event_type"))

@@ -3,6 +3,7 @@ package graft.qcew
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.slf4j.LoggerFactory
 
 /** ETL driver: raw fixed-width tree → partitioned parquet lake
@@ -117,14 +118,18 @@ object Ingest {
   }
 
   /** Serve the processed lake (SURVEY S5/S6): multi-file parquet scan;
-    * Catalyst prunes columns/partitions from downstream selects. Also
+    * Catalyst prunes columns/partitions from downstream selects. The
+    * scan gets the glob's matches ([[ColumnBridge.glob]]), not the glob:
+    * Spark would look up the pattern itself as a path and log the miss
+    * at WARN with a stack trace. Also
     * registers the frame as a temp view (SURVEY S9; reference
     * `data_viz.py:15-16` serves SQL-string consumers via
     * `spark.table("qcew")`) — pass `viewName = None` to skip.
     */
   def readProcessed(spark: SparkSession, processedDir: String,
                     viewName: Option[String] = Some("qcew")): DataFrame = {
-    val df = spark.read.parquet(s"$processedDir/pr-qcew-*.parquet")
+    val df = spark.read.parquet(
+      ColumnBridge.glob(spark, s"$processedDir/pr-qcew-*.parquet").map(_.getPath.toString): _*)
     viewName.foreach(df.createOrReplaceTempView)
     df
   }

@@ -1,19 +1,24 @@
 package org.apache.spark.sql.graft
 
 import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.util.HadoopFSUtils
 
 /** Column <-> catalyst Expression bridge for graft's native expressions
   * (e.g. [[graft.functions.DotFloat]]), plus the other Spark internals
-  * graft reaches: a localCheckpoint's RDD and a pre-listed text scan.
+  * graft reaches: a localCheckpoint's RDD, a pre-listed text scan and
+  * a parquet file's footer schema.
   *
   * Spark 4 hides the classic converters behind `private[sql]`, so this
   * object lives in an `org.apache.spark.sql` subpackage to reach them —
@@ -52,26 +57,20 @@ object ColumnBridge {
     }
 
   /** `spark.read.option("lineSep", "\n").text(path)`, with the listing
-    * already done: `path` (a file, a directory or a glob) is expanded
-    * once on the driver with `globStatus`, as Spark's `DataSource` does,
-    * and every matched file's status goes into the index's
+    * already done: `path` is expanded once on the driver ([[glob]]), and
+    * every matched file's status goes into the index's
     * [[FileStatusCache]], so the index lists nothing for it. Above
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths
     * Spark would list them with a distributed job, one task per path.
     * A matched directory is not pre-filled: the index lists it as
     * Spark does. Matched files with hidden names (`_x`, `.x`) are
-    * dropped, as Spark's listing drops them; a path that matches
-    * nothing fails with Spark's own PATH_NOT_FOUND error.
+    * dropped, as Spark's listing drops them.
     */
   def listedText(spark: SparkSession, path: String): DataFrame = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val sessionState = session.sessionState
-    val pattern = new Path(path)
-    val fs = pattern.getFileSystem(sessionState.newHadoopConf())
-    val qualified = pattern.makeQualified(fs.getUri, fs.getWorkingDirectory)
-    val matches = Option(fs.globStatus(qualified)).getOrElse(Array.empty[FileStatus])
-    if (matches.isEmpty) throw QueryCompilationErrors.dataPathNotExistError(qualified.toString)
-    val roots = matches.filter(m =>
+    val fs = new Path(path).getFileSystem(sessionState.newHadoopConf())
+    val roots = glob(spark, path).filter(m =>
       m.isDirectory || !HadoopFSUtils.shouldFilterOutPathName(m.getPath.getName))
     // not the session's shared cache, which is a no-op when
     // spark.sql.hive.filesourcePartitionFileCacheSize is 0
@@ -94,8 +93,54 @@ object ColumnBridge {
           f.isEncrypted, f.isErasureCoded, fs.getFileBlockLocations(f, 0, f.getLen))))
     }
     val options = Map("lineSep" -> "\n")
-    val index = new InMemoryFileIndex(session, roots.map(_.getPath).toSeq, options, None, cache)
+    val index = new InMemoryFileIndex(session, roots.map(_.getPath), options, None, cache)
     session.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
       new StructType().add("value", StringType), None, new TextFileFormat, options)(session))
   }
+
+  /** `path` (a file, a directory or a glob) expanded once on the driver
+    * with `globStatus`, as Spark's `DataSource` expands it; a path that
+    * matches nothing fails with Spark's own PATH_NOT_FOUND error.
+    */
+  def glob(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val pattern = new Path(path)
+    val fs = pattern.getFileSystem(stateOf(spark).newHadoopConf())
+    val qualified = pattern.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    val matches = Option(fs.globStatus(qualified)).getOrElse(Array.empty[FileStatus])
+    if (matches.isEmpty) throw QueryCompilationErrors.dataPathNotExistError(qualified.toString)
+    matches.toSeq
+  }
+
+  /** `spark.read.parquet(path)` for ONE parquet file, with the schema
+    * read from the file's footer on the driver ([[parquetSchema]])
+    * instead of inferred by a Spark job. Nothing is cached: every call
+    * reads the footer again. Directories and globs have no single
+    * footer; read them with `spark.read.parquet`.
+    */
+  def parquetFile(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, parquetFooter(spark, path))).parquet(path)
+
+  /** The footer of the parquet file at `path`, without its row groups.
+    * A path that is not a file fails with a message that names it.
+    */
+  def parquetFooter(spark: SparkSession, path: String): Footer = {
+    val conf = stateOf(spark).newHadoopConf()
+    val p = new Path(path)
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    require(status.isFile, s"not a parquet file: $path")
+    new Footer(status.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(status, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+  }
+
+  /** The schema `spark.read.parquet` infers from `footer`'s file, as
+    * Spark's inference converts it: the schema a Spark writer stored in
+    * the row metadata, else the parquet schema converted under
+    * `spark`'s SQL conf (binaryAsString, int96AsTimestamp,
+    * inferTimestampNTZ, nanosAsLong).
+    */
+  def parquetSchema(spark: SparkSession, footer: Footer): StructType =
+    ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(stateOf(spark).conf))
+
+  private def stateOf(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
 }

@@ -96,6 +96,32 @@ class ContractSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("storage outside Materialize:\n", "\n", ""))
   }
 
+  test("single parquet files open through the footer reader alone") {
+    // a plain `.read.parquet(` infers the schema with a Spark job; tables
+    // and the events file take it from their footer
+    // (ColumnBridge.parquetFile / parquetSchema). Only directories of
+    // many files may infer (line -> what it reads)
+    val multiFile = Map(
+      "s.read.parquet(s\"$snapDir/gen=$g\")" -> "maintainSnapshot's previous generation",
+      "spark.read.parquet(s\"$snapDir/gen=$latest\")" -> "readSnapshot's newest generation",
+      "spark.read.parquet(stateDir)" -> "readRollup's per-batch partials")
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = root.resolve("QueryShared.scala") +: Seq("registry", "ext").flatMap(d =>
+      root.resolve(d).toFile.listFiles().filter(_.getName.endsWith(".scala")).map(_.toPath))
+    assert(files.size >= 30, s"sources not found under $root")
+    val comment = "^\\s*(//|\\*|/\\*)".r
+    val reads = for {
+      f <- files.sortBy(_.toString)
+      (line, i) <- java.nio.file.Files.readString(f).split("\n").zipWithIndex
+      if comment.findFirstIn(line).isEmpty && line.contains(".read.parquet(")
+    } yield (s"${f.getFileName}:${i + 1}", line.trim)
+    val hits = reads.filterNot { case (_, line) => multiFile.keys.exists(line.contains) }
+    assert(hits.isEmpty, hits.map { case (at, l) => s"$at: $l" }
+      .mkString("parquet read outside the footer reader:\n", "\n", ""))
+    // a stale entry would let a new single-file read in under its text
+    multiFile.keys.foreach(k => assert(reads.exists(_._2.contains(k)), s"no longer read: $k"))
+  }
+
   test("every public ext def is reached from src/main or is a kept reference") {
     // a def nothing in src/main names is library surface no query,
     // pipeline or main runs; it stays only as the reference a spec

@@ -2,17 +2,13 @@ package graft
 
 import graft.qcew.{FixedWidth, Layout, NaicsAgg}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.{Seconds, Span}
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.util.Try
 
 class FixedWidthSpec extends SparkSpec {
@@ -115,25 +111,6 @@ class FixedWidthSpec extends SparkSpec {
     * reach listeners asynchronously, so a job of another group runs
     * last: once it is seen, every earlier job has been too.
     */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"fw-jobs-${System.nanoTime}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "probe")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      eventually(timeout(Span(10, Seconds))) { assert(seen.contains(s"$group-end")) }
-      seen.toArray(Array.empty[String]).toSeq.filter(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Each scan partition's files as (path, start, length, hosts). */
   private def scanPartitions(df: DataFrame): Seq[Seq[(Path, Long, Long, Seq[String])]] =
     df.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
